@@ -38,15 +38,13 @@ from etl_scripts_spark.reports import tpch
 from etl_scripts_spark.sinks.merge import merge_upsert
 from etl_scripts_spark.sinks.outbox import build_outbox
 from etl_scripts_spark.operators import external
-from etl_scripts_spark.streaming.stateful import (
-    stateful_first_seen_available_now,
-    stateful_user_totals_available_now,
-)
 from etl_scripts_spark.streaming.windowed import (
     enriched_counts_available_now,
     hourly_counts_available_now,
     interval_join_available_now,
     session_windows_available_now,
+    stateful_first_seen_available_now,
+    stateful_user_totals_available_now,
 )
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -3337,8 +3335,8 @@ def q_incoming_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState): per-user
-    running totals in the keyed state store, drained via Trigger.AvailableNow.
+    """Keyed streaming state as a native aggregation (count + cents sum):
+    per-user running totals in the state store, drained via Trigger.AvailableNow.
     The single-drain final state equals the batch groupBy, which is exactly
     what the oracle verifies — batch/streaming agreement."""
     return stateful_user_totals_available_now(spark, f"{sf_dir}/events.parquet")
@@ -8271,8 +8269,12 @@ def entry(spark: SparkSession) -> DataFrame:
 #: with _last_green_round() before this flip), so these 12 flips + the
 #: 20-query r8 cohort + 18 of the r9×50 cohort fill the 50 slots and
 #: the rotation floor advances to r9 (32 r9 queries remain for r14).
-#: Everything else rides the least-recently-green order.
+#: Everything else rides the least-recently-green order.  q_stream_dedup
+#: and q_stream_user_totals lead: their keyed state moved from
+#: applyInPandasWithState to native streaming aggregations.
 _CHANGED_THIS_ROUND = (
+    "q_stream_dedup",
+    "q_stream_user_totals",
     "q_hll_join_estimate",
     "q_attribution",
     "q_setsim_pairs",

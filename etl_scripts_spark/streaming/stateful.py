@@ -4,9 +4,17 @@ The reference has no streaming engine, but its per-entity bookkeeping
 (RETRY_COUNT persistent map, register-fastq-dropbox.py:48-56; session-scoped
 used-identifier sets, register-nanopore.py:62-65) is exactly keyed mutable
 state over an event stream.  Re-expressed Spark-first: the state lives in the
-state store (checkpointed, partitioned by key, survives restarts), updates
-are Arrow-batched per group, and `Trigger.AvailableNow` drains whatever is
-on disk exactly once — the dropbox semantics.
+state store (checkpointed, partitioned by key, survives restarts), and
+`Trigger.AvailableNow` drains whatever is on disk exactly once — the
+dropbox semantics.
+
+The rule: Python state only where Spark has no aggregate for it.  Keyed
+state that IS a built-in aggregate (dedup-on-ingest's min + count,
+per-user count + sum) runs as a native streaming aggregation in
+:mod:`.windowed` and never leaves the JVM.  What stays here — the KMV,
+count-min and HyperLogLog sketch merges and the rolling z-score ring
+buffer — has no Spark aggregate, so its updates cross into Python,
+Arrow-batched per group.
 
 At 100 TB the state store shards with the shuffle partitioning of the group
 key; no driver-side maps, no collect.
@@ -14,7 +22,6 @@ key; no driver-side maps, no collect.
 
 from __future__ import annotations
 
-import itertools
 from typing import Any, Iterator, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,177 +29,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_name_counter = itertools.count()
-
-USER_TOTALS_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("sum_cents", T.LongType()),
-    ]
-)
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("cents", T.LongType()),
-    ]
-)
-
-
-def _user_totals_fn(
-    key: Tuple[Any, ...], pdfs: Iterator, state: GroupState
-) -> Iterator:
-    """Accumulate (count, value-cents) per user in keyed state.
-
-    Cents via floor(v*100 + 0.5) — identical float semantics in numpy and
-    any SQL oracle, unlike round() whose tie-breaking differs per engine.
-    """
-    import numpy as np
-    import pandas as pd
-
-    n, cents = state.get if state.exists else (0, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        cents += int(np.floor(pdf["value"].to_numpy() * 100.0 + 0.5).sum())
-    state.update((n, cents))
-    yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "sum_cents": [cents]})
-
-
-FIRST_SEEN_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("first_event_id", T.LongType()),
-        T.StructField("first_ts", T.TimestampType()),
-        T.StructField("n_duplicates", T.LongType()),
-    ]
-)
-
-_FIRST_SEEN_STATE = T.StructType(
-    [
-        T.StructField("first_ts_us", T.LongType()),
-        T.StructField("first_event_id", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
-
-def _first_seen_fn(key, pdfs, state: GroupState):
-    """Keep the first arrival per key ((ts, event_id) lexicographic — stable
-    under any micro-batch arrival order), count the rest as duplicates."""
-    import pandas as pd
-
-    first_us, first_id, n = state.get if state.exists else (None, None, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        us = (pdf["ts"].astype("int64") // 1000).to_numpy()
-        ids = pdf["event_id"].to_numpy()
-        i = min(range(len(pdf)), key=lambda j: (us[j], ids[j]))
-        if first_us is None or (int(us[i]), int(ids[i])) < (first_us, first_id):
-            first_us, first_id = int(us[i]), int(ids[i])
-    state.update((first_us, first_id, n))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "event_type": [key[1]],
-            "first_event_id": [first_id],
-            "first_ts": [pd.Timestamp(first_us, unit="us")],
-            "n_duplicates": [n - 1],
-        }
-    )
+from .tuning import PY_STATE_KEYS_PER_SHARD
+from .windowed import _drain, _events_stream
 
 
 def _drain_events(spark: SparkSession, events_parquet: str, build, approx_keys: int) -> DataFrame:
-    """Shared AvailableNow drain harness for the stateful operators: read
-    the events stream (schema from the batch footer, glob for the file
-    source, NTZ/nanos normalization), let `build(stream)` attach the
-    stateful transformation, drain once into a memory sink with the state
-    shard count sized to the key cardinality, and return the sink table."""
-    from ..catalog import normalize_events
-    from .tuning import PY_STATE_KEYS_PER_SHARD, state_shuffle_partitions
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_parquet).schema
-    glob_path = events_parquet.rsplit(".", 1)[0] + ".*"
-    stream = normalize_events(spark.readStream.schema(schema).parquet(glob_path))
-    out = build(stream)
-    name = f"etl_stateful_out_{next(_name_counter)}"
-    # per-GROUP Python crossing → shard to the PyState law (tuning.py)
-    with state_shuffle_partitions(
-        spark, approx_keys, keys_per_shard=PY_STATE_KEYS_PER_SHARD
-    ):
-        query = (
-            out.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name)
-
-
-def stateful_first_seen_available_now(
-    spark: SparkSession, events_parquet: str, approx_keys: int = 7500
-) -> DataFrame:
-    """Dedup-on-ingest as a custom stateful operator: the reference's
-    "already registered → log & drop" semantics (SURVEY §2.8) keyed by
-    (user_id, event_type), keeping the first arrival and counting dropped
-    duplicates.  The state store IS the registered-set; a restart resumes
-    from the checkpoint instead of re-registering."""
-
-    def build(stream):
-        return (
-            stream.select("user_id", "event_type", "event_id", "ts")
-            .groupBy("user_id", "event_type")
-            .applyInPandasWithState(
-                _first_seen_fn,
-                outputStructType=FIRST_SEEN_SCHEMA,
-                stateStructType=_FIRST_SEEN_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-
-    out = _drain_events(spark, events_parquet, build, approx_keys)
-    # update mode may emit per micro-batch; the final state row has max n.
-    return out.groupBy("user_id", "event_type").agg(
-        F.max_by("first_event_id", "n_duplicates").alias("first_event_id"),
-        F.max_by("first_ts", "n_duplicates").alias("first_ts"),
-        F.max("n_duplicates").alias("n_duplicates"),
-    )
-
-
-def stateful_user_totals_available_now(
-    spark: SparkSession, events_parquet: str, approx_keys: int = 1500
-) -> DataFrame:
-    """Per-user running totals as a custom stateful operator, drained to a
-    batch result.  With a single AvailableNow micro-batch the final state
-    equals the batch groupBy — which is what the oracle checks.
-
-    State-store shard count is sized to the user-id cardinality (see
-    :mod:`.tuning`) — the catalog's events table has ~1.5 k distinct users
-    per sf; at production key counts pass the table-statistics estimate.
-    """
-
-    def build(stream):
-        return (
-            stream.select("user_id", "value")
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _user_totals_fn,
-                outputStructType=USER_TOTALS_SCHEMA,
-                stateStructType=_STATE_SCHEMA,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-
-    out = _drain_events(spark, events_parquet, build, approx_keys)
-    # update mode may emit a row per micro-batch per key; keep the last.
-    return out.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"), F.max_by("sum_cents", "n_events").alias("sum_cents")
+    """Shared AvailableNow drain for the Python-state operators: let
+    `build(stream)` attach the stateful transformation to the events
+    stream and drain it through :func:`.windowed._drain` in update mode —
+    sharded to the PyState law, since every key costs a Python crossing
+    (see :mod:`.tuning`)."""
+    out = build(_events_stream(spark, events_parquet))
+    return _drain(
+        spark, out, approx_keys, mode="update", keys_per_shard=PY_STATE_KEYS_PER_SHARD
     )
 
 

@@ -14,9 +14,9 @@ GROUP-KEY CARDINALITY and per-key state size, not to the input volume.
     thousands.
 
 The optimum is keys_per_shard* ≈ (per-shard fixed cost) / (per-key cost),
-and the r14 32-core sweep (scripts/probe_stream_shards{,2}.py, min-of-3,
-quiet box) showed the two operator classes here sit at very different
-points of that ratio:
+and the r14 32-core sweep (OPTIMIZATION_r14.md §3, min-of-3, quiet box)
+showed the two operator classes here sit at very different points of
+that ratio:
 
   - ``applyInPandasWithState`` wrappers pay a per-GROUP Python crossing
     (~0.25–1 ms/key measured) against ~45 ms/shard of store+worker fixed
@@ -24,11 +24,11 @@ points of that ratio:
     9.3 s / 5.5 s / 3.5 s / 3.0 s at 4/8/16/32 shards (parallelism wins
     all the way to the core count); a 1500-group state bottomed at 8–16
     shards (1.77 s) and regressed to 2.85 s at 32.
-  - native window/session aggregations cost ~µs/key against ~40 ms/shard
-    of commit+drain fixed cost → keys_per_shard ≈ 12 000.  Measured: the
-    ~95 k-key session_window state bottomed at 8 shards (1.51 s vs
-    2.37 s at 32); a 3.6 k-key tumbling window was flat 4–8 (1.22 s) and
-    regressed to 2.57 s at 32.
+  - native streaming aggregations (window, session, plain keyed) cost
+    ~µs/key against ~40 ms/shard of commit+drain fixed cost →
+    keys_per_shard ≈ 12 000.  Measured: the ~95 k-key session_window
+    state bottomed at 8 shards (1.51 s vs 2.37 s at 32); a 3.6 k-key
+    tumbling window was flat 4–8 (1.22 s) and regressed to 2.57 s at 32.
 
 Both constants only bind when the key count is small relative to the
 configured task slots — exactly when per-shard fixed cost matters; at
@@ -48,7 +48,7 @@ from pyspark.sql import SparkSession
 
 #: keys/shard for applyInPandasWithState operators (per-group Python call)
 PY_STATE_KEYS_PER_SHARD = 200
-#: keys/shard for native window/session-window aggregations (µs per key)
+#: keys/shard for native streaming aggregations (µs per key)
 NATIVE_STATE_KEYS_PER_SHARD = 12_000
 
 

@@ -87,7 +87,7 @@ def test_state_shard_sizing_per_operator_class(spark):
     """r14 shard-economics law (tuning.py): applyInPandasWithState ops
     shard at ~200 keys/shard (per-group Python call dominates), native
     window aggs at ~12k keys/shard (commit fixed cost dominates) — the
-    measured optima of scripts/probe_stream_shards{,2}.py."""
+    measured optima recorded in OPTIMIZATION_r14.md §3."""
     from etl_scripts_spark.streaming.tuning import (
         NATIVE_STATE_KEYS_PER_SHARD,
         PY_STATE_KEYS_PER_SHARD,
