@@ -6872,46 +6872,6 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
-# ---------------------------------------------------------------------------
-# Staging machinery (r10–r13).  Registrations were capped per round to keep
-# the driver's 50-slot rotation window cycling, so the banked backlog
-# drained on a schedule: r10 flipped 17, r11 ten, r12 ten, and r13 the
-# final 12-query heavy tail — the staged backlog is now EMPTY (pinned by
-# tests/test_staged_r10.py::test_staged_backlog_is_drained).  The _stage
-# decorator and the staged_queries()/staged_oracle_sql() accessors stay:
-# they are the documented on-ramp if a future round banks a new family
-# (flip checklist in COVERAGE.md — @_stage → @_register, add the name to
-# _CHANGED_THIS_ROUND and bench.HEADLINE, flip the COVERAGE row, refresh
-# its BENCH_FLOORS entry, move any plan-allowlist declaration from
-# test_staged_r10 to test_plans).
-# ---------------------------------------------------------------------------
-
-_STAGED: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-_STAGED_ORACLES: dict[str, str] = {}
-
-
-def _stage(name: str, oracle_sql: str | None = None):
-    def deco(fn):
-        _STAGED[name] = fn
-        if oracle_sql is not None:
-            _STAGED_ORACLES[name] = oracle_sql
-        return fn
-
-    return deco
-
-
-def staged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registration candidates — same contract as queries(), verified by
-    tests/test_staged_r10.py; not part of the driver surface yet."""
-    return dict(_STAGED)
-
-
-def staged_oracle_sql() -> dict[str, str]:
-    return dict(_STAGED_ORACLES)
-
-
 @_register(
     "q_image_ahash",
     # ahash law over the pixel fixture, recomputed from doc_id arithmetic:
@@ -8262,31 +8222,28 @@ def entry(spark: SparkSession) -> DataFrame:
 # fresh-green), so every query gets a driver check at least every ~3 rounds
 # — a regression in a long-green query can hide for at most that long.
 
-#: New in round 13 (never driver-green yet) → head of the rotation: the
-#: 12-query staged heavy tail — the backlog fully drains.  Budget check
-#: (the cap exists to protect the 50-slot window): after the r12 run the
-#: staleness histogram is r8×20/r9×50/r10×50/r11×50/r12×50 (recomputed
-#: with _last_green_round() before this flip), so these 12 flips + the
-#: 20-query r8 cohort + 18 of the r9×50 cohort fill the 50 slots and
-#: the rotation floor advances to r9 (32 r9 queries remain for r14).
-#: Everything else rides the least-recently-green order.  q_stream_dedup
-#: and q_stream_user_totals lead: their keyed state moved from
-#: applyInPandasWithState to native streaming aggregations.
+#: Head of the rotation: queries whose code changed since their last
+#: green CORRECTNESS row.  First the fourteen whose round loops moved onto
+#: ckpt.next_round / ckpt.fixpoint, then the two streaming queries whose
+#: keyed state became native aggregations.  Everything else rides the
+#: least-recently-green order.
 _CHANGED_THIS_ROUND = (
+    "q_resolve_entities",
+    "q_pagerank",
+    "q_bpe_merges",
+    "q_bpe_encode",
+    "q_graph_components",
+    "q_graph_components_chain",
+    "q_near_dup_clusters",
+    "q_k_core",
+    "q_kmeans_assign",
+    "q_ivf_trained",
+    "q_semdedup",
+    "q_pq_topk",
+    "q_pq_recall",
+    "q_train_classifier",
     "q_stream_dedup",
     "q_stream_user_totals",
-    "q_hll_join_estimate",
-    "q_attribution",
-    "q_setsim_pairs",
-    "q_incremental_setsim_feed",
-    "q_contamination_report",
-    "q_embedding_covariance",
-    "q_bfs_distances",
-    "q_k_core",
-    "q_plan_compaction",
-    "q_stream_rolling_zscore",
-    "q_stream_hll",
-    "q_g711_audio_stats",
 )
 
 

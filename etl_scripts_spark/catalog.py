@@ -88,10 +88,6 @@ def normalize_events(events: DataFrame) -> DataFrame:
     return events
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 # --- star-schema → entity-model derivations -------------------------------
 
 def project_code(custkey: Column) -> Column:

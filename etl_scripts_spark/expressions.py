@@ -1,4 +1,4 @@
-"""Core column expressions: QBiC barcodes, checksums, dates, code generation.
+"""Core column expressions: QBiC barcodes, checksums, code generation.
 
 All pure Catalyst column expressions (JVM-side, whole-stage-codegen'd) — no
 Python UDFs in the hot path.  The barcode grammar and the mod-34 checksum are
@@ -10,9 +10,6 @@ re-expressed from the reference:
     (drop-boxes/register-iontorrent-data/register-iontorrent-data.py:79-94)
   - validation: checksum(code[0:9]) == code[9]
     (register-fastq-dropbox.py:39-45)
-  - entity barcode Q\\w{4}ENTITY-\\d+ (register-nanopore.py:48)
-  - date conversions %y%m%d / %d.%m.%Y / epoch → ISO (etl_msconvert.py:602,
-    register-omero.py:63-64, register-wf-mapping/register-mapping-dropbox.py:62)
 """
 
 from __future__ import annotations
@@ -21,7 +18,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 BARCODE_REGEX = "Q[A-Z0-9]{4}[0-9]{3}[A-Z][A-Z0-9]"
-ENTITY_BARCODE_REGEX = "Q[A-Z0-9]{4}ENTITY-[0-9]+"
 #: derived-sample prefix grammar, e.g. NGS / MS2 / VC1 / HLA1 (SURVEY §1.2)
 PREFIXED_BARCODE_REGEX = "(NGS|MS|VC|HLA|MA|MSQC|NGSQC|PCR|IM|FASTA|RMA|VAC|IMG|MTB|MP|NMR)[0-9]*" + BARCODE_REGEX
 
@@ -52,46 +48,6 @@ def is_valid_barcode(code: Column) -> Column:
 def extract_barcode(name: Column) -> Column:
     """First QBiC barcode embedded in a filename ('' if none) — P1."""
     return F.regexp_extract(name, BARCODE_REGEX, 0)
-
-
-def extract_entity_barcode(name: Column) -> Column:
-    return F.regexp_extract(name, ENTITY_BARCODE_REGEX, 0)
-
-
-def project_of(code: Column) -> Column:
-    """Project code = first 5 chars of a barcode (register-vcf.py:62-64)."""
-    return F.substring(code, 1, 5)
-
-
-def parent_code_of(code: Column) -> Column:
-    """Parent (test-sample) barcode = first 10 chars of a prefixed code."""
-    return F.substring(code, 1, 10)
-
-
-def strip_run_prefix(code: Column) -> Column:
-    """Drop the NGS/MS<n>/VC<n>/... prefix, keeping the bare barcode."""
-    return F.regexp_extract(code, BARCODE_REGEX, 0)
-
-
-# --- date/time normalizers (P14) ------------------------------------------
-
-def yymmdd_to_date(col: Column) -> Column:
-    """'171010' (yyMMdd, etl_msconvert.py:602) → DATE."""
-    return F.to_date(col, "yyMMdd")
-
-
-def dotted_to_date(col: Column) -> Column:
-    """'24.03.2019' (dd.MM.yyyy, register-omero.py:63-64) → DATE."""
-    return F.to_date(col, "dd.MM.yyyy")
-
-
-def epoch_to_timestamp(col: Column) -> Column:
-    """Unix seconds → TIMESTAMP (register-mapping-dropbox.py:62)."""
-    return F.to_timestamp(F.from_unixtime(col))
-
-
-def iso_day(col: Column) -> Column:
-    return F.date_format(col, "yyyy-MM-dd")
 
 
 # --- workflow-result name destructuring (SURVEY §1.2) ---------------------

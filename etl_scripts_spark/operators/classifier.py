@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import free_local_checkpoint
+from ..ckpt import next_round
 from .text import unigram_bigram_features, words
 
 
@@ -122,14 +122,9 @@ def train_perceptron(
         .groupBy("bucket")
         .agg(F.sum(F.col("y") * F.col("x")).alias("w"))
     )
-    prev_cp = None
+    weights_cp = None
     for _ in range(1, rounds):
-        weights = weights.localCheckpoint(eager=True)
-        # materializing this round's checkpoint was the last read of the
-        # previous round's — free its blocks eagerly (ckpt.py); the final
-        # checkpoint stays live under the returned weight plan
-        free_local_checkpoint(prev_cp)
-        prev_cp = weights
+        weights = weights_cp = next_round(weights, weights_cp)
         m = _margins(fx, weights, id_col)
         mis = (
             labels.join(m, id_col, "left")

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import free_local_checkpoint
+from ..ckpt import next_round
 from .dedup import shingles_from_words
 from .text import words
 
@@ -521,7 +521,7 @@ def _bpe_train(
         # (best is empty — e.g. every word is a single symbol already)
         # leaves the segmentation UNCHANGED instead of emptying the table
         # through an inner cross-join with zero rows
-        new_seg = (
+        seg_tbl = next_round(
             seg_tbl.join(
                 F.broadcast(
                     best.select(
@@ -535,16 +535,9 @@ def _bpe_train(
                 "word",
                 "freq",
                 F.coalesce(F.trim(padded), F.col("seg")).alias("seg"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            seg_tbl,
         )
-        # the superseded round's segmentation checkpoint is dead once the
-        # new one has materialized (each best row is independently
-        # checkpointed; only the FINAL seg_tbl is returned) — free its
-        # blocks eagerly instead of leaking one pinned set per merge
-        # round until JVM GC (ckpt.py)
-        free_local_checkpoint(seg_tbl)
-        seg_tbl = new_seg
     out = best_rows[0]
     for b in best_rows[1:]:
         out = out.union(b)

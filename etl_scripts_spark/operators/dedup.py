@@ -21,7 +21,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import free_local_checkpoint
+from ..ckpt import fixpoint, free_local_checkpoint, next_round
 from ..exactness import e9_div_expr
 from .text import normalize_text, words
 
@@ -223,12 +223,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     For adversarially long path graphs the alternating large-star /
     small-star algorithm (Kiveris et al., "Connected Components in
     MapReduce and Beyond") bounds rounds at O(log²n); not needed for the
-    near-dup workload.  Labels are `localCheckpoint`ed per round so the
-    plan stays linear (same device as :mod:`.lineage`); convergence is
-    detected with an any-change anti-probe, not a full diff collect.
+    near-dup workload.  Labels are checkpointed per round and the loop
+    stops on a label-set fingerprint (:func:`..ckpt.fixpoint`).
     """
-    from pyspark.sql import Observation
-
     # symmetrize by exploding each pair into its two directed rows — ONE
     # execution of the caller's pair subtree.  The union form referenced
     # `pairs` twice, and the common callers hand over an UNMATERIALIZED
@@ -250,44 +247,16 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     labels = (
         edges.select(F.col("src").alias("id")).distinct().withColumn("lbl", F.col("id"))
     )
-    converged = False
-    fp = None
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr = labels.join(edges, labels["id"] == edges["src"]).select(
             F.col("dst").alias("id"), F.col("lbl")
         )
-        new_labels = (
+        return (
             labels.select("id", "lbl").union(nbr).groupBy("id").agg(F.min("lbl").alias("lbl"))
         )
-        # Convergence via a label-set fingerprint observed DURING the eager
-        # checkpoint: labels only ever decrease, so fingerprint equality
-        # across a round ⇔ fixpoint.  Replaces the old join+isEmpty probe,
-        # which cost a second full job per round.
-        obs = Observation()
-        new_labels = new_labels.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(id, lbl))").alias("h"),
-        ).localCheckpoint(eager=True)
-        m = obs.get
-        new_fp = (m["n"], m["h"])
-        # the superseded round's label blocks are dead the moment the new
-        # eager checkpoint has materialized — free them now instead of
-        # letting them pressure the block manager until JVM GC (ckpt.py)
-        free_local_checkpoint(labels)
-        labels = new_labels
-        if new_fp == fp:
-            converged = True
-            break
-        fp = new_fp
-    if not converged:
-        # Stopping early would RETURN WRONG LABELS (a component would stay
-        # split) — refuse instead and point at the round-bounded algorithm.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds the cap); use connected_components_star, "
-            "which converges in O(log^2 n) rounds regardless of shape"
-        )
+
+    labels = fixpoint(step, labels, ("id", "lbl"), max_iter, "connected_components")
     # the result references only the final label checkpoint — the edge
     # checkpoint's blocks are dead weight from here on
     free_local_checkpoint(edges)
@@ -352,31 +321,12 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame
     minimum.  Equivalence with label propagation and union-find is covered
     by tests/test_reference_impls.py.
     """
-    from pyspark.sql import Observation
-
-    def checkpoint_with_fingerprint(e: DataFrame) -> tuple[DataFrame, tuple]:
-        # Order-insensitive set fingerprint (count, bit_xor of xxhash64) for
-        # convergence detection, collected via `observe` DURING the eager
-        # checkpoint's materialization — zero extra jobs per round (the
-        # earlier design paid a second full-pass aggregate job each round,
-        # which dominated wall-time on high-round chain graphs).  bit_xor
-        # never overflows (unlike a hash SUM under ANSI mode); a (count,
-        # xor) collision between consecutive DIFFERENT edge sets would stop
-        # a round early (~2^-64 for random xxhash64 values) — accepted.
-        obs = Observation()
-        observed = e.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        )
-        cp = observed.localCheckpoint(eager=True)
-        m = obs.get
-        return cp, (m["n"], m["h"])
-
-    E, fp = checkpoint_with_fingerprint(
+    E, fp = next_round(
         pairs.select(
             F.greatest("id_a", "id_b").alias("u"), F.least("id_a", "id_b").alias("v")
-        ).filter(F.col("u") != F.col("v")).distinct()
+        ).filter(F.col("u") != F.col("v")).distinct(),
+        None,
+        ("u", "v"),
     )
 
     def small_star(e: DataFrame) -> DataFrame:
@@ -402,26 +352,10 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 30) -> DataFrame
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
 
-    converged = False
-    for _ in range(max_iter):
-        new_e, new_fp = checkpoint_with_fingerprint(small_star(large_star(E)))
-        # a chain-shaped graph runs 30+ rounds here; without an eager free
-        # every round's edge checkpoint stays pinned until JVM GC and the
-        # retained blocks inflate whatever runs next on the executor
-        # (SCALE.md's measured ~4x neighbor effect) — the old round is
-        # dead once the new checkpoint has materialized
-        free_local_checkpoint(E)
-        E = new_e
-        if new_fp == fp:
-            converged = True
-            break
-        fp = new_fp
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds; "
-            "returning labels from an unconverged edge set would silently split "
-            "components — raise max_iter (O(log^2 n) rounds expected)"
-        )
+    E = fixpoint(
+        lambda e: small_star(large_star(e)), E, ("u", "v"), max_iter,
+        "connected_components_star", fp,
+    )
     roots = E.select(F.col("v").alias("id")).distinct().withColumn(
         "component", F.col("id")
     )
@@ -448,17 +382,6 @@ def near_dup_clusters(
         F.col("component").alias("component_id"),
         (F.col("component") == F.col("id")).alias("is_canonical"),
     )
-
-
-def ngram_jaccard(df: DataFrame, text_a: str, text_b: str, k: int = 3) -> Column:
-    """Jaccard similarity of the two texts' distinct k-word shingle sets.
-
-    Prefer :func:`jaccard_from_sets` on pre-materialized shingle columns when
-    texts come from a join — it tokenizes each side once, not per-expression.
-    """
-    sa = F.array_distinct(word_shingles(F.col(text_a), k))
-    sb = F.array_distinct(word_shingles(F.col(text_b), k))
-    return jaccard_from_sets(sa, sb)
 
 
 def jaccard_from_sets(sa: Column, sb: Column) -> Column:
@@ -1425,8 +1348,8 @@ def setsim_index(
     production this is built ONCE per corpus version and every arriving
     batch joins against it — the O(batch + collisions) claim holds only
     when the corpus tokenize + df shuffle + sort amortize across
-    batches (scripts/probe_incremental_setsim.py pins this end-to-end
-    with 3 consecutive batches against one index)."""
+    batches (SCALE.md, "Persisted-index probe for incremental_setsim",
+    records 3 consecutive batches against one index)."""
     _check_setsim_threshold(t_num, t_den)
     ctoks = _setsim_toks(corpus, text_col, id_col)
     freq = (

@@ -37,9 +37,9 @@ block storage (one edge-sized localCheckpoint write, MEMORY_AND_DISK) so
 the rounds read the checkpoint instead of re-executing the edge source's
 upstream plan rounds+2 times — provision executor storage for one copy of
 the (2-column, pruned) edge list plus the node-sized rank/degree tables.
-The per-round state is the node-sized rank table, localCheckpointed
-between rounds exactly like similarity.kmeans_* — rounds compose the
-plan, the driver never touches row data.
+The per-round state is the node-sized rank table, checkpointed between
+rounds (ckpt.next_round) — rounds compose the plan, the driver never
+touches row data.
 """
 
 from __future__ import annotations
@@ -47,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import free_local_checkpoint
+from ..ckpt import fixpoint, free_local_checkpoint, next_round
 
 
 def out_degrees(edges: DataFrame, src: str = "src") -> DataFrame:
@@ -90,14 +90,9 @@ def pagerank(
     deg = _pin(out_degrees(edges, src))
     base = (100 - damping_pct) * scale // 100
     ranks = nodes.select("node", F.lit(scale).cast("bigint").alias("rank"))
-    prev_cp = None
+    ranks_cp = None
     for _ in range(rounds):
-        ranks = ranks.localCheckpoint(eager=True)
-        # materializing this round's checkpoint consumed the previous
-        # round's blocks for the last time — free them eagerly (ckpt.py);
-        # the final checkpoint stays live under the returned plan
-        free_local_checkpoint(prev_cp)
-        prev_cp = ranks
+        ranks = ranks_cp = next_round(ranks, ranks_cp)
         # SQL DIV, not `/`: Spark's `/` on bigints routes through DOUBLE,
         # which silently loses exactness past 2^53 — DIV stays integral
         # (and equals DuckDB `//` on the non-negative values here)
@@ -231,8 +226,7 @@ def k_core(
     peel order) is what makes it distribution-safe; each round is ONE
     map-side-combined degree aggregate + ONE semi-join of the edge list
     against survivors per endpoint, with the shrinking edge table
-    localCheckpointed per round.  Convergence is checked with a count
-    action (the lineage/kmeans round pattern); a graph that keeps
+    checkpointed per round (:func:`..ckpt.fixpoint`).  A graph that keeps
     peeling past max_iter raises — the peel depth of real graphs is
     small, and silently returning a non-converged "core" would claim
     density that is not there.
@@ -242,49 +236,34 @@ def k_core(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    e = (
+    e, fp = next_round(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("_a"),
             F.greatest(F.col(src), F.col(dst)).alias("_b"),
         )
         .filter(F.col("_a").isNotNull() & F.col("_b").isNotNull())
         .filter(F.col("_a") != F.col("_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        None,
+        ("_a", "_b"),
     )
-    n_edges = e.count()
-    for _ in range(max_iter):
-        if n_edges == 0:
-            break
-        deg = (
+
+    def degrees(e: DataFrame) -> DataFrame:
+        return (
             e.select(F.col("_a").alias("node"))
             .unionByName(e.select(F.col("_b").alias("node")))
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("degree"))
         )
-        keep = deg.filter(F.col("degree") >= k).select("node")
-        e2 = (
-            e.join(keep.withColumnRenamed("node", "_a"), "_a", "leftsemi")
-            .join(keep.withColumnRenamed("node", "_b"), "_b", "leftsemi")
-            .localCheckpoint(eager=True)
+
+    def peel(e: DataFrame) -> DataFrame:
+        keep = degrees(e).filter(F.col("degree") >= k).select("node")
+        return e.join(keep.withColumnRenamed("node", "_a"), "_a", "leftsemi").join(
+            keep.withColumnRenamed("node", "_b"), "_b", "leftsemi"
         )
-        n2 = e2.count()
-        if n2 == n_edges:
-            # converged: the result reads `deg`, which derives from the
-            # PREVIOUS checkpoint `e` — e2 holds identical content and is
-            # referenced by nothing, so its blocks are already dead
-            free_local_checkpoint(e2)
-            return deg.filter(F.col("degree") >= k)
-        # not converged: this round's degree/semi-join work was the last
-        # reader of the old edge checkpoint
-        free_local_checkpoint(e)
-        e, n_edges = e2, n2
-    if n_edges == 0:
-        # fully peeled: nothing reaches degree k.  The empty frame's
-        # node type comes from the CANONICALIZED edge table (least/
-        # greatest promotes mixed src/dst types), so both return paths
-        # share one schema
-        return e.select(
-            F.col("_a").alias("node"), F.lit(0).cast("bigint").alias("degree")
-        ).filter(F.lit(False))
-    raise ValueError(f"k_core did not converge within max_iter={max_iter} rounds")
+
+    # a peel that keeps every edge means every degree is already >= k;
+    # a fully peeled graph returns no rows.  Either way the node type is
+    # the CANONICALIZED edge table's (least/greatest promotes mixed
+    # src/dst types).
+    return degrees(fixpoint(peel, e, ("_a", "_b"), max_iter, "k_core", fp))

@@ -59,28 +59,3 @@ def ancestors_to_root(edges: DataFrame, max_hops: int = 20) -> DataFrame:
         out = out.unionByName(r)
     return out
 
-
-def descendants(edges: DataFrame, start_codes: DataFrame, hops: int, code_col: str = "code") -> DataFrame:
-    """Bounded k-hop fan-out (register-mtb-data-dropbox.py:699-724 walks 2 tiers).
-
-    Returns (start_code, descendant_code, depth) for depth in 1..hops.
-    """
-    child_of = edges.select(
-        F.col("parent_code").alias("_d_parent"), F.col("child_code").alias("_d_child")
-    )
-    frontier = start_codes.select(
-        F.col(code_col).alias("start_code"), F.col(code_col).alias("node")
-    )
-    results: list[DataFrame] = []
-    for depth in range(1, hops + 1):
-        frontier = (
-            frontier.join(child_of, frontier["node"] == child_of["_d_parent"], "inner")
-            .select("start_code", F.col("_d_child").alias("node"))
-        )
-        results.append(
-            frontier.select("start_code", F.col("node").alias("descendant_code"), F.lit(depth).alias("depth"))
-        )
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ckpt import free_local_checkpoint
+from ..ckpt import next_round
 from ..exactness import cov_scale as _cov_scale
 from ..exactness import e9_div_expr
 
@@ -363,17 +363,19 @@ def kmeans_centroids_row(
 ) -> DataFrame:
     """Train the quantizer: `n_iter` Lloyd rounds, returning the 1-row
     broadcast centroid array in the shape `ivf_topk(cents_row=...)` and
-    `ivf_assign_cells` consume — compose for trained-quantizer ANN."""
-    from pyspark.sql import Observation
+    `ivf_assign_cells` consume — compose for trained-quantizer ANN.
 
+    Centroids round to 6 dp, so an unchanged centroid-set fingerprint is
+    a Lloyd fixpoint and the remaining rounds would be exact no-ops —
+    skipping them cannot change the result (the fixed-round DuckDB oracle
+    agrees because the update is idempotent at the fixpoint)."""
     staged = corpus.select(
         F.col(id_col),
         F.col(vec_col).cast("array<double>").alias("_v"),
         l2_norm(F.col(vec_col)).alias("_nrm"),
     )
     cents_row = centroids_row(corpus, k, id_col, vec_col)
-    fp = None
-    prev_cents = None
+    fp = cents = None
     for _ in range(n_iter):
         assigned = _assign_to_centroids(staged, cents_row, id_col)
         dims = assigned.select("cid", F.posexplode("_v").alias("pos", "val"))
@@ -381,15 +383,7 @@ def kmeans_centroids_row(
             F.sum(F.round(F.col("val"), 7).cast("decimal(18,7)")).alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
-        # Convergence via a centroid-set fingerprint observed DURING the
-        # eager checkpoint's job (same zero-extra-cost trick as
-        # dedup.connected_components_star): centroids are rounded to 6 dp,
-        # so fingerprint equality across a round ⇔ Lloyd fixpoint, and
-        # remaining rounds would be exact no-ops — skipping them cannot
-        # change the result (the fixed-round DuckDB oracle agrees because
-        # the update is idempotent at the fixpoint).
-        obs = Observation()
-        new_cents = (
+        cents, new_fp = next_round(
             sums.withColumn("m", F.round(F.col("s").cast("double") / F.col("n"), 6))
             .groupBy("cid")
             .agg(
@@ -400,22 +394,11 @@ def kmeans_centroids_row(
             .select(
                 "cid",
                 F.transform(F.col("_pm"), lambda x: x["m"]).alias("cv"),
-            )
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.expr("bit_xor(xxhash64(cid, cv))").alias("h"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            cents,
+            ("cid", "cv"),
         )
-        m = obs.get
-        new_fp = (m["n"], m["h"])
-        # the previous round's centroid checkpoint fed this round's
-        # assignment and is now superseded — free its blocks (ckpt.py);
-        # the checkpoint backing the RETURNED cents_row is never freed
-        free_local_checkpoint(prev_cents)
-        prev_cents = new_cents
-        cents_row = _centroid_row_from(new_cents)
+        cents_row = _centroid_row_from(cents)
         if new_fp == fp:
             break
         fp = new_fp
@@ -576,7 +559,7 @@ def pq_topk(
             "blk", F.col("vid").alias("cid"), F.col("_v").alias("cv")
         )
     )
-    prev_cents = None
+    cents_cp = None
     for _ in range(n_iter):
         assigned = assign(corpus_long, cents, "vid")
         dims = assigned.select("blk", "cid", F.posexplode("_v").alias("pos", "val"))
@@ -584,7 +567,8 @@ def pq_topk(
             F.sum(F.round(F.col("val"), 7).cast("decimal(18,7)")).alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
-        new_cents = (
+        # ONE checkpoint job per round for all m blocks
+        cents_cp = next_round(
             sums.withColumn("mv", F.round(F.col("s").cast("double") / F.col("n"), 6))
             .groupBy("blk", "cid")
             .agg(
@@ -594,14 +578,10 @@ def pq_topk(
             )
             .select(
                 "blk", "cid", F.transform(F.col("_pm"), lambda x: x["mv"]).alias("cv")
-            )
-            .localCheckpoint(eager=True)  # ONE job per round for all m blocks
+            ),
+            cents_cp,
         )
-        # superseded round's blocks are dead once this checkpoint exists
-        # (the last checkpoint stays live under `cents`/`codes` below)
-        free_local_checkpoint(prev_cents)
-        prev_cents = new_cents
-        cents = cents_row_from(new_cents)
+        cents = cents_row_from(cents_cp)
 
     codes = assign(corpus_long, cents, "vid").select(
         F.col("vid"), "blk", F.col("cid").alias("code")

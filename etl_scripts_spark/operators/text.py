@@ -105,10 +105,6 @@ def lang_id_from_tokens(toks: Column) -> Column:
     return best_lang
 
 
-def lang_id(text: Column) -> Column:
-    return lang_id_from_tokens(distinct_tokens(text))
-
-
 #: PII patterns (shared dialect subset of Java regex and RE2 so the DuckDB
 #: oracle matches byte-for-byte): emails, and digit runs long enough to be
 #: phone/account numbers.
@@ -161,10 +157,6 @@ HEX_BIT_SETS = [
     ["4", "5", "6", "7", "c", "d", "e", "f"],
     ["8", "9", "a", "b", "c", "d", "e", "f"],
 ]
-
-
-def simhash64(text: Column) -> Column:
-    return simhash64_from_tokens(distinct_tokens(text))
 
 
 def simhash64_from_tokens(toks: Column) -> Column:

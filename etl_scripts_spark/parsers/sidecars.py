@@ -27,11 +27,6 @@ def read_checksum_file(spark: SparkSession, path: str) -> DataFrame:
     ).filter(F.col("sha256") != "")
 
 
-def checksums_for_folder(checksums: DataFrame, folder_prefix: str) -> DataFrame:
-    """Per-folder checksum subset (A11, register-nanopore.py:210-222)."""
-    return checksums.filter(F.col("relative_path").startswith(folder_prefix))
-
-
 def parse_mzml_headers(spark: SparkSession, path: str) -> DataFrame:
     """One row: (start_timestamp, instrument_accession) from an mzML file.
 

@@ -726,7 +726,7 @@ def partsupp_df(part: DataFrame, supplier: DataFrame) -> DataFrame:
     registered query consumes it).  Cost rides integer cents so every
     downstream sum/threshold stays exact.
 
-    Caveat (measured, probe_tpch_q02): the fan-out is ~2/3 of ALL
+    Caveat (measured; SCALE.md, "TPC-H Q2 10× probe"): the fan-out is ~2/3 of ALL
     in-region suppliers per part — NOT TPC-H's constant 4 — so pair work
     is quadratic in SF if supplier is scaled alongside part (10×/10× =
     100× grid, measured 36× wall).  This is the testdata's deterministic

@@ -49,13 +49,6 @@ def merge_upsert(existing: DataFrame, updates: DataFrame, keys: list[str]) -> Da
     return kept.unionByName(updates.select(*existing.columns))
 
 
-def insert_if_absent(existing: DataFrame, inserts: DataFrame, keys: list[str]) -> DataFrame:
-    """WHEN NOT MATCHED INSERT only — duplicates become no-ops
-    (register-mtb-data-dropbox.py:402-404 'already registered → drop')."""
-    fresh = inserts.join(existing.select(*keys), keys, "left_anti")
-    return existing.unionByName(fresh.select(*existing.columns))
-
-
 def scd2_apply(
     history: DataFrame,
     updates: DataFrame,

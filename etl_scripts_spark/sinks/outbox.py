@@ -5,31 +5,16 @@ OMERO *inside* the registration path with inline retry loops
 (register-fastq-dropbox.py:132-145 — 3 attempts, 1 s backoff, replicated in
 ~15 scripts).  At scale that couples throughput to external-service latency
 and breaks exactly-once.  Here every side effect is first written as an
-outbox row in the same commit as the data, then drained by a separate
-notifier task with per-partition retry — the effect happens at-least-once,
-is idempotent by entity code, and never blocks the data path.
+outbox row in the same commit as the data; a notifier outside the data
+path drains it with retry — the effect happens at-least-once, is
+idempotent by entity code, and never blocks the data path.  This module
+builds the rows; delivery is not part of the engine.
 """
 
 from __future__ import annotations
 
-import time
-from collections.abc import Callable, Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MAX_ATTEMPTS = 3  # reference: 3 tries (register-fastq-dropbox.py:133-135)
-BACKOFF_SECONDS = 1.0
-
-DELIVERY_SCHEMA = T.StructType(
-    [
-        T.StructField("entity_code", T.StringType()),
-        T.StructField("service", T.StringType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("attempts", T.IntegerType()),
-    ]
-)
 
 
 def build_outbox(entity_codes: DataFrame, code_col: str, service: str) -> DataFrame:
@@ -40,32 +25,3 @@ def build_outbox(entity_codes: DataFrame, code_col: str, service: str) -> DataFr
         F.lit(0).alias("attempts"),
     )
 
-
-def drain_outbox(outbox: DataFrame, send: Callable[[str, str], None]) -> DataFrame:
-    """Deliver pending rows with retry/backoff; returns delivery results.
-
-    `send(entity_code, service)` raises on failure.  Runs as mapInPandas so
-    deliveries parallelize per partition without driver round-trips.
-    """
-
-    def deliver(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                attempts, status = 0, "FAILED"
-                while attempts < MAX_ATTEMPTS:
-                    attempts += 1
-                    try:
-                        send(row.entity_code, row.service)
-                        status = "SENT"
-                        break
-                    except Exception:
-                        if attempts < MAX_ATTEMPTS:
-                            time.sleep(BACKOFF_SECONDS)
-                out.append((row.entity_code, row.service, status, attempts))
-            yield pd.DataFrame(out, columns=["entity_code", "service", "status", "attempts"])
-
-    pending = outbox.filter(F.col("status") == "PENDING")
-    return pending.mapInPandas(deliver, DELIVERY_SCHEMA)

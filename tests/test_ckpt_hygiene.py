@@ -11,6 +11,7 @@ collectable AFTER the free pass, with correct values).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_scripts_spark.ckpt import free_local_checkpoint
@@ -99,3 +100,18 @@ def test_k_core_frees_rounds_and_keeps_result_live(spark):
     rows = out.toPandas().sort_values("node")
     assert list(rows["node"]) == [0, 1, 2]
     assert list(rows["degree"]) == [2, 2, 2]
+
+
+def test_round_cap_raises_with_the_operator_name(spark):
+    # a 12-node chain needs more rounds than 2 in every fixpoint operator;
+    # stopping there would return split components or a non-core, so each
+    # must refuse loudly and say which operator gave up
+    pairs = chain_pairs(spark, 12)
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    for name, run in (
+        ("connected_components", lambda: connected_components(pairs, max_iter=2)),
+        ("connected_components_star", lambda: connected_components_star(pairs, max_iter=2)),
+        ("k_core", lambda: k_core(edges, k=2, max_iter=2)),
+    ):
+        with pytest.raises(RuntimeError, match=f"^{name} did not converge in 2 rounds"):
+            run()

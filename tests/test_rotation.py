@@ -69,17 +69,10 @@ def test_rotation_is_a_permutation_and_oracles_align():
     assert set(entrymod._ORACLES) == set(entrymod._QUERIES)
 
 
-def test_staged_set_is_disjoint_and_oracle_complete():
-    staged = entrymod.staged_queries()
-    assert not set(staged) & set(entrymod._QUERIES)
-    assert set(entrymod.staged_oracle_sql()) == set(staged)
-
-
 def test_headline_is_registered_and_fully_floored():
     """Every bench HEADLINE entry must be a registered query AND carry a
     standalone floor (BENCH_FLOORS at 100% of the headline set is a
-    per-round judge requirement — the flip checklist records floors
-    before the flip commit, so this holds at every commit)."""
+    per-round judge requirement, so this holds at every commit)."""
     import json
 
     import bench

@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+import __spark_entry__ as entrymod
 from etl_scripts_spark.sinks.cdc import snapshot_changes
 from etl_scripts_spark.sinks.commit import (
     latest_committed_version,
@@ -21,6 +22,7 @@ from etl_scripts_spark.streaming.mv import (
     apply_feed_batch,
     rollup_maintenance_available_now,
 )
+from tests.conftest import SF_SMALL
 
 SCHEMA = "k bigint, grp string, x bigint"
 FEED_SCHEMA = "k bigint, grp string, x bigint, _change_type string"
@@ -214,3 +216,17 @@ def test_crash_between_publish_and_checkpoint_replays_as_noop(spark, tmp_path):
     assert v == 3  # the replayed batch minted no extra version
     bids = [version_record(root, i)["batch_id"] for i in range(1, v + 1)]
     assert bids == sorted(bids) and len(set(bids)) == v
+
+
+def test_scratch_backed_result_survives_a_second_call(spark):
+    """The scratch-root queries wipe their state per call; a result held
+    across a later call must not dangle on deleted files (both return
+    eagerly localCheckpointed frames).  q_stream_mv_drain registered in
+    r10 but the wipe-survival property is pinned here with its scratch
+    siblings."""
+    mv = entrymod.queries()["q_stream_mv_drain"]
+    first = mv(spark, SF_SMALL)
+    second = mv(spark, SF_SMALL)  # wipes the first call's scratch root
+    rows = sorted(tuple(r) for r in first.collect())
+    assert rows == sorted(tuple(r) for r in second.collect())
+    assert len(rows) > 0
