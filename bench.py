@@ -316,6 +316,10 @@ def build_artifacts(
     result["inflated_names"] = sorted(inflated)
     result["n_inflated"] = len(inflated)
     result["n_queries"] = len(timings)
+    # artifact format version, in the tail so even a clipped line carries
+    # it: 2 = this slim form (`runs`/`inflated` on the stderr #detail line);
+    # a line without `fmt` is the older form that carried them on stdout
+    result["fmt"] = 2
     result["value"] = round(sum(timings.values()), 3)
     detail: dict = {"runs": runs}
     if inflated:

@@ -36,6 +36,16 @@ def get_spark(app_name: str = "etl_scripts_spark", shuffle_partitions: int | Non
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Compiled codegen classes live in one JVM-wide LRU keyed on their
+        # generated source.  Spark's default of 100 entries is below this
+        # engine's working sets (distinct classes per pass at sf0.01: the
+        # perfbench etl mix 181, the report mix 85, all 232 registered
+        # queries 2,288-2,316), and an evicted class is compiled (Janino)
+        # and JIT-warmed again when its query next runs.  4096 holds the
+        # whole registry: at that scale the full cache costs ~66 MB of heap
+        # and ~40 MB of non-heap (metaspace + code cache).  It holds code,
+        # never data.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

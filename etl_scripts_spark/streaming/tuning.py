@@ -52,13 +52,13 @@ PY_STATE_KEYS_PER_SHARD = 200
 NATIVE_STATE_KEYS_PER_SHARD = 12_000
 
 
-def shards_for_keys(approx_keys: int, floor: int = 4, keys_per_shard: int = 400) -> int:
-    return max(floor, min(approx_keys // keys_per_shard, 10_000) or floor)
+def shards_for_keys(approx_keys: int, keys_per_shard: int) -> int:
+    return max(4, min(approx_keys // keys_per_shard, 10_000))
 
 
 @contextmanager
 def state_shuffle_partitions(
-    spark: SparkSession, approx_keys: int, keys_per_shard: int = 400
+    spark: SparkSession, approx_keys: int, keys_per_shard: int
 ) -> Iterator[int]:
     """Temporarily pin shuffle partitions to a key-cardinality-sized shard
     count while a streaming query is *started* (the setting is captured at

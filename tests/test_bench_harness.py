@@ -152,6 +152,9 @@ def test_stdout_artifact_stays_inside_size_budget():
     assert "inflated" not in result, "floor details belong on stderr"
     assert result["inflated_names"] == sorted(names)
     assert result["n_queries"] == 250
+    # the format version rides the clip-surviving scalar tail
+    assert result["fmt"] == 2
+    assert list(result)[-3:] == ["n_queries", "fmt", "value"]
     assert detail["runs"] == runs and detail["inflated"] == inflated
     # the realistic shape (147 queries, handful of flags) stays ~6 KB
     few = dict(list(timings.items())[:147])

@@ -72,13 +72,20 @@ def test_commit_batch_all_or_nothing(spark, tmp_path):
 
 
 def test_state_shard_sizing(spark):
-    from etl_scripts_spark.streaming.tuning import shards_for_keys, state_shuffle_partitions
+    from etl_scripts_spark.streaming.tuning import (
+        NATIVE_STATE_KEYS_PER_SHARD,
+        PY_STATE_KEYS_PER_SHARD,
+        shards_for_keys,
+        state_shuffle_partitions,
+    )
 
-    assert shards_for_keys(7500) == 18
-    assert shards_for_keys(10) == 4          # floor: local parallelism
-    assert shards_for_keys(10**9) == 10_000  # cap
+    for law in (NATIVE_STATE_KEYS_PER_SHARD, PY_STATE_KEYS_PER_SHARD):
+        assert shards_for_keys(10, keys_per_shard=law) == 4          # floor: local parallelism
+        assert shards_for_keys(10**9, keys_per_shard=law) == 10_000  # cap
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    with state_shuffle_partitions(spark, 1500) as n:
+    with state_shuffle_partitions(
+        spark, 1500, keys_per_shard=NATIVE_STATE_KEYS_PER_SHARD
+    ) as n:
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
