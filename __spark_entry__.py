@@ -8223,11 +8223,22 @@ def entry(spark: SparkSession) -> DataFrame:
 # — a regression in a long-green query can hide for at most that long.
 
 #: Head of the rotation: queries whose code changed since their last
-#: green CORRECTNESS row.  First the fourteen whose round loops moved onto
-#: ckpt.next_round / ckpt.fixpoint, then the two streaming queries whose
-#: keyed state became native aggregations.  Everything else rides the
-#: least-recently-green order.
+#: green CORRECTNESS row.  First the nine perfbench mix queries that read
+#: their tables through catalog.load, whose schemas now come from the
+#: parquet footer (every query's read path moved; these lead), then the
+#: fourteen whose round loops moved onto ckpt.next_round / ckpt.fixpoint,
+#: then the two streaming queries whose keyed state became native
+#: aggregations.  Everything else rides the least-recently-green order.
 _CHANGED_THIS_ROUND = (
+    "q_query_files",
+    "q_projects_with_data",
+    "q_sample_lookup",
+    "q_experimental_design",
+    "q_pricing_summary",
+    "q_revenue_by_nation",
+    "q_tpch_q04",
+    "q_register_fastq",
+    "q_wf_results_register",
     "q_resolve_entities",
     "q_pagerank",
     "q_bpe_merges",

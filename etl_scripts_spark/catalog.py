@@ -21,8 +21,13 @@ Derivation contract (the only place it is defined for Spark):
 
 from __future__ import annotations
 
+import json
+import os
+from urllib.parse import urlparse
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .expressions import barcode_checksum_char
 
@@ -41,17 +46,114 @@ TABLES = (
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver-generated parquet table."""
+    """Load one driver-generated parquet table.
+
+    The schema comes from the file's footer (:func:`_footer_schema`), so
+    loading a table starts no Spark job; Spark infers it only for a file
+    the footer reader declines."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # events.ts is parquet TIMESTAMP(NANOS) which Spark cannot read
         # natively; read nanos as long, then truncate to micros exactly
         # (integer division — no double round-trip), matching DuckDB's
         # ns→µs truncation of the same file.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    schema = _footer_schema(spark, path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    return normalize_events(df) if name == "events" else df
+
+
+# Arrow types whose inferred Spark type depends on no session conf.
+# `_footer_schema` also maps binary, decimal128, timestamp and one level of
+# list; every other arrow type (unsigned, dictionary, large_*, map, struct,
+# float16, ...) is left to Spark's inference.
+_FOOTER_TYPES = {
+    "int8": T.ByteType(), "int16": T.ShortType(), "int32": T.IntegerType(),
+    "int64": T.LongType(), "float": T.FloatType(), "double": T.DoubleType(),
+    "bool": T.BooleanType(), "string": T.StringType(), "date32[day]": T.DateType(),
+}
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark's parquet inference gives one local file, read from
+    its footer on the driver (pyarrow, ~1 ms) instead of by the one-task
+    ``parquet at`` job that ``spark.read.parquet(path)`` runs.
+
+    Reads the footer on every call (nothing to invalidate) and follows the
+    session's confs: ``inferTimestampNTZ.enabled`` (zone-less timestamps),
+    ``legacy.parquet.nanosAsLong`` (TIMESTAMP(NANOS)), ``int96AsTimestamp``
+    and ``binaryAsString``.  Timestamps map from the parquet column, not the
+    arrow type: pyarrow reports INT96 as ``timestamp[ns]``, which Spark
+    reads as TIMESTAMP.  Every field is nullable, as inference makes it.
+
+    Returns None, so that Spark infers (or raises its own error), for
+    anything but a plain local file (a remote filesystem is never opened),
+    an unreadable footer, a footer carrying Spark's own schema, and any type
+    outside the allow-list.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    url = urlparse(path)
+    if url.scheme == "file":
+        local = url.path
+    elif url.scheme == "" and str(
+        spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    ).startswith("file:"):
+        local = path
+    else:
+        return None
+    if not os.path.isfile(local):
+        return None  # a directory, a glob or a missing path
+    try:
+        pf = pq.ParquetFile(local)
+        arrow = pf.schema_arrow
+    except Exception:
+        return None
+    if b"org.apache.spark.sql.parquet.row.metadata" in (pf.metadata.metadata or {}):
+        return None
+
+    def on(key: str) -> bool:
+        return spark.conf.get(f"spark.sql.{key}").lower() == "true"
+
+    def spark_type(at: pa.DataType, i: int) -> T.DataType | None:
+        """Spark type of arrow type ``at`` read from leaf column ``i``."""
+        if str(at) in _FOOTER_TYPES:
+            return _FOOTER_TYPES[str(at)]
+        if pa.types.is_binary(at):
+            return T.StringType() if on("parquet.binaryAsString") else T.BinaryType()
+        if pa.types.is_decimal128(at):
+            return T.DecimalType(at.precision, at.scale)
+        if not pa.types.is_timestamp(at):
+            return None
+        leaf = pf.schema.column(i)
+        if leaf.physical_type == "INT96":
+            return T.TimestampType() if on("parquet.int96AsTimestamp") else None
+        ts = json.loads(leaf.logical_type.to_json())
+        if ts.get("Type") != "Timestamp":
+            return None
+        if ts["timeUnit"] == "nanoseconds":
+            return T.LongType() if on("legacy.parquet.nanosAsLong") else None
+        if ts["isAdjustedToUTC"] or not on("parquet.inferTimestampNTZ.enabled"):
+            return T.TimestampType()
+        return T.TimestampNTZType()
+
+    fields = []
+    # Every allowed field is one parquet leaf column, so field i reads leaf
+    # i until the first field outside the allow-list ends the mapping.
+    for i, f in enumerate(arrow):
+        dt = None
+        if not pa.types.is_list(f.type):
+            dt = spark_type(f.type, i)
+        elif not pa.types.is_list(f.type.value_type):
+            elem = spark_type(f.type.value_type, i)
+            dt = None if elem is None else T.ArrayType(elem, containsNull=True)
+        if dt is None:
+            return None
+        fields.append(T.StructField(f.name, dt, nullable=True))
+    return T.StructType(fields)
 
 
 def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -26,14 +26,16 @@ _name_counter = itertools.count()
 
 def _events_stream(spark: SparkSession, events_parquet: str) -> DataFrame:
     """Shared file-source plumbing for every wrapper here: nanos conf,
-    schema from the batch reader, sibling glob (the file-stream source
+    schema from the file's footer (no Spark job; Spark infers only when
+    the footer reader declines), sibling glob (the file-stream source
     wants a directory or glob, not a bare file path), normalized ts.
     ONE copy — a fix to the glob derivation or the conf handling must
     not be re-applied per wrapper."""
-    from ..catalog import normalize_events
+    from ..catalog import _footer_schema, normalize_events
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_parquet).schema
+    schema = (_footer_schema(spark, events_parquet)
+              or spark.read.parquet(events_parquet).schema)
     glob_path = events_parquet.rsplit(".", 1)[0] + ".*"
     return normalize_events(spark.readStream.schema(schema).parquet(glob_path))
 
