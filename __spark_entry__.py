@@ -6247,14 +6247,14 @@ def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming count-min sketch maintenance: the d×w counter matrix lives
-    in the state store and every micro-batch adds its pre-bucketed hits
-    (bucket law computed as a Catalyst projection BEFORE the stateful
-    stage).  After the AvailableNow drain the state equals the batch
-    cms_build over all events row-for-row — which is exactly what the
-    oracle recomputes.  The heavy-hitter standing index of
-    operators/sketch.py, run live.  See streaming/stateful.py:331."""
-    from etl_scripts_spark.streaming.stateful import stateful_cms_available_now
+    """Streaming count-min sketch maintenance
+    (streaming/windowed.stateful_cms_available_now): operators/sketch
+    .cms_build run on the events stream as a native streaming
+    aggregation, so the d×w counter matrix lives in the state store and
+    every micro-batch adds its hits.  The complete-mode drain equals the
+    batch cms_build over all events row-for-row — which is exactly what
+    the oracle recomputes."""
+    from etl_scripts_spark.streaming.windowed import stateful_cms_available_now
 
     return stateful_cms_available_now(spark, f"{sf_dir}/events.parquet")
 
@@ -8038,14 +8038,14 @@ def q_stream_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle.hll_registers_sql("SELECT * FROM events", "event_type", "user_id", p=10),
 )
 def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming HyperLogLog maintenance (streaming/stateful
-    .stateful_hll_available_now): the per-event-type register array
-    lives in the state store (~4 KB/key forever), each micro-batch
-    maxes its (bucket, rho) rows in; bucket/rho computed as a Catalyst
-    projection BEFORE the stateful stage via the shared
-    sketch.hll_bucket_rho law.  Drain == batch register table
-    row-for-row; the oracle recomputes the register law in SQL."""
-    from etl_scripts_spark.streaming.stateful import stateful_hll_available_now
+    """Streaming HyperLogLog maintenance (streaming/windowed
+    .stateful_hll_available_now): operators/sketch.hll_registers run on
+    the events stream as a native streaming aggregation, so the
+    per-event-type registers live in the state store (≤ 1024 keys per
+    type forever) and each micro-batch maxes its rows in.  Drain ==
+    batch register table row-for-row; the oracle recomputes the register
+    law in SQL."""
+    from etl_scripts_spark.streaming.windowed import stateful_hll_available_now
 
     return stateful_hll_available_now(spark, f"{sf_dir}/events.parquet")
 
@@ -8223,13 +8223,16 @@ def entry(spark: SparkSession) -> DataFrame:
 # — a regression in a long-green query can hide for at most that long.
 
 #: Head of the rotation: queries whose code changed since their last
-#: green CORRECTNESS row.  First the nine perfbench mix queries that read
-#: their tables through catalog.load, whose schemas now come from the
-#: parquet footer (every query's read path moved; these lead), then the
-#: fourteen whose round loops moved onto ckpt.next_round / ckpt.fixpoint,
-#: then the two streaming queries whose keyed state became native
+#: green CORRECTNESS row.  First the two streaming sketches that became
+#: the batch sketch operators drained in complete mode, then the nine
+#: perfbench mix queries that read their tables through catalog.load,
+#: whose schemas now come from the parquet footer, then the fourteen
+#: whose round loops moved onto ckpt.next_round / ckpt.fixpoint, then
+#: the two streaming queries whose keyed state became native
 #: aggregations.  Everything else rides the least-recently-green order.
 _CHANGED_THIS_ROUND = (
+    "q_stream_hll",
+    "q_stream_cms",
     "q_query_files",
     "q_projects_with_data",
     "q_sample_lookup",

@@ -429,21 +429,6 @@ def _hll_alpha(p: int) -> float:
     return {4: 0.673, 5: 0.697, 6: 0.709}.get(p, 0.7213 / (1 + 1.079 / (1 << p)))
 
 
-def hll_bucket_rho(value, p: int):
-    """The ONE (bucket, rho) column law behind hll_registers — exposed so
-    the streaming variant computes the identical Catalyst projection
-    before its stateful stage (value must already be a string column)."""
-    h = F.md5(value)
-    w = F.conv(F.substring(h, 5, 12), 16, 10).cast("long")
-    bucket = (F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % (1 << p)).cast("int")
-    rho = (
-        F.when(w == 0, F.lit(49))
-        .otherwise(F.lit(49) - F.length(F.bin(w)))
-        .cast("int")
-    )
-    return bucket, rho
-
-
 def _check_hll_p(p: int) -> None:
     # the bucket law reads the first 16 md5 bits, so 2^p buckets need
     # p <= 16; the exact-integer denominator is safe throughout (terms
@@ -483,7 +468,14 @@ def hll_registers(
             f"hll value column must be string (got {vtype}); "
             "cast/format it explicitly so both engines hash identical bytes"
         )
-    bucket, rho = hll_bucket_rho(F.col(value_col), p)
+    h = F.md5(F.col(value_col))
+    w = F.conv(F.substring(h, 5, 12), 16, 10).cast("long")
+    bucket = (F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % (1 << p)).cast("int")
+    rho = (
+        F.when(w == 0, F.lit(49))
+        .otherwise(F.lit(49) - F.length(F.bin(w)))
+        .cast("int")
+    )
     return (
         df.filter(F.col(value_col).isNotNull())
         .select(F.col(group_col), bucket.alias("bucket"), rho.alias("rho"))

@@ -10,11 +10,12 @@ dropbox semantics.
 
 The rule: Python state only where Spark has no aggregate for it.  Keyed
 state that IS a built-in aggregate (dedup-on-ingest's min + count,
-per-user count + sum) runs as a native streaming aggregation in
-:mod:`.windowed` and never leaves the JVM.  What stays here — the KMV,
-count-min and HyperLogLog sketch merges and the rolling z-score ring
-buffer — has no Spark aggregate, so its updates cross into Python,
-Arrow-batched per group.
+per-user count + sum, HyperLogLog's per-bucket max, count-min's
+per-counter count) runs as a native streaming aggregation in
+:mod:`.windowed` and never leaves the JVM.  What stays here has no
+bounded exact Spark aggregate — KMV keeps the k smallest distinct
+hashes, the rolling z-score a ring buffer of the last `window` values —
+so its updates cross into Python, Arrow-batched per group.
 
 At 100 TB the state store shards with the shuffle partitioning of the group
 key; no driver-side maps, no collect.
@@ -140,110 +141,6 @@ def _kmv_finalize(out: DataFrame) -> DataFrame:
         F.round(F.lit(float(_KMV_K - 1) * (1 << 48)) / F.col("_k48"), 4)
     )
     return final.select("event_type", "sketch_n", est.alias("est_distinct"))
-
-
-CMS_SCHEMA = T.StructType(
-    [
-        T.StructField("r", T.IntegerType()),
-        T.StructField("version", T.LongType()),
-        T.StructField("counters", T.StringType()),
-    ]
-)
-
-_CMS_STATE = T.StructType(
-    [T.StructField("version", T.LongType()), T.StructField("counters", T.StringType())]
-)
-
-_CMS_D = 4
-_CMS_W = 256
-
-
-def _cms_fn(key: Tuple[Any, ...], pdfs: Iterator, state: GroupState) -> Iterator:
-    """Add each micro-batch's pre-bucketed hits into this row's w counters
-    (the algebraic CMS merge: counters add).  State is one CSV of w ints —
-    bounded regardless of stream volume."""
-    import pandas as pd
-
-    if state.exists:
-        version, csv = state.get
-        counters = [int(x) for x in csv.split(",")]
-    else:
-        version, counters = 0, [0] * _CMS_W
-    for pdf in pdfs:
-        version += len(pdf)
-        for b, c in pdf["b"].value_counts().items():
-            counters[int(b)] += int(c)
-    csv = ",".join(str(c) for c in counters)
-    state.update((version, csv))
-    yield pd.DataFrame(
-        {"r": [int(key[0])], "version": [version], "counters": [csv]}
-    )
-
-
-def stateful_cms_available_now(
-    spark: SparkSession, events_parquet: str
-) -> DataFrame:
-    """Streaming count-min sketch maintenance: the d×w counter matrix
-    lives IN the state store (one row-salt per state key) and every
-    micro-batch adds its pre-bucketed hits — operators/sketch.cms_build
-    run live, with the SAME bucket law (first 32 bits of md5(r|value)
-    mod w) computed as a Catalyst projection BEFORE the stateful stage,
-    so the Python fn only increments counters.  After the AvailableNow
-    drain the final state equals the batch sketch over all events
-    row-for-row; returns (r, b, cnt) in the batch layout so
-    cms_estimate / heavy-hitter probes compose unchanged.
-    """
-
-    def build(stream):
-        probes = [
-            F.struct(
-                F.lit(j).alias("r"),
-                (
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws(
-                                    "|", F.lit(str(j)), F.col("user_id").cast("string")
-                                )
-                            ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("bigint")
-                    % _CMS_W
-                ).alias("b"),
-            )
-            for j in range(_CMS_D)
-        ]
-        return (
-            stream.filter(F.col("user_id").isNotNull())
-            .select(F.explode(F.array(*probes)).alias("_rb"))
-            .select("_rb.r", "_rb.b")
-            .groupBy("r")
-            .applyInPandasWithState(
-                _cms_fn,
-                outputStructType=CMS_SCHEMA,
-                stateStructType=_CMS_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-
-    out = _drain_events(spark, events_parquet, build, _CMS_D)
-    # keep the LAST emission per row-salt (max version), then explode the
-    # counter CSV back to the batch (r, b, cnt) layout, dropping zeros to
-    # match cms_build's sparse output
-    last = (
-        out.groupBy("r")
-        .agg(F.max_by("counters", "version").alias("counters"))
-        .select("r", F.split("counters", ",").alias("_cs"))
-    )
-    exploded = last.select(
-        "r", F.posexplode("_cs").alias("b", "_c")
-    ).select("r", "b", F.col("_c").cast("bigint").alias("cnt"))
-    return exploded.filter(F.col("cnt") > 0)
 
 
 # --- streaming rolling z-score anomaly detection ---------------------------
@@ -393,93 +290,3 @@ def stateful_rolling_zscore_available_now(
 
     return _drain_events(spark, events_parquet, build, approx_keys)
 
-
-# --- streaming HyperLogLog maintenance --------------------------------------
-
-HLL_SCHEMA = T.StructType(
-    [
-        T.StructField("event_type", T.StringType()),
-        T.StructField("version", T.LongType()),
-        T.StructField("registers", T.StringType()),
-    ]
-)
-
-_HLL_STATE = T.StructType(
-    [T.StructField("version", T.LongType()), T.StructField("registers", T.StringType())]
-)
-
-#: streaming register precision: m=1024 keeps the per-key state CSV ~4 KB
-_HLL_P = 10
-
-
-def _hll_fn(key: Tuple[Any, ...], pdfs: Iterator, state: GroupState) -> Iterator:
-    """Max each micro-batch's (bucket, rho) rows into this key's m
-    registers (the algebraic HLL merge: registers max) — bounded state
-    regardless of stream volume."""
-    import pandas as pd
-
-    if state.exists:
-        version, csv = state.get
-        regs = [int(x) for x in csv.split(",")]
-    else:
-        version, regs = 0, [0] * (1 << _HLL_P)
-    for pdf in pdfs:
-        version += len(pdf)
-        for b, r in zip(pdf["bucket"], pdf["rho"]):
-            b = int(b)
-            if int(r) > regs[b]:
-                regs[b] = int(r)
-    csv = ",".join(str(r) for r in regs)
-    state.update((version, csv))
-    yield pd.DataFrame(
-        {"event_type": [key[0]], "version": [version], "registers": [csv]}
-    )
-
-
-def stateful_hll_available_now(
-    spark: SparkSession, events_parquet: str, approx_keys: int = 8
-) -> DataFrame:
-    """Streaming HyperLogLog maintenance: the per-event-type register
-    array lives IN the state store and every micro-batch maxes its
-    (bucket, rho) rows in — operators/sketch.hll_registers run live, with
-    the SAME bucket/rho law (sketch.hll_bucket_rho) computed as a
-    Catalyst projection BEFORE the stateful stage, so the Python fn only
-    takes maxes.  After the AvailableNow drain the final state equals the
-    batch register table over all events row-for-row; returns
-    (event_type, bucket, register) in the batch layout (zero registers
-    dropped — absent buckets are implicit there too), so hll_estimate
-    composes unchanged."""
-    from ..operators.sketch import hll_bucket_rho
-
-    def build(stream):
-        bucket, rho = hll_bucket_rho(F.col("user_id").cast("string"), _HLL_P)
-        return (
-            stream.filter(F.col("user_id").isNotNull())
-            .select("event_type", bucket.alias("bucket"), rho.alias("rho"))
-            .groupBy("event_type")
-            .applyInPandasWithState(
-                _hll_fn,
-                outputStructType=HLL_SCHEMA,
-                stateStructType=_HLL_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-        )
-
-    out = _drain_events(spark, events_parquet, build, approx_keys)
-    # keep the LAST emission per key, explode the CSV back to the sparse
-    # batch (event_type, bucket, register) layout
-    last = (
-        out.groupBy("event_type")
-        .agg(F.max_by("registers", "version").alias("registers"))
-        .select("event_type", F.split("registers", ",").alias("_rs"))
-    )
-    return (
-        last.select("event_type", F.posexplode("_rs").alias("bucket", "_r"))
-        .select(
-            "event_type",
-            F.col("bucket").cast("int").alias("bucket"),
-            F.col("_r").cast("int").alias("register"),
-        )
-        .filter(F.col("register") > 0)
-    )

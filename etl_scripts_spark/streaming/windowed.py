@@ -7,8 +7,10 @@ then stop.  The same aggregation expressions as the batch operators in
 :mod:`..operators.windows` are reused so batch and streaming agree.
 
 Every operator here is a native stateful operator — windowed, session and
-keyed aggregations and the interval join — whose state stays in the JVM's
-state store; keyed state with no built-in aggregate lives in
+keyed aggregations, the interval join, and the HyperLogLog and count-min
+sketches (the batch operators of :mod:`..operators.sketch` run on the
+stream: a register is a max, a counter a count) — whose state stays in
+the JVM's state store; keyed state with no built-in aggregate lives in
 :mod:`.stateful`.
 """
 
@@ -19,6 +21,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.sketch import cms_build, hll_registers
 from .tuning import NATIVE_STATE_KEYS_PER_SHARD, state_shuffle_partitions
 
 _name_counter = itertools.count()
@@ -347,3 +350,62 @@ def stateful_user_totals_available_now(
     distinct users per sf; at production key counts pass the
     table-statistics estimate."""
     return _user_totals(spark, _events_stream(spark, events_parquet), approx_keys)
+
+
+#: streaming HLL precision: m=1024 registers per event type
+_HLL_P = 10
+#: streaming count-min shape: d salted rows × w counters
+_CMS_D = 4
+_CMS_W = 256
+
+
+def _hll(spark: SparkSession, stream: DataFrame, approx_keys: int) -> DataFrame:
+    """sketch.hll_registers over any events stream, drained in complete
+    mode: a register is max(rho) per (event_type, bucket), so the state
+    store holds the register table itself and the sink holds its final
+    value — the batch operator, run incrementally."""
+    regs = hll_registers(
+        stream.select("event_type", F.col("user_id").cast("string").alias("v")),
+        "event_type",
+        "v",
+        p=_HLL_P,
+    )
+    return _drain(spark, regs, approx_keys << _HLL_P)
+
+
+def stateful_hll_available_now(
+    spark: SparkSession, events_parquet: str, approx_keys: int = 8
+) -> DataFrame:
+    """Streaming HyperLogLog maintenance: per-event-type registers kept
+    in the state store (≤ 2^p keys per type, whatever the stream volume).
+    The drain equals the batch register table over all events
+    row-for-row — (event_type, bucket, register), absent buckets implicit
+    — so hll_estimate composes unchanged.  `approx_keys` counts event
+    types."""
+    return _hll(spark, _events_stream(spark, events_parquet), approx_keys)
+
+
+def _count_min(spark: SparkSession, stream: DataFrame) -> DataFrame:
+    """sketch.cms_build over any events stream's non-null user_ids,
+    drained in complete mode: a counter is count(*) per (r, b), so the
+    state store holds the d×w counter matrix itself."""
+    cms = cms_build(
+        stream.filter(F.col("user_id").isNotNull()).select(
+            F.col("user_id").cast("string").alias("v")
+        ),
+        "v",
+        d=_CMS_D,
+        w=_CMS_W,
+    )
+    return _drain(spark, cms, _CMS_D * _CMS_W)
+
+
+def stateful_cms_available_now(
+    spark: SparkSession, events_parquet: str
+) -> DataFrame:
+    """Streaming count-min sketch maintenance: the counter matrix lives in
+    the state store and every micro-batch adds its hits.  The drain equals
+    the batch cms_build over all events row-for-row — (r, b, cnt), zero
+    counters absent — so cms_estimate / heavy-hitter probes compose
+    unchanged."""
+    return _count_min(spark, _events_stream(spark, events_parquet))

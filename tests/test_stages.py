@@ -469,7 +469,7 @@ def test_streaming_cms_equals_batch_sketch(spark):
 
     from etl_scripts_spark.catalog import normalize_events
     from etl_scripts_spark.operators.sketch import cms_build
-    from etl_scripts_spark.streaming.stateful import (
+    from etl_scripts_spark.streaming.windowed import (
         _CMS_D,
         _CMS_W,
         stateful_cms_available_now,
@@ -833,7 +833,7 @@ def test_stateful_hll_equals_batch_registers(spark):
         hll_estimate,
         hll_registers,
     )
-    from etl_scripts_spark.streaming.stateful import (
+    from etl_scripts_spark.streaming.windowed import (
         _HLL_P,
         stateful_hll_available_now,
     )

@@ -1,23 +1,27 @@
 """Keyed streaming state as native aggregations (streaming/windowed.py
-stateful_first_seen_available_now / stateful_user_totals_available_now).
+stateful_first_seen_available_now / stateful_user_totals_available_now /
+stateful_hll_available_now / stateful_cms_available_now).
 
 The oracle parity suite drains the events table in ONE micro-batch, so it
-cannot see how update-mode rows are folded across micro-batches.  Here two
+cannot see how drained rows combine across micro-batches.  Here two
 parquet files arrive as two micro-batches (maxFilesPerTrigger=1); the
 second holds an earlier (ts, event_id) for a key the first already
 registered, and a ts tie that only event_id can break.  Dedup and user
-totals must still equal the batch law over both files.
+totals must still equal the batch law over both files, and so must the
+HLL registers and count-min counters that users 1-3 touch in both.
 """
 
 from __future__ import annotations
 
 import math
 import os
+from collections import Counter
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from etl_scripts_spark.operators.sketch import cms_build, hll_registers
 from etl_scripts_spark.streaming import windowed
 
 T0 = 1_700_000_000_000_000  # epoch µs
@@ -113,3 +117,37 @@ def test_user_totals_fold_across_micro_batches(spark, tmp_path, monkeypatch):
         want[user] = (n + 1, cents + math.floor(value * 100.0 + 0.5))
     assert got == want
     assert drained[0].filter(F.col("user_id") == 1).count() == 2
+
+
+def _both_files_as_one_batch(spark, tmp_path):
+    return spark.read.parquet(str(tmp_path)).select(
+        "event_type", F.col("user_id").cast("string").alias("v")
+    )
+
+
+def test_hll_drain_equals_batch_registers(spark, tmp_path):
+    """Complete mode leaves each (event_type, bucket) register once, at
+    its final max — a multiset compare, so a duplicate key fails."""
+    stream = _two_batch_stream(spark, tmp_path)
+    got = Counter(tuple(r) for r in windowed._hll(spark, stream, 8).collect())
+    want = Counter(
+        tuple(r)
+        for r in hll_registers(
+            _both_files_as_one_batch(spark, tmp_path), "event_type", "v",
+            p=windowed._HLL_P,
+        ).collect()
+    )
+    assert got == want
+
+
+def test_cms_drain_equals_batch_counters(spark, tmp_path):
+    stream = _two_batch_stream(spark, tmp_path)
+    got = Counter(tuple(r) for r in windowed._count_min(spark, stream).collect())
+    want = Counter(
+        tuple(r)
+        for r in cms_build(
+            _both_files_as_one_batch(spark, tmp_path), "v",
+            d=windowed._CMS_D, w=windowed._CMS_W,
+        ).collect()
+    )
+    assert got == want
