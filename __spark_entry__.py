@@ -646,13 +646,11 @@ def q_parent_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components of the sample-parent graph.  The
-    customer→nation→region tree is SHALLOW (diameter ≲ 3), so per-hop
-    label propagation converges in 3-4 rounds and beats the star
-    algorithm's per-round constant (2 shuffles + 2 joins vs 1 join + 1
-    groupBy); `q_graph_components_chain` covers the deep-graph dispatch
-    (connected_components_star, O(log²n) rounds).  Oracle: recursive-CTE
-    reachability closure + min, a declarative definition of the same
-    components."""
+    customer→nation→region tree is SHALLOW (diameter ≲ 3), so label
+    propagation converges before its pointer-jump rounds start;
+    `q_graph_components_chain` covers the deep graphs that need them.
+    Oracle: recursive-CTE reachability closure + min, a declarative
+    definition of the same components."""
     edges = catalog.sample_parent_edges(
         _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "nation")
     )
@@ -675,10 +673,10 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_graph_components_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adversarial CC: path graphs of diameter 100 (chains over the dense
-    customer keys).  This is the shape where per-hop label propagation pays
-    one round per hop; the star algorithm must stay at O(log² n) rounds —
-    a convergence regression shows up as bench wall-time (or the operator's
-    non-convergence raise), not just a unit-test failure."""
+    customer keys).  This is the shape where plain label propagation pays
+    one round per hop; its pointer-jump rounds must keep it near 10 rounds
+    — a convergence regression shows up as bench wall-time (or the
+    operator's non-convergence raise), not just a unit-test failure."""
     c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
     node = lambda col: F.concat(F.lit("C"), F.lpad(col.cast("string"), 6, "0"))  # noqa: E731
     # custkeys are dense and 0-based: chain c = nodes [100c, 100c+99]
@@ -688,7 +686,7 @@ def q_graph_components_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c.alias("b"), F.col("b.k") == F.col("a.k") + 1)
         .select(node(F.col("a.k")).alias("id_a"), node(F.col("b.k")).alias("id_b"))
     )
-    return dedup.connected_components_star(pairs)
+    return dedup.connected_components(pairs)
 
 
 @_register(
@@ -8223,14 +8221,25 @@ def entry(spark: SparkSession) -> DataFrame:
 # — a regression in a long-green query can hide for at most that long.
 
 #: Head of the rotation: queries whose code changed since their last
-#: green CORRECTNESS row.  First the two streaming sketches that became
-#: the batch sketch operators drained in complete mode, then the nine
-#: perfbench mix queries that read their tables through catalog.load,
-#: whose schemas now come from the parquet footer, then the fourteen
-#: whose round loops moved onto ckpt.next_round / ckpt.fixpoint, then
-#: the two streaming queries whose keyed state became native
+#: green CORRECTNESS row.  First the nine connected-components consumers,
+#: whose label propagation now pointer-jumps from round 6 (the chain query
+#: moved off the deleted star algorithm), then the two streaming sketches
+#: that became the batch sketch operators drained in complete mode, then
+#: the nine perfbench mix queries that read their tables through
+#: catalog.load, whose schemas now come from the parquet footer, then the
+#: other ten whose round loops moved onto ckpt.next_round / ckpt.fixpoint,
+#: then the two streaming queries whose keyed state became native
 #: aggregations.  Everything else rides the least-recently-green order.
 _CHANGED_THIS_ROUND = (
+    "q_graph_components_chain",
+    "q_graph_components",
+    "q_resolve_entities",
+    "q_incremental_components",
+    "q_near_dup_clusters",
+    "q_signature_dup_clusters",
+    "q_span_dup_clusters",
+    "q_component_sizes",
+    "q_corpus_curation",
     "q_stream_hll",
     "q_stream_cms",
     "q_query_files",
@@ -8242,13 +8251,9 @@ _CHANGED_THIS_ROUND = (
     "q_tpch_q04",
     "q_register_fastq",
     "q_wf_results_register",
-    "q_resolve_entities",
     "q_pagerank",
     "q_bpe_merges",
     "q_bpe_encode",
-    "q_graph_components",
-    "q_graph_components_chain",
-    "q_near_dup_clusters",
     "q_k_core",
     "q_kmeans_assign",
     "q_ivf_trained",

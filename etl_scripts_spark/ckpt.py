@@ -1,6 +1,6 @@
 """The checkpoint-round contract of every iterative operator.
 
-Each round of an iterative operator (label-propagation and star CC,
+Each round of an iterative operator (label-propagation CC,
 PageRank, k-core peel, the two k-means trainers, BPE training, the
 perceptron) pins its state with ``localCheckpoint(eager=True)`` so the plan
 stays flat, frees the round it superseded, and -- for a fixpoint -- stops
@@ -13,8 +13,8 @@ object is garbage-collected, which, through the py4j reference chain, can
 lag the Python side by a long time.  On a shared executor that lag is real
 memory pressure: SCALE.md measured a later operator inflating ~4x purely
 from retained checkpoint blocks of an earlier one, and the diameter-100
-chain-CC query (30+ rounds of edge-table checkpoints) is the worst producer
-in the registry.  So a superseded round is freed the moment the next
+chain-CC query (10 rounds of label checkpoints) is the worst producer in
+the registry.  So a superseded round is freed the moment the next
 round's checkpoint has materialized -- that job was its last reader.
 
 CONTRACT: only free a checkpoint that nothing will read again.  A

@@ -14,11 +14,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_scripts_spark.ckpt import free_local_checkpoint
-from etl_scripts_spark.operators.dedup import (
-    connected_components,
-    connected_components_star,
-)
+from etl_scripts_spark import ckpt
+from etl_scripts_spark.ckpt import free_local_checkpoint, next_round
+from etl_scripts_spark.operators.dedup import _JUMP_FROM_ROUND, connected_components
 from etl_scripts_spark.operators.graph import k_core, pagerank
 
 
@@ -47,14 +45,14 @@ def test_free_actually_releases_blocks(spark):
     assert _n_persistent(spark) == before
 
 
-def test_star_cc_frees_every_superseded_round(spark):
-    # a 60-node chain forces many star rounds; each used to leave one
-    # pinned edge checkpoint behind
+def test_label_prop_cc_frees_every_superseded_jump_round(spark):
+    # a 60-node chain runs past the plain rounds into the pointer-jump
+    # rounds; a leak would leave one pinned label checkpoint per round
     before = _n_persistent(spark)
-    out = connected_components_star(chain_pairs(spark, 60))
+    out = connected_components(chain_pairs(spark, 60))
     leaked = _n_persistent(spark) - before
-    # only the final edge checkpoint (which the result reads) may remain
-    assert leaked <= 1, f"star-CC retained {leaked} checkpoints"
+    # only the final label checkpoint (which the result reads) may remain
+    assert leaked <= 1, f"label-prop CC retained {leaked} checkpoints"
     # and that surviving checkpoint must still be readable: one component
     rows = out.toPandas()
     assert set(rows["component"]) == {0}
@@ -102,6 +100,40 @@ def test_k_core_frees_rounds_and_keeps_result_live(spark):
     assert list(rows["degree"]) == [2, 2, 2]
 
 
+def test_label_prop_cc_pointer_jumps_a_diameter_100_chain(spark):
+    # plain label propagation needs ~100 rounds on this chain; the jump
+    # rounds from round 6 on must bring it under 12
+    rows = connected_components(chain_pairs(spark, 100), max_iter=12).toPandas()
+    assert set(rows["component"]) == {0}
+    assert len(rows) == 100
+
+
+def test_label_prop_jump_round_runs_its_aggregate_once(spark, monkeypatch):
+    # a jump round self-joins the round's min-aggregate; both copies must
+    # plan alike so the aggregate's shuffle is reused, or every jump round
+    # runs the aggregate twice (8 jobs where a plain round runs 5).  The
+    # ids are nullable, as in the queries: the join's inferred not-null is
+    # what can set the copies apart.
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(39)], "id_a long, id_b long")
+    sc = spark.sparkContext
+    groups: list[str] = []
+
+    def grouped_round(*args):
+        groups.append(f"test-cc-round-{len(groups) + 1}")
+        sc.setJobGroup(groups[-1], groups[-1])
+        return next_round(*args)
+
+    monkeypatch.setattr(ckpt, "next_round", grouped_round)
+    try:
+        connected_components(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
+    assert len(jobs) > _JUMP_FROM_ROUND, jobs  # the chain reaches the jump rounds
+    plain, jump = jobs[1:_JUMP_FROM_ROUND - 1], jobs[_JUMP_FROM_ROUND - 1:]
+    assert max(jump) <= max(plain) + 1, jobs
+
+
 def test_round_cap_raises_with_the_operator_name(spark):
     # a 12-node chain needs more rounds than 2 in every fixpoint operator;
     # stopping there would return split components or a non-core, so each
@@ -110,7 +142,6 @@ def test_round_cap_raises_with_the_operator_name(spark):
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     for name, run in (
         ("connected_components", lambda: connected_components(pairs, max_iter=2)),
-        ("connected_components_star", lambda: connected_components_star(pairs, max_iter=2)),
         ("k_core", lambda: k_core(edges, k=2, max_iter=2)),
     ):
         with pytest.raises(RuntimeError, match=f"^{name} did not converge in 2 rounds"):
