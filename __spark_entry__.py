@@ -2199,7 +2199,7 @@ def _kmeans_cte_chain(
     with_kw: bool = True,
 ) -> str:
     """Unrolled Lloyd's iterations as chained CTEs — a declarative replay
-    of similarity.kmeans_centroids_row's exact arithmetic (sequential-fold
+    of similarity._lloyd's exact arithmetic, one block (sequential-fold
     cosines are bit-identical to list_dot_product; means go through the
     same round-7-decimal-sum / round-6 pipeline).  Ends at CTE
     {prefix}c{n_iter} = (cid, cv, cn), plus {prefix}v = (vec_id, ev, nrm)
@@ -8221,16 +8221,25 @@ def entry(spark: SparkSession) -> DataFrame:
 # — a regression in a long-green query can hide for at most that long.
 
 #: Head of the rotation: queries whose code changed since their last
-#: green CORRECTNESS row.  First the nine connected-components consumers,
-#: whose label propagation now pointer-jumps from round 6 (the chain query
-#: moved off the deleted star algorithm), then the two streaming sketches
-#: that became the batch sketch operators drained in complete mode, then
-#: the nine perfbench mix queries that read their tables through
-#: catalog.load, whose schemas now come from the parquet footer, then the
-#: other ten whose round loops moved onto ckpt.next_round / ckpt.fixpoint,
-#: then the two streaming queries whose keyed state became native
-#: aggregations.  Everything else rides the least-recently-green order.
+#: green CORRECTNESS row.  First the seven vector-search consumers, whose
+#: quantizers now share one Lloyd trainer (and IVF pins its candidate
+#: join's build side), then the nine connected-components consumers,
+#: whose label propagation pointer-jumps from round 6 and drops null
+#: endpoints every round, then the two streaming sketches that became the
+#: batch sketch operators drained in complete mode, then the nine
+#: perfbench mix queries that read their tables through catalog.load,
+#: whose schemas now come from the parquet footer, then the other five
+#: whose round loops moved onto ckpt.next_round / ckpt.fixpoint, then the
+#: two streaming queries whose keyed state became native aggregations.
+#: Everything else rides the least-recently-green order.
 _CHANGED_THIS_ROUND = (
+    "q_kmeans_assign",
+    "q_ivf_trained",
+    "q_semdedup",
+    "q_pq_topk",
+    "q_pq_recall",
+    "q_ivf_topk",
+    "q_ivf_recall",
     "q_graph_components_chain",
     "q_graph_components",
     "q_resolve_entities",
@@ -8255,11 +8264,6 @@ _CHANGED_THIS_ROUND = (
     "q_bpe_merges",
     "q_bpe_encode",
     "q_k_core",
-    "q_kmeans_assign",
-    "q_ivf_trained",
-    "q_semdedup",
-    "q_pq_topk",
-    "q_pq_recall",
     "q_train_classifier",
     "q_stream_dedup",
     "q_stream_user_totals",

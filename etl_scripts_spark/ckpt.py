@@ -1,9 +1,9 @@
 """The checkpoint-round contract of every iterative operator.
 
 Each round of an iterative operator (label-propagation CC,
-PageRank, k-core peel, the two k-means trainers, BPE training, the
-perceptron) pins its state with ``localCheckpoint(eager=True)`` so the plan
-stays flat, frees the round it superseded, and -- for a fixpoint -- stops
+PageRank, k-core peel, the Lloyd trainer of k-means, IVF and PQ, BPE
+training, the perceptron) pins its state with ``localCheckpoint(eager=True)``
+so the plan stays flat, frees the round it superseded, and -- for a fixpoint -- stops
 when the state stops changing or raises.  :func:`next_round` and
 :func:`fixpoint` are the one copy of that policy; the operators supply only
 the step.
@@ -33,8 +33,8 @@ bit_xor(xxhash64(cols)))``, observed DURING the eager checkpoint's own job
 are deterministic, so an unchanged fingerprint means a fixpoint; a
 collision between two consecutive DIFFERENT states would stop a round early
 (~2^-64) -- accepted.  Stopping before the fixpoint would return a silently
-wrong result, so :func:`fixpoint` raises at its round cap.  The k-means
-trainers run a fixed round count and only use the fingerprint to skip the
+wrong result, so :func:`fixpoint` raises at its round cap.  The Lloyd
+trainer runs a fixed round count and only uses the fingerprint to skip the
 rounds after a fixpoint, which would be exact no-ops.
 """
 

@@ -20,7 +20,7 @@ vector OUT (D = feature buckets, fits any executor) and shuffles only
 per-doc margins (keyed by uniform doc id) and the D-row gradient IN —
 the corpus-sized featurized table is built once, localCheckpointed, and
 re-joined per round.  Rounds are a Python loop composing the plan, like
-similarity.kmeans_centroids_row; the corpus itself never re-tokenizes.
+the Lloyd rounds of similarity._lloyd; the corpus itself never re-tokenizes.
 
 Reference: the reference has no trained classifier (its quality gates
 are hand rules, e.g. register-utils barcode checks); this is the

@@ -265,15 +265,16 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
         nbr = labels.join(edges, labels["id"] == edges["src"]).select(
             F.col("dst").alias("id"), F.col("lbl")
         )
+        # A null endpoint never sends its label (id = src drops it), so it
+        # is no node: drop its row every round.  In a jump round the
+        # explicit not-null also keeps both copies of `out` one plan, so
+        # the min-aggregate runs once: else the join's inferred not-null on
+        # `_hop` sinks below the hop copy's aggregate only.
         out = labels.select("id", "lbl").union(nbr).groupBy("id").agg(F.min("lbl").alias("lbl"))
+        out = out.filter(F.col("id").isNotNull())
         if rounds < _JUMP_FROM_ROUND:
             return out
-        # every label is a node id, so each row matches exactly one row.
-        # The explicit not-null keeps both copies of `out` one plan, so the
-        # round's min-aggregate runs once: else the join's inferred not-null
-        # on `_hop` sinks below the hop copy's aggregate only.  A null id
-        # never sends its label (id = src drops it), so it is no node.
-        out = out.filter(F.col("id").isNotNull())
+        # every label is a node id, so each row matches exactly one row
         hop = out.select(F.col("id").alias("_hop"), F.col("lbl").alias("_lbl2"))
         return out.join(hop, F.col("lbl") == F.col("_hop")).select(
             "id", F.least("lbl", "_lbl2").alias("lbl")

@@ -6,7 +6,9 @@ whole-stage codegen (`aggregate(zip_with(...))`), no Python.  Scale path:
 sign-random-projection LSH — each vector is bucketed by the sign pattern of
 its dot products with deterministic integer hyperplanes, so candidate
 generation becomes an equi-join on the bucket key (one uniform shuffle)
-instead of an O(n·q) cross product.
+instead of an O(n·q) cross product.  Quantizer paths: IVF cells,
+k-means and product quantization (PQ), all cut, seeded, assigned and
+trained by one Lloyd trainer — k-means is PQ with one block.
 
 At 100 TB the corpus side stays partitioned; only queries/centroids move.
 """
@@ -154,26 +156,135 @@ def srp_near_dup_pairs(
     )
 
 
-def centroids_row(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+# --- Quantizers: one Lloyd trainer --------------------------------------
+# k-means is product quantization with one block (Jégou et al., TPAMI
+# 2011), so every quantizer below runs on the same long form
+# (id, blk, _v, _nrm) and the same four steps: cut (`_blocks`), seed
+# (`_seed_cents`), assign (`_assign`) and train (`_lloyd`).
+
+
+def _blocks(
+    df: DataFrame, id_col: str, vec_col: str, out_id: str, m: int = 1, dim: int = 0
 ) -> DataFrame:
-    """One broadcast row holding every centroid as struct(cid, cv, cn),
-    cid-sorted.  Deterministic training-free quantizer: the first
-    `n_centroids` vectors by id are the centroids."""
-    return F.broadcast(
-        corpus.filter(F.col(id_col) < n_centroids)
-        .select(
-            F.struct(
-                F.col(id_col).cast("long").alias("cid"),
-                F.col(vec_col).cast("array<double>").alias("cv"),
-                l2_norm(F.col(vec_col)).alias("cn"),
-            ).alias("_c")
+    """(out_id, blk, _v, _nrm): each vector cut into `m` contiguous
+    blocks of dim/m components, with their l2 norms.  With m=1 it is the
+    whole vector as block 0, no explode.  `_v`/`_nrm` are materialized
+    columns, so the assign lambda references them once per element — no
+    expression re-inlining."""
+    v = F.col(vec_col).cast("array<double>")
+    if m == 1:
+        return df.select(
+            F.col(id_col).alias(out_id),
+            F.lit(0).alias("blk"),
+            v.alias("_v"),
+            l2_norm(F.col(vec_col)).alias("_nrm"),
         )
-        .agg(F.array_sort(F.collect_list("_c")).alias("_cents"))
+    d = dim // m
+    blocks = F.array(
+        *[F.struct(F.lit(b).alias("blk"), F.slice(v, b * d + 1, d).alias("sv")) for b in range(m)]
     )
+    return df.select(F.col(id_col).alias(out_id), F.explode(blocks).alias("_b")).select(
+        out_id,
+        F.col("_b.blk").alias("blk"),
+        F.col("_b.sv").alias("_v"),
+        l2_norm(F.col("_b.sv")).alias("_nrm"),
+    )
+
+
+def _cents_row(tbl: DataFrame) -> DataFrame:
+    """(blk, cid, cv) table → one broadcast row `_cents` =
+    [struct(blk, cid, cv, cn), ...], sorted by blk, then cid."""
+    return F.broadcast(
+        tbl.select(
+            F.struct(
+                F.col("blk").cast("long").alias("blk"),
+                F.col("cid").cast("long").alias("cid"),
+                F.col("cv").cast("array<double>").alias("cv"),
+                l2_norm(F.col("cv")).alias("cn"),
+            ).alias("_c")
+        ).agg(F.array_sort(F.collect_list("_c")).alias("_cents"))
+    )
+
+
+def _seed_cents(staged: DataFrame, n: int, id_col: str) -> DataFrame:
+    """Lloyd's iteration zero, and the training-free IVF quantizer: the
+    vectors with id < `n` are the centroids of every block."""
+    return _cents_row(
+        staged.filter(F.col(id_col) < n).select(
+            "blk", F.col(id_col).alias("cid"), F.col("_v").alias("cv")
+        )
+    )
+
+
+def _assign(staged: DataFrame, cents_row: DataFrame, id_col: str) -> DataFrame:
+    """(id, blk, cid, _v, _nrm): map-side nearest-centroid argmax by cosine
+    among the row's own block's centroids.  array_max over
+    struct(cos, -cid) picks the highest cosine and, on ties, the lowest
+    centroid id.  The only exchange is the 1-row centroid broadcast."""
+    mine = F.filter(F.col("_cents"), lambda c: c["blk"] == F.col("blk"))
+    scored = F.transform(
+        mine,
+        lambda c: F.struct(
+            (dot(F.col("_v"), c["cv"]) / (F.col("_nrm") * c["cn"])).alias("cos"),
+            (-c["cid"]).alias("negcid"),
+        ),
+    )
+    return (
+        staged.join(cents_row)
+        .withColumn("_best", F.array_max(scored))
+        .select(id_col, "blk", (-F.col("_best")["negcid"]).alias("cid"), "_v", "_nrm")
+    )
+
+
+def _lloyd(staged: DataFrame, k: int, n_iter: int, id_col: str) -> DataFrame:
+    """Distributed Lloyd's over the long form: `n_iter` rounds, returning
+    the trained centroid row (:func:`_cents_row` shape).
+
+    Per round: (1) map-side assign against the broadcast centroids — the
+    corpus NEVER shuffles; (2) centroid update as a per-component mean via
+    posexplode → groupBy(blk, cid, pos) — both shuffles are map-side
+    combinable and carry blocks×k×dim aggregates, not vectors.  Every
+    block trains in the same round, so a round is ONE checkpoint job
+    whatever the block count.
+
+    Engine-portable numerics (the property the oracles check): cosines
+    are sequential double folds (bit-identical to the oracle's
+    list_dot_product), and the mean's numerator sums components rounded
+    to 7 dp as DECIMAL — exact and shuffle-order-independent, where a raw
+    double SUM over shuffled members would differ run-to-run.  The mean
+    itself rounds to 6 dp, so round-N centroids are bit-identical across
+    engines and assignments stay exact integers.  Clusters that lose all
+    members simply vanish (deterministic in both engines).
+
+    Because centroids round to 6 dp, an unchanged centroid-set
+    fingerprint is a Lloyd fixpoint: the remaining rounds would be exact
+    no-ops, so the loop stops there (the fixed-round DuckDB oracles agree
+    because the update is idempotent at the fixpoint).  A fixed-round run
+    that has not converged is still a valid quantizer, so unlike
+    :func:`..ckpt.fixpoint` this loop never raises."""
+    cents_row = _seed_cents(staged, k, id_col)
+    fp = cents = None
+    for _ in range(n_iter):
+        dims = _assign(staged, cents_row, id_col).select(
+            "blk", "cid", F.posexplode("_v").alias("pos", "val")
+        )
+        sums = dims.groupBy("blk", "cid", "pos").agg(
+            F.sum(F.round(F.col("val"), 7).cast("decimal(18,7)")).alias("s"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        cents, new_fp = next_round(
+            sums.withColumn("m", F.round(F.col("s").cast("double") / F.col("n"), 6))
+            .groupBy("blk", "cid")
+            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("_pm"))
+            .select("blk", "cid", F.transform(F.col("_pm"), lambda x: x["m"]).alias("cv")),
+            cents,
+            ("blk", "cid", "cv"),
+        )
+        cents_row = _cents_row(cents)
+        if new_fp == fp:
+            break
+        fp = new_fp
+    return cents_row
 
 
 def ivf_assign_cells(
@@ -183,33 +294,16 @@ def ivf_assign_cells(
     vec_col: str = "embedding",
     cents_row: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, cid) nearest-centroid assignment, map-side (no corpus shuffle).
-
-    array_max over struct(cos, -cid) picks the highest cosine and, on ties,
-    the lowest centroid id.  `_v`/`_nrm` are materialized columns, so the HOF
-    lambda references them once per element — no expression re-inlining.
-    The only exchange in this plan is the BroadcastExchange of the 1-row
-    centroid array (asserted in tests/test_plans.py).
+    """(id, cid, _v, _nrm) nearest-centroid assignment, map-side (no
+    corpus shuffle).  Without `cents_row`, the training-free quantizer
+    (:func:`_seed_cents`).  The only exchange in this plan is the
+    BroadcastExchange of the 1-row centroid array (asserted in
+    tests/test_plans.py).
     """
-    staged = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_nrm"),
-    )
-    scored = F.transform(
-        F.col("_cents"),
-        lambda c: F.struct(
-            (dot(F.col("_v"), c["cv"]) / (F.col("_nrm") * c["cn"])).alias("cos"),
-            (-c["cid"]).alias("negcid"),
-        ),
-    )
+    staged = _blocks(corpus, id_col, vec_col, id_col)
     if cents_row is None:
-        cents_row = centroids_row(corpus, n_centroids, id_col, vec_col)
-    return (
-        staged.join(cents_row)
-        .withColumn("_best", F.array_max(scored))
-        .select(id_col, (-F.col("_best")["negcid"]).alias("cid"), "_v", "_nrm")
-    )
+        cents_row = _seed_cents(staged, n_centroids, id_col)
+    return _assign(staged, cents_row, id_col).drop("blk")
 
 
 def ivf_topk(
@@ -233,50 +327,41 @@ def ivf_topk(
 
       - centroids broadcast to every executor; cell assignment is a
         map-side argmax over the corpus scan, NO shuffle of corpus vectors;
-      - the candidate join shuffles on the cell id — bounded fan-out
-        (corpus_size * nprobe / n_centroids candidates per query);
+      - the probes (queries × nprobe rows, small by construction) rank
+        their cells in a window on the query side only, and are
+        hint-broadcast into the candidate join — the corpus never
+        shuffles or broadcasts for it.  Without the hint AQE picked
+        either side from call to call at small scale, and the job count
+        drifted with it;
       - exact cosine + row_number window verify within the probed cells.
 
     Ties (equal cosine) break on the lower centroid/neighbor id in both the
     assignment and the ranking, so results are exactly reproducible.
     """
-    cent_row = (
-        cents_row
-        if cents_row is not None
-        else centroids_row(corpus, n_centroids, id_col, vec_col)
-    )
-
-    def probe_cells(df: DataFrame, out_id: str, rank_cap: int) -> DataFrame:
-        """Top-`rank_cap` cells per row — window ranking on the (tiny) query
-        side only; the corpus side uses assign_cells_mapside."""
-        scored = df.join(cent_row).select(
-            out_id,
-            "_v",
-            "_nrm",
-            F.explode("_cents").alias("_c"),
-        ).withColumn(
-            "_ccos",
-            dot(F.col("_v"), F.col("_c")["cv"]) / (F.col("_nrm") * F.col("_c")["cn"]),
-        )
-        w = Window.partitionBy(out_id).orderBy(F.desc("_ccos"), F.asc(F.col("_c")["cid"]))
-        return (
-            scored.withColumn("_crank", F.row_number().over(w))
-            .filter(F.col("_crank") <= rank_cap)
-            .select(out_id, F.col("_c")["cid"].alias("cid"), "_v", "_nrm")
-        )
-
-    staged_q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_nrm"),
-    )
+    if cents_row is None:
+        cents_row = _seed_cents(_blocks(corpus, id_col, vec_col, id_col), n_centroids, id_col)
     assigned = ivf_assign_cells(
-        corpus, n_centroids, id_col, vec_col, cents_row=cent_row
+        corpus, id_col=id_col, vec_col=vec_col, cents_row=cents_row
     ).withColumnRenamed(id_col, "neighbor_id")
-    probes = probe_cells(staged_q, "query_id", nprobe).select(
-        "query_id", "cid", F.col("_v").alias("_qv"), F.col("_nrm").alias("_qn")
+    ccos = dot(F.col("_v"), F.col("_c")["cv"]) / (F.col("_nrm") * F.col("_c")["cn"])
+    cw = Window.partitionBy("query_id").orderBy(F.desc("_ccos"), F.asc(F.col("_c")["cid"]))
+    probes = (
+        _blocks(queries, id_col, vec_col, "query_id")
+        .join(cents_row)
+        .select("query_id", "_v", "_nrm", F.explode("_cents").alias("_c"))
+        .withColumn("_ccos", ccos)
+        .withColumn("_crank", F.row_number().over(cw))
+        .filter(F.col("_crank") <= nprobe)
+        .select(
+            "query_id",
+            F.col("_c")["cid"].alias("cid"),
+            F.col("_v").alias("_qv"),
+            F.col("_nrm").alias("_qn"),
+        )
     )
-    cand = assigned.join(probes, "cid").filter(F.col("neighbor_id") != F.col("query_id"))
+    cand = assigned.join(F.broadcast(probes), "cid").filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
     cos = dot(F.col("_qv"), F.col("_v")) / (F.col("_qn") * F.col("_nrm"))
     w = Window.partitionBy("query_id").orderBy(F.desc("_cos"), F.asc("neighbor_id"))
     return (
@@ -287,37 +372,6 @@ def ivf_topk(
     )
 
 
-def _centroid_row_from(cent_table: DataFrame) -> DataFrame:
-    """(cid, cv) table → one broadcast row [struct(cid, cv, cn), ...],
-    cid-sorted (same shape `ivf_assign_cells` consumes)."""
-    return F.broadcast(
-        cent_table.select(
-            F.struct(
-                F.col("cid").cast("long").alias("cid"),
-                F.col("cv").cast("array<double>").alias("cv"),
-                l2_norm(F.col("cv")).alias("cn"),
-            ).alias("_c")
-        ).agg(F.array_sort(F.collect_list("_c")).alias("_cents"))
-    )
-
-
-def _assign_to_centroids(staged: DataFrame, cents_row: DataFrame, id_col: str) -> DataFrame:
-    """Map-side nearest-centroid argmax by cosine (ties → lowest cid);
-    the only exchange is the 1-row centroid broadcast."""
-    scored = F.transform(
-        F.col("_cents"),
-        lambda c: F.struct(
-            (dot(F.col("_v"), c["cv"]) / (F.col("_nrm") * c["cn"])).alias("cos"),
-            (-c["cid"]).alias("negcid"),
-        ),
-    )
-    return (
-        staged.join(cents_row)
-        .withColumn("_best", F.array_max(scored))
-        .select(id_col, (-F.col("_best")["negcid"]).alias("cid"), "_v", "_nrm")
-    )
-
-
 def kmeans_assign(
     corpus: DataFrame,
     k: int = 8,
@@ -325,33 +379,13 @@ def kmeans_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Distributed spherical k-means (Lloyd's): (id, cid) after `n_iter`
-    update rounds — the trained upgrade of the IVF coarse quantizer
-    (`centroids_row` is iteration zero of exactly this loop).
-
-    Per round: (1) map-side cosine argmax against the broadcast centroids
-    — the corpus NEVER shuffles; (2) centroid update as a per-dimension
-    mean via posexplode → groupBy(cid, dim) — both shuffles are map-side
-    combinable and carry k×dim aggregates, not vectors.  The new
-    centroids collapse to one broadcast row for the next round; the k-row
-    centroid table is localCheckpointed per round so the plan stays flat.
-
-    Engine-portable numerics (the property the oracle checks): cosines
-    are sequential double folds (bit-identical to the oracle's
-    list_dot_product), and the mean's numerator sums components rounded
-    to 7 dp as DECIMAL — exact and shuffle-order-independent, where a raw
-    double SUM over shuffled members would differ run-to-run.  The mean
-    itself rounds to 6 dp, so round-N centroids are bit-identical across
-    engines and assignments stay exact integers.  Clusters that lose all
-    members simply vanish (deterministic in both engines).
-    """
-    staged = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_nrm"),
-    )
-    cents_row = kmeans_centroids_row(corpus, k, n_iter, id_col, vec_col)
-    return _assign_to_centroids(staged, cents_row, id_col).select(id_col, "cid")
+    """Distributed spherical k-means (Lloyd's, :func:`_lloyd` with one
+    block): (id, cid) after `n_iter` update rounds — the trained upgrade
+    of the IVF coarse quantizer, whose training-free centroids are
+    iteration zero of exactly this loop."""
+    staged = _blocks(corpus, id_col, vec_col, id_col)
+    cents_row = _lloyd(staged, k, n_iter, id_col)
+    return _assign(staged, cents_row, id_col).select(id_col, "cid")
 
 
 def kmeans_centroids_row(
@@ -363,46 +397,8 @@ def kmeans_centroids_row(
 ) -> DataFrame:
     """Train the quantizer: `n_iter` Lloyd rounds, returning the 1-row
     broadcast centroid array in the shape `ivf_topk(cents_row=...)` and
-    `ivf_assign_cells` consume — compose for trained-quantizer ANN.
-
-    Centroids round to 6 dp, so an unchanged centroid-set fingerprint is
-    a Lloyd fixpoint and the remaining rounds would be exact no-ops —
-    skipping them cannot change the result (the fixed-round DuckDB oracle
-    agrees because the update is idempotent at the fixpoint)."""
-    staged = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_nrm"),
-    )
-    cents_row = centroids_row(corpus, k, id_col, vec_col)
-    fp = cents = None
-    for _ in range(n_iter):
-        assigned = _assign_to_centroids(staged, cents_row, id_col)
-        dims = assigned.select("cid", F.posexplode("_v").alias("pos", "val"))
-        sums = dims.groupBy("cid", "pos").agg(
-            F.sum(F.round(F.col("val"), 7).cast("decimal(18,7)")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        cents, new_fp = next_round(
-            sums.withColumn("m", F.round(F.col("s").cast("double") / F.col("n"), 6))
-            .groupBy("cid")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("pos"), F.col("m")))
-                ).alias("_pm")
-            )
-            .select(
-                "cid",
-                F.transform(F.col("_pm"), lambda x: x["m"]).alias("cv"),
-            ),
-            cents,
-            ("cid", "cv"),
-        )
-        cents_row = _centroid_row_from(cents)
-        if new_fp == fp:
-            break
-        fp = new_fp
-    return cents_row
+    `ivf_assign_cells` consume — compose for trained-quantizer ANN."""
+    return _lloyd(_blocks(corpus, id_col, vec_col, id_col), k, n_iter, id_col)
 
 
 def semdedup(
@@ -428,12 +424,8 @@ def semdedup(
     (:func:`srp_near_dup_pairs`) instead of the plain self-join —
     cluster-then-LSH, the published SemDeDup scale recipe.
     """
-    staged = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_nrm"),
-    )
-    cents_row = kmeans_centroids_row(corpus, k, n_iter, id_col, vec_col)
+    staged = _blocks(corpus, id_col, vec_col, id_col)
+    cents_row = _lloyd(staged, k, n_iter, id_col)
     # NOT checkpointed, deliberately: the assignment feeds both self-join
     # arms and the final keep join, but both arms shuffle by cid from the
     # identical subplan, so Spark reuses one exchange — the corpus is
@@ -441,7 +433,7 @@ def semdedup(
     # k map-side dot products.  An eager materialization of the vector
     # arrays measured 45% SLOWER at sf0.1 (the deserialized array write
     # costs more than the re-scan it saves) — see SCALE.md r10.
-    assigned = _assign_to_centroids(staged, cents_row, id_col)
+    assigned = _assign(staged, cents_row, id_col)
     a = assigned.select(
         F.col(id_col).alias("id_a"), "cid",
         F.col("_v").alias("va"), F.col("_nrm").alias("na"),
@@ -489,101 +481,21 @@ def pq_topk(
     floats (16× compression here); search touches codes + a broadcast
     m×k LUT per query, so the corpus is scanned once with map-side
     lookups and the only corpus shuffle is the final per-query top-k.
-    ALL m codebooks train in ONE fused Lloyd pass: the corpus explodes
-    map-side into (id, block, sub-vector) rows and block rides the
-    grouping keys, so a round costs one job regardless of m (m separate
-    trainings would pay m sequential checkpoint jobs — measured 4×
-    slower locally, and m driver round-trips at scale).
+    ALL m codebooks train in ONE fused Lloyd pass (:func:`_lloyd` on the
+    m-block long form — k-means is the m=1 case), so a round costs one
+    job regardless of m (m separate trainings would pay m sequential
+    checkpoint jobs — measured 4× slower locally, and m driver
+    round-trips at scale), and training stops early at a fixpoint.
 
-    Engine-portable numerics: codebooks use the same decimal-exact mean
-    pipeline as kmeans (bit-identical across engines), LUT entries round
+    Engine-portable numerics: codebooks use the decimal-exact mean of
+    :func:`_lloyd` (bit-identical across engines), LUT entries round
     to 7 dp and sum as DECIMAL (order-independent), ties rank by
     neighbor_id — so the oracle reproduces ranks exactly.
     Returns (query_id, neighbor_id, rank), rank <= topk, self excluded.
     """
-    d = dim // m
-
-    def long_form(df: DataFrame, out_id: str) -> DataFrame:
-        blocks = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("blk"),
-                    F.slice(F.col(vec_col).cast("array<double>"), b * d + 1, d).alias(
-                        "sv"
-                    ),
-                )
-                for b in range(m)
-            ]
-        )
-        return df.select(F.col(id_col).alias(out_id), F.explode(blocks).alias("_b")).select(
-            out_id,
-            F.col("_b.blk").alias("blk"),
-            F.col("_b.sv").alias("_v"),
-            l2_norm(F.col("_b.sv")).alias("_nrm"),
-        )
-
-    corpus_long = long_form(corpus, "vid")
-
-    def cents_row_from(tbl: DataFrame) -> DataFrame:
-        # one broadcast row of every (blk, cid) centroid, blk/cid-sorted
-        return F.broadcast(
-            tbl.select(
-                F.struct(
-                    F.col("blk").cast("long").alias("blk"),
-                    F.col("cid").cast("long").alias("cid"),
-                    F.col("cv").cast("array<double>").alias("cv"),
-                    l2_norm(F.col("cv")).alias("cn"),
-                ).alias("_c")
-            ).agg(F.array_sort(F.collect_list("_c")).alias("_cents"))
-        )
-
-    def assign(df_long: DataFrame, cents_row: DataFrame, out_id: str) -> DataFrame:
-        mine = F.filter(F.col("_cents"), lambda c: c["blk"] == F.col("blk"))
-        scored = F.transform(
-            mine,
-            lambda c: F.struct(
-                (dot(F.col("_v"), c["cv"]) / (F.col("_nrm") * c["cn"])).alias("cos"),
-                (-c["cid"]).alias("negcid"),
-            ),
-        )
-        return (
-            df_long.join(cents_row)
-            .withColumn("_best", F.array_max(scored))
-            .select(
-                out_id, "blk", (-F.col("_best")["negcid"]).alias("cid"), "_v", "_nrm"
-            )
-        )
-
-    cents = cents_row_from(
-        corpus_long.filter(F.col("vid") < k).select(
-            "blk", F.col("vid").alias("cid"), F.col("_v").alias("cv")
-        )
-    )
-    cents_cp = None
-    for _ in range(n_iter):
-        assigned = assign(corpus_long, cents, "vid")
-        dims = assigned.select("blk", "cid", F.posexplode("_v").alias("pos", "val"))
-        sums = dims.groupBy("blk", "cid", "pos").agg(
-            F.sum(F.round(F.col("val"), 7).cast("decimal(18,7)")).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        # ONE checkpoint job per round for all m blocks
-        cents_cp = next_round(
-            sums.withColumn("mv", F.round(F.col("s").cast("double") / F.col("n"), 6))
-            .groupBy("blk", "cid")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("pos"), F.col("mv")))
-                ).alias("_pm")
-            )
-            .select(
-                "blk", "cid", F.transform(F.col("_pm"), lambda x: x["mv"]).alias("cv")
-            ),
-            cents_cp,
-        )
-        cents = cents_row_from(cents_cp)
-
-    codes = assign(corpus_long, cents, "vid").select(
+    corpus_long = _blocks(corpus, id_col, vec_col, "vid", m, dim)
+    cents = _lloyd(corpus_long, k, n_iter, "vid")
+    codes = _assign(corpus_long, cents, "vid").select(
         F.col("vid"), "blk", F.col("cid").alias("code")
     )
     cents_tbl = cents.select(F.explode("_cents").alias("_c")).select(
@@ -592,7 +504,7 @@ def pq_topk(
         F.col("_c.cv").alias("cv"),
     )
     lut = (
-        long_form(queries, "query_id")
+        _blocks(queries, id_col, vec_col, "query_id", m, dim)
         .join(F.broadcast(cents_tbl), "blk")
         .select(
             "query_id",

@@ -292,7 +292,7 @@ def test_pq_search_joins_codes_not_vectors(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def _plan_no_autobroadcast(spark, name: str) -> str:
+def _plan_no_autobroadcast(spark, name: str, mode: str = "formatted") -> str:
     """Plan with auto-broadcast off: at test SF the optimizer broadcasts
     everything (correctly — the tables are tiny); disabling the threshold
     exposes any HARD-CODED broadcast() hint, which is what the scale
@@ -301,9 +301,21 @@ def _plan_no_autobroadcast(spark, name: str) -> str:
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        return _plan(spark, name, "formatted")
+        return _plan(spark, name, mode)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_ivf_candidate_join_broadcasts_the_probes(spark):
+    """The IVF candidate join must broadcast its probe side (queries ×
+    nprobe rows, small by construction) by hint: without it AQE chose the
+    probes or the whole assigned corpus as the build side from call to
+    call, and the query's job count drifted with the choice."""
+    plan = _plan_no_autobroadcast(spark, "q_ivf_topk", "extended")
+    phys = plan.split("== Physical Plan ==")[-1]
+    assert re.search(r"BroadcastHashJoin \[cid#\d+L?\], \[cid#\d+L?\], Inner, BuildRight", phys), (
+        "IVF candidate join does not broadcast its probe side"
+    )
 
 
 def test_dup_span_mark_join_is_not_hinted_broadcast(spark):

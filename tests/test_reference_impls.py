@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 
 def test_asof_join_matches_pandas_merge_asof(spark):
@@ -123,6 +124,27 @@ def test_label_propagation_matches_union_find_on_chain_clique_and_random(spark):
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         lp = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
         assert lp == _union_find_min_labels(edges), f"divergence on {edges[:5]}..."
+
+
+@pytest.mark.parametrize(
+    "edges, null_ends",
+    [
+        ([(1, 2)], [3, 4]),  # converges before the pointer-jump rounds
+        ([(i, i + 1) for i in range(20)], [30, 40]),  # 21-node chain jumps
+    ],
+    ids=["plain_rounds", "jump_rounds"],
+)
+def test_null_endpoint_is_no_node(spark, edges, null_ends):
+    """A pair with a null endpoint links nothing: no null id in the
+    result, in plain and in pointer-jump rounds alike, and its non-null
+    endpoint stays a singleton."""
+    from etl_scripts_spark.operators.dedup import connected_components
+
+    rows = edges + [(e, None) for e in null_ends]
+    pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+    got = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
+    assert None not in got
+    assert got == {**_union_find_min_labels(edges), **{e: e for e in null_ends}}
 
 
 def test_asof_join_sliced_matches_plain_under_skew(spark):

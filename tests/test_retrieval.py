@@ -1,7 +1,8 @@
 """Batch BM25 retrieval (corpus.batch_retrieval): agreement with the
 single-query bm25_scores law on matched docs, top-k cut with
 deterministic tie handling, map-side query-term pruning, and
-partitioning-independence of the decimal score."""
+partitioning-independence of the decimal score.  Also the early stop of
+product-quantization training (similarity.pq_topk)."""
 
 from __future__ import annotations
 
@@ -119,3 +120,38 @@ def test_batch_retrieval_duckdb_oracle_parity(spark):
         ).fetchall()
     )
     assert got == want
+
+
+def test_pq_training_stops_at_its_fixpoint(spark, monkeypatch):
+    """PQ codebooks train in the shared Lloyd loop, so training stops once
+    the centroid fingerprint repeats: on two well-separated clusters it
+    checkpoints fewer rounds than asked, and returns exactly the rows of
+    a run asked for just the rounds it took."""
+    from etl_scripts_spark.operators import similarity
+
+    rounds = []
+    real_next_round = similarity.next_round
+
+    def counting(*args, **kwargs):
+        rounds.append(1)
+        return real_next_round(*args, **kwargs)
+
+    monkeypatch.setattr(similarity, "next_round", counting)
+    a, b = [1.0, 0.0, 1.0, 0.0], [0.0, 1.0, 0.0, 1.0]
+    # even ids near (a | b), odd ids near (b | a): seeds 0 and 1 fall in
+    # different clusters in both blocks
+    vecs = [
+        (i, [x + 0.01 * ((i * 7 + j) % 5) for j, x in enumerate(a + b if i % 2 == 0 else b + a)])
+        for i in range(12)
+    ]
+    corpus = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    queries = corpus.filter("vec_id < 3")
+
+    def run(n_iter):
+        rounds.clear()
+        out = similarity.pq_topk(corpus, queries, m=2, k=2, n_iter=n_iter, topk=4, dim=8)
+        return sorted(tuple(r) for r in out.collect()), len(rounds)
+
+    rows, took = run(6)
+    assert took < 6, "PQ training ran every round past its fixpoint"
+    assert run(took) == (rows, took)
