@@ -72,8 +72,8 @@ def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _scratch_dir(kind: str, sf_dir: str, wipe: bool = False) -> str:
     """Per-(query-kind, input-dir) scratch root for the side-effecting
-    queries (skipping/MV/vacuum), anchored to this module's checkout —
-    the repo is not guaranteed to live at /root/repo on the driver box.
+    queries (skipping, the stream folds, vacuum), anchored to this
+    module's checkout, wherever that lives.
     Keyed by the FULL normalized sf_dir (basename + an 8-hex path
     digest), so two data dirs sharing a basename can never share — and
     wipe — each other's state.  `wipe` clears the previous call's state
@@ -3364,15 +3364,21 @@ def q_stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming KMV sketch maintenance: the per-event-type distinct-user
-    sketch lives in the state store (k hashes per key — state stays bounded
-    at any stream volume) and every micro-batch merges in algebraically.
-    After the AvailableNow drain the state equals the batch KMV over all
-    events — the oracle recomputes exactly that.  The standing-index story
-    of operators/sketch.py, run live.  See streaming/stateful.py."""
-    from etl_scripts_spark.streaming.stateful import stateful_kmv_available_now
+    """Streaming KMV sketch maintenance (streaming/mv
+    .stateful_kmv_available_now): the per-event-type distinct-user
+    bottom-k sketch is a committed table (k digests per key — state stays
+    bounded at any stream volume) and every micro-batch merges in
+    algebraically through the batch operator sketch.bottom_k_hashes.
+    After the AvailableNow drain the sketch equals the batch KMV over all
+    events — the oracle recomputes exactly that.  Scratch state is wiped
+    per call."""
+    from etl_scripts_spark.streaming.mv import stateful_kmv_available_now
 
-    return stateful_kmv_available_now(spark, f"{sf_dir}/events.parquet")
+    root = _scratch_dir("kmv", sf_dir, wipe=True)
+    out = stateful_kmv_available_now(spark, f"{sf_dir}/events.parquet", root)
+    # pin the (event-types-sized) result off the scratch files: the next
+    # call wipes them
+    return out.localCheckpoint(eager=True)
 
 
 @_register(
@@ -8011,21 +8017,23 @@ def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     + ")",
 )
 def q_stream_rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming anomaly alerts (streaming/stateful
+    """Streaming anomaly alerts (streaming/mv
     .stateful_rolling_zscore_available_now): the batch rolling z-score
-    run LIVE — per-user ring buffer of the trailing 12 observations in
-    the state store, cents and the 9-dp round as Catalyst projections
-    around the stateful stage so batch and streaming share Spark's own
-    arithmetic.  The oracle is the BATCH law (rolling_zscore_sql) over
-    the same events — drain == batch row-for-row is the contract."""
-    from etl_scripts_spark.streaming.stateful import (
-        stateful_rolling_zscore_available_now,
-    )
+    run LIVE — each micro-batch is scored by reports/anomaly
+    .rolling_zscore against each user's trailing 12 observations carried
+    in the committed state.  The oracle is the BATCH law
+    (rolling_zscore_sql) over the same events — drain == batch
+    row-for-row is the contract.  Scratch state is wiped per call."""
+    from etl_scripts_spark.streaming.mv import stateful_rolling_zscore_available_now
 
+    root = _scratch_dir("rolling_zscore", sf_dir, wipe=True)
     out = stateful_rolling_zscore_available_now(
-        spark, f"{sf_dir}/events.parquet", window=12, min_periods=4
+        spark, f"{sf_dir}/events.parquet", root, window=12, min_periods=4
     )
-    return out.withColumn("is_anomaly", F.col("is_anomaly").cast("int"))
+    # pin the result off the scratch files: the next call wipes them
+    return out.withColumn("is_anomaly", F.col("is_anomaly").cast("int")).localCheckpoint(
+        eager=True
+    )
 
 
 @_register(
@@ -8221,9 +8229,12 @@ def entry(spark: SparkSession) -> DataFrame:
 # — a regression in a long-green query can hide for at most that long.
 
 #: Head of the rotation: queries whose code changed since their last
-#: green CORRECTNESS row.  First the seven vector-search consumers, whose
-#: quantizers now share one Lloyd trainer (and IVF pins its candidate
-#: join's build side), then the nine connected-components consumers,
+#: green CORRECTNESS row.  First the two stream folds that left Python
+#: state (KMV, rolling z-score), the batch rolling z-score, which now
+#: evaluates its guard once per row, and the two queries whose committed
+#: snapshots are read without a schema-inference job; then the seven
+#: vector-search consumers, whose quantizers now share one Lloyd trainer
+#: (and IVF pins its candidate join's build side), then the nine connected-components consumers,
 #: whose label propagation pointer-jumps from round 6 and drops null
 #: endpoints every round, then the two streaming sketches that became the
 #: batch sketch operators drained in complete mode, then the nine
@@ -8233,6 +8244,11 @@ def entry(spark: SparkSession) -> DataFrame:
 #: two streaming queries whose keyed state became native aggregations.
 #: Everything else rides the least-recently-green order.
 _CHANGED_THIS_ROUND = (
+    "q_stream_kmv",
+    "q_stream_rolling_zscore",
+    "q_rolling_zscore",
+    "q_stream_mv_drain",
+    "q_vacuum_report",
     "q_kmeans_assign",
     "q_ivf_trained",
     "q_semdedup",

@@ -199,8 +199,9 @@ HEADLINE = [
     # collected — bench times df.count(), the decided rows-only form),
     # incremental batch-vs-corpus dedup, benchmark decontamination,
     # exact embedding covariance, multi-source BFS, k-core peel,
-    # compaction bin-packing, the two AvailableNow stateful streaming
-    # twins (rolling z-score, HLL registers), and G.711 µ-law decode
+    # compaction bin-packing, the two AvailableNow streaming twins
+    # (rolling z-score folded per micro-batch, HLL registers in the
+    # state store), and G.711 µ-law decode
     "q_hll_join_estimate",
     "q_attribution",
     "q_setsim_pairs",

@@ -88,10 +88,14 @@ def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
     arrow type: pyarrow reports INT96 as ``timestamp[ns]``, which Spark
     reads as TIMESTAMP.  Every field is nullable, as inference makes it.
 
+    A file Spark wrote carries its schema in the footer key
+    ``org.apache.spark.sql.parquet.row.metadata``, which Spark's inference
+    reads whatever the confs say; that schema is returned, made nullable.
+
     Returns None, so that Spark infers (or raises its own error), for
     anything but a plain local file (a remote filesystem is never opened),
-    an unreadable footer, a footer carrying Spark's own schema, and any type
-    outside the allow-list.
+    an unreadable footer or Spark schema, and any type outside the
+    allow-list.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -112,8 +116,14 @@ def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
         arrow = pf.schema_arrow
     except Exception:
         return None
-    if b"org.apache.spark.sql.parquet.row.metadata" in (pf.metadata.metadata or {}):
-        return None
+    spark_schema = (pf.metadata.metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata"
+    )
+    if spark_schema is not None:
+        try:
+            return _nullable(T.StructType.fromJson(json.loads(spark_schema)))
+        except (ValueError, KeyError, TypeError):
+            return None
 
     def on(key: str) -> bool:
         return spark.conf.get(f"spark.sql.{key}").lower() == "true"
@@ -154,6 +164,20 @@ def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
             return None
         fields.append(T.StructField(f.name, dt, nullable=True))
     return T.StructType(fields)
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, array element and map value nullable — the
+    schema a parquet read gives whatever the file declares."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -331,7 +331,7 @@ def hopping_rollup(
     aggs = [F.count(F.lit(1)).alias("n_events")]
     if value_col is not None:
         # floor(v·100 + 0.5): the SHARED engine-portable cents law
-        # (streaming/stateful.py uses the same expression) — F.round is
+        # (streaming/mv.py uses the same expression) — F.round is
         # half-away-from-zero and disagrees on negative halves
         aggs.append(
             F.sum(

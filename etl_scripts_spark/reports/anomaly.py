@@ -62,23 +62,29 @@ def rolling_zscore(
     if not 2 <= min_periods <= window:
         raise ValueError("rolling_zscore: need 2 <= min_periods <= window")
     require_integral_columns(df, [value_col], "rolling_zscore")
-    clash = {"_rz_n", "_rz_s1", "_rz_s2"} & set(df.columns)
+    internals = {"_rz_n", "_rz_s1", "_rz_s2", "_rz_p", "_rz_g", "_rz_z"}
+    clash = internals & set(df.columns)
     if clash:
         raise ValueError(f"rolling_zscore: columns collide with internals: {sorted(clash)}")
 
     ob = Window.partitionBy(by).orderBy(order_col)
     frame = ob.rowsBetween(-window, -1)
-    # peer group of the current order value: >1 ⇒ duplicate (by, order) key.
-    # rangeBetween(0,0) = RANGE CURRENT ROW — rides the SAME sort/exchange.
-    peers = F.count(F.lit(1)).over(ob.rangeBetween(0, 0))
-    bad = F.col(order_col).isNull() | (peers > 1)
     v = F.col(value_col).cast("decimal(38,0)")
-    n = F.count(v).over(frame)
-    s1 = F.sum(v).over(frame)
     # value² ≤ (2^63)² < 10^38 — a single square always fits DECIMAL(38,0);
     # the SUM of squares can overflow (→ NULL non-ANSI / throw ANSI), which
     # the s2-null-with-rows guard below turns into a named raise either way
-    s2 = F.sum(v * v).over(frame)
+    moments = df.select(
+        *df.columns,
+        F.count(v).over(frame).alias("_rz_n"),
+        F.sum(v).over(frame).alias("_rz_s1"),
+        F.sum(v * v).over(frame).alias("_rz_s2"),
+        # peer group of the current order value: >1 ⇒ duplicate (by, order)
+        # key.  rangeBetween(0,0) = RANGE CURRENT ROW — rides the SAME
+        # sort/exchange.
+        F.count(F.lit(1)).over(ob.rangeBetween(0, 0)).alias("_rz_p"),
+    )
+    n, s1, s2 = F.col("_rz_n"), F.col("_rz_s1"), F.col("_rz_s2")
+    bad = F.col(order_col).isNull() | (F.col("_rz_p") > 1)
     overflow = (n > 0) & s2.isNull()
     nd = n.cast("double")
     mean = s1.cast("double") / nd
@@ -86,10 +92,6 @@ def rolling_zscore(
     # IEEE ops on identical inputs → identical doubles in both engines
     var = (s2.cast("double") - s1.cast("double") * s1.cast("double") / nd) / (nd - 1)
     z = F.round((F.col(value_col).cast("double") - mean) / F.sqrt(var), 9)
-    # the guard chain is embedded in EVERY output column (not just roll_n):
-    # a caller selecting only z / is_anomaly would otherwise let Catalyst
-    # prune the raising expression away with the column that carried it,
-    # silently disabling the dup/NULL-order and overflow guards
     guard = F.when(
         bad,
         F.raise_error(
@@ -98,14 +100,24 @@ def rolling_zscore(
     ).when(
         overflow, F.raise_error(F.lit("rolling_zscore: sum of squares overflowed"))
     )
-    z_out = F.coalesce(
-        guard.cast("double"), F.when((n >= min_periods) & (var > 0), z)
-    )
-    return df.select(
+    # the guard and z each in their own column, so each is evaluated once
+    # per row; the guard still reaches EVERY output column (is_anomaly via
+    # z): a caller selecting only z / is_anomaly would otherwise let
+    # Catalyst prune the raising expression away with the column that
+    # carried it, silently disabling the dup/NULL-order and overflow guards
+    scored = moments.select(
         *df.columns,
-        F.coalesce(guard.cast("bigint"), n).alias("roll_n"),
-        z_out.alias("z"),
-        F.when(z_out.isNotNull(), F.abs(z_out) > F.lit(z_thresh)).alias("is_anomaly"),
+        "_rz_n",
+        guard.alias("_rz_g"),
+        F.when((n >= min_periods) & (var > 0), z).alias("_rz_z"),
+    ).select(
+        *df.columns,
+        F.coalesce(F.col("_rz_g").cast("bigint"), n).alias("roll_n"),
+        F.coalesce(F.col("_rz_g").cast("double"), F.col("_rz_z")).alias("z"),
+    )
+    zc = F.col("z")
+    return scored.select(
+        "*", F.when(zc.isNotNull(), F.abs(zc) > F.lit(z_thresh)).alias("is_anomaly")
     )
 
 

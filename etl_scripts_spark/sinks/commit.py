@@ -18,6 +18,7 @@ import uuid
 
 from pyspark.sql import DataFrame
 
+from ..catalog import _footer_schema
 from .files import staged_write
 
 
@@ -223,7 +224,15 @@ def read_version(spark, root: str, version: int | None = None):
     if version == 0:
         return None
     with open(os.path.join(_versions_dir(root), f"v{version}.json")) as fh:
-        return spark.read.parquet(json.load(fh)["data"])
+        data = json.load(fh)["data"]
+    # the schema from one part file's footer: no inference job per read
+    try:
+        part = min(n for n in os.listdir(data) if n.startswith("part-"))
+    except (OSError, ValueError):  # not a local directory, or no part file
+        schema = None
+    else:
+        schema = _footer_schema(spark, os.path.join(data, part))
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(data)
 
 
 def optimistic_upsert(spark, root: str, updates: DataFrame, keys: list[str], max_retries: int = 5) -> int:

@@ -10,8 +10,9 @@ Every operator here is a native stateful operator — windowed, session and
 keyed aggregations, the interval join, and the HyperLogLog and count-min
 sketches (the batch operators of :mod:`..operators.sketch` run on the
 stream: a register is a max, a counter a count) — whose state stays in
-the JVM's state store; keyed state with no built-in aggregate lives in
-:mod:`.stateful`.
+the JVM's state store.  Keyed state with no built-in aggregate (the KMV
+bottom-k, the rolling z-score's trailing frame) is a batch operator
+folded per micro-batch on the CAS manifest: :mod:`.mv`.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketch import cms_build, hll_registers
-from .tuning import NATIVE_STATE_KEYS_PER_SHARD, state_shuffle_partitions
+from .tuning import state_shuffle_partitions
 
 _name_counter = itertools.count()
 
@@ -44,17 +45,12 @@ def _events_stream(spark: SparkSession, events_parquet: str) -> DataFrame:
 
 
 def _drain(
-    spark: SparkSession,
-    out: DataFrame,
-    approx_keys: int,
-    mode: str = "complete",
-    keys_per_shard: int = NATIVE_STATE_KEYS_PER_SHARD,
+    spark: SparkSession, out: DataFrame, approx_keys: int, mode: str = "complete"
 ) -> DataFrame:
     """Shared AvailableNow → memory-sink drain with the state shard
-    count sized to the key cardinality (see :mod:`.tuning`) — by default
-    for native stateful operators, so the µs-per-key NATIVE law applies."""
+    count sized to the key cardinality (see :mod:`.tuning`)."""
     name = f"etl_stream_out_{next(_name_counter)}"
-    with state_shuffle_partitions(spark, approx_keys, keys_per_shard=keys_per_shard):
+    with state_shuffle_partitions(spark, approx_keys):
         query = (
             out.writeStream.outputMode(mode)
             .format("memory")

@@ -102,6 +102,18 @@ def test_single_exchange_plan(spark):
     assert plan.count("- Exchange (") == 1, plan[:400]
 
 
+def test_guard_and_z_are_evaluated_once_per_row(spark):
+    """The guard and z each live in one column that the output columns
+    read: the optimized plan holds the dup-guard message once and one
+    SQRT, not one copy per output column that references them."""
+    df = spark.createDataFrame([("a", t, t) for t in range(10)], SCHEMA)
+    plan = (
+        rolling_zscore(df, "k", "ts", "v")._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert plan.count("NULL or duplicate (key, order)") == 1, plan
+    assert plan.count("SQRT(") == 1, plan
+
+
 def test_duckdb_parity_seeded_series(spark):
     import duckdb
 

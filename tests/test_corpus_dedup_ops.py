@@ -280,31 +280,6 @@ def test_bpe_rounds_beyond_learnable_merges_keep_segmentation(spark):
     assert [(m.merge_rank, m.pair, m.merged) for m in merges] == [(1, "a b", "ab")]
 
 
-def test_kmv_finalize_across_micro_batches(spark):
-    """An unsaturated early emission holds kth = max of its small set,
-    which can be SMALLER than the saturated final kth; finalization must
-    pick the saturated state, not min(kth).  Also: among saturated
-    emissions, the latest (smallest kth) wins."""
-    from etl_scripts_spark.streaming.stateful import _KMV_K, _kmv_finalize
-
-    early_kth = "2" + "0" * 31   # small hash: max of a tiny early set
-    sat_kth = "8" + "0" * 31     # true 32nd-smallest after saturation
-    later_kth = "7" + "0" * 31   # kth after even more data merged
-    rows = [
-        ("A", 20, early_kth),
-        ("A", _KMV_K, sat_kth),
-        ("A", _KMV_K, later_kth),
-        ("B", 5, early_kth),
-    ]
-    out = spark.createDataFrame(
-        rows, "event_type string, sketch_n long, kth_hash string"
-    )
-    got = {r.event_type: r for r in _kmv_finalize(out).collect()}
-    want_a = round(31.0 * (1 << 48) / int(later_kth[:12], 16), 4)
-    assert got["A"].sketch_n == _KMV_K and got["A"].est_distinct == want_a
-    assert got["B"].sketch_n == 5 and got["B"].est_distinct == 5.0
-
-
 def test_kmv_overlap_estimates_jaccard(spark):
     """Identical value sets estimate Jaccard 1.0, disjoint sets 0.0 (the
     pair row still exists — unlike exact overlap, sketches compare every

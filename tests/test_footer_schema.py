@@ -131,15 +131,54 @@ def test_footer_schema_follows_the_binary_and_int96_confs(spark, tmp_path):
             spark.conf.set(key, saved)
 
 
-def test_footer_carrying_sparks_own_schema_is_left_to_spark(spark, tmp_path):
+def _spark_written(spark, dest):
+    """A Spark-written frame over the types a footer's Spark schema must
+    carry: nested, nullable and zone-less ones included."""
+    spark.sql(
+        "SELECT CAST(1 AS BIGINT) AS b, TIMESTAMP'2024-01-01 00:00:00' AS t,"
+        " TIMESTAMP_NTZ'2024-01-01 00:00:00' AS tn, DATE'2024-01-02' AS d,"
+        " CAST(12.34 AS DECIMAL(12,2)) AS dec, array(1, 2) AS a,"
+        " named_struct('x', 1, 'y', 'z') AS s, CAST(NULL AS STRING) AS ns, 7 AS i"
+    ).coalesce(1).write.parquet(dest)
+
+
+def test_footer_carrying_sparks_own_schema_returns_it(spark, tmp_path):
     """Spark infers a file it wrote from the schema in its footer metadata
-    (e.g. TIMESTAMP_NTZ whatever inferTimestampNTZ says)."""
-    spark.sql("SELECT TIMESTAMP_NTZ'2024-01-01 00:00:00' AS t").coalesce(1) \
-        .write.parquet(str(tmp_path / "w"))
-    (part,) = (tmp_path / "w").glob("part-*.parquet")
-    assert spark.conf.get(NTZ) == "false"
-    assert dict(spark.read.parquet(str(part)).dtypes) == {"t": "timestamp_ntz"}
-    assert _footer_schema(spark, str(part)) is None
+    (e.g. TIMESTAMP_NTZ whatever inferTimestampNTZ says); the helper
+    returns exactly that schema, made nullable, for a part file with rows
+    and for the part file of an empty frame."""
+    _spark_written(spark, str(tmp_path / "w"))
+    spark.read.parquet(str(tmp_path / "w")).limit(0).write.parquet(str(tmp_path / "e"))
+    saved = spark.conf.get(NTZ)
+    try:
+        for ntz in ("true", "false"):
+            spark.conf.set(NTZ, ntz)
+            for d in ("w", "e"):
+                (part,) = (tmp_path / d).glob("part-*.parquet")
+                want = spark.read.parquet(str(tmp_path / d)).schema
+                assert want["tn"].dataType.simpleString() == "timestamp_ntz"
+                assert _footer_schema(spark, str(part)) == want, f"{d} ({NTZ}={ntz})"
+    finally:
+        spark.conf.set(NTZ, saved)
+
+
+def test_read_version_starts_no_spark_job(spark, tmp_path):
+    from etl_scripts_spark.sinks.commit import read_version, try_publish_version
+
+    root = str(tmp_path / "root")
+    _spark_written(spark, str(tmp_path / "v1"))
+    assert try_publish_version(root, 1, str(tmp_path / "v1"))
+    sc = spark.sparkContext
+    group = "test-read-version-no-jobs"
+    sc.setJobGroup(group, "read_version")
+    try:
+        df = read_version(spark, root)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    want = spark.read.parquet(str(tmp_path / "v1"))
+    assert df.schema == want.schema
+    assert df.collect() == want.collect()
 
 
 def test_nanos_timestamp_load_still_raises_without_the_legacy_conf(spark, tmp_path):

@@ -120,23 +120,24 @@ STREAMING = {
     "q_stream_sessionize",
     "q_stream_enriched",
     "q_stream_interval_join",
-    "q_stream_kmv",
     "q_stream_cms",
 }
 
 #: Registered queries whose real work executes eagerly at call time, so
 #: there is no lazy plan to audit (the oracle is the contract instead):
-#: the scratch-root MV drain and the vacuum chain both return an eager
-#: localCheckpoint of a small result — auditing that trivial LogicalRDD
-#: scan would just re-run the whole drain / 5-version write + GC.
+#: the scratch-root stream folds (MV rollup, KMV, rolling z-score) and the
+#: vacuum chain return an eager localCheckpoint of a small result —
+#: auditing that trivial LogicalRDD scan would just re-run the whole
+#: drain / 5-version write + GC.
 EAGER = {
     "q_stream_mv_drain",
-    "q_vacuum_report",
-    # r13 flips: AvailableNow stateful drains — the real work executes at
-    # call time (micro-batches through the state store), leaving only a
-    # trivial LogicalRDD scan to audit; the oracle is the contract (the
-    # batch law over the same events), same class as q_stream_mv_drain
+    "q_stream_kmv",
     "q_stream_rolling_zscore",
+    "q_vacuum_report",
+    # r13 flip: an AvailableNow drain into the memory sink — the real
+    # work executes at call time (micro-batches through the state store),
+    # leaving only a trivial scan to audit; the oracle is the contract
+    # (the batch law over the same events)
     "q_stream_hll",
 }
 

@@ -73,46 +73,34 @@ def test_commit_batch_all_or_nothing(spark, tmp_path):
 
 def test_state_shard_sizing(spark):
     from etl_scripts_spark.streaming.tuning import (
-        NATIVE_STATE_KEYS_PER_SHARD,
-        PY_STATE_KEYS_PER_SHARD,
         shards_for_keys,
         state_shuffle_partitions,
     )
 
-    for law in (NATIVE_STATE_KEYS_PER_SHARD, PY_STATE_KEYS_PER_SHARD):
-        assert shards_for_keys(10, keys_per_shard=law) == 4          # floor: local parallelism
-        assert shards_for_keys(10**9, keys_per_shard=law) == 10_000  # cap
+    assert shards_for_keys(10) == 4          # floor: local parallelism
+    assert shards_for_keys(10**9) == 10_000  # cap
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    with state_shuffle_partitions(
-        spark, 1500, keys_per_shard=NATIVE_STATE_KEYS_PER_SHARD
-    ) as n:
+    with state_shuffle_partitions(spark, 1500) as n:
         assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_state_shard_sizing_per_operator_class(spark):
-    """r14 shard-economics law (tuning.py): applyInPandasWithState ops
-    shard at ~200 keys/shard (per-group Python call dominates), native
-    window aggs at ~12k keys/shard (commit fixed cost dominates) — the
-    measured optima recorded in OPTIMIZATION_r14.md §3."""
+    """r14 shard-economics law (tuning.py): native streaming aggregations
+    shard at ~12k keys/shard (commit fixed cost dominates) — the measured
+    optimum recorded in OPTIMIZATION_r14.md §3."""
     from etl_scripts_spark.streaming.tuning import (
         NATIVE_STATE_KEYS_PER_SHARD,
-        PY_STATE_KEYS_PER_SHARD,
         shards_for_keys,
         state_shuffle_partitions,
     )
 
-    # PyState: 7500 groups want full-core parallelism (37 pre-clamp, the
-    # session's configured slots after), 1500 groups sit at 7
-    assert shards_for_keys(7500, keys_per_shard=PY_STATE_KEYS_PER_SHARD) == 37
-    assert shards_for_keys(1500, keys_per_shard=PY_STATE_KEYS_PER_SHARD) == 7
-    # native: ~100k session keys → 8 shards; small key spaces floor at 4
-    assert shards_for_keys(100_000, keys_per_shard=NATIVE_STATE_KEYS_PER_SHARD) == 8
-    assert shards_for_keys(4000, keys_per_shard=NATIVE_STATE_KEYS_PER_SHARD) == 4
+    assert NATIVE_STATE_KEYS_PER_SHARD == 12_000
+    # ~100k session keys → 8 shards; small key spaces floor at 4
+    assert shards_for_keys(100_000) == 8
+    assert shards_for_keys(4000) == 4
     # the context manager still clamps to the configured slot count
-    with state_shuffle_partitions(
-        spark, 100_000, keys_per_shard=PY_STATE_KEYS_PER_SHARD
-    ) as n:
+    with state_shuffle_partitions(spark, 10**9) as n:
         assert n == int(spark.conf.get("spark.sql.shuffle.partitions"))
         assert n <= 8  # the test session's configured shuffle partitions
 

@@ -1,4 +1,4 @@
-"""Streaming rolling z-score (streaming/stateful.py
+"""Streaming rolling z-score (streaming/mv.py
 stateful_rolling_zscore_available_now): AvailableNow drain equals the
 batch operator row-for-row, NULL values ride the frame law, and
 out-of-order timestamps raise instead of silently mis-framing."""
@@ -9,9 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_scripts_spark.reports.anomaly import rolling_zscore
-from etl_scripts_spark.streaming.stateful import (
-    stateful_rolling_zscore_available_now,
-)
+from etl_scripts_spark.streaming.mv import stateful_rolling_zscore_available_now
 
 SF_EVENTS = "/root/testdata/sf0.001/events.parquet"
 
@@ -20,14 +18,14 @@ def _key(t):
     return tuple((v is not None, v) for v in t)
 
 
-def test_drain_equals_batch_operator(spark):
+def test_drain_equals_batch_operator(spark, tmp_path):
     """The whole contract: streaming emission == reports/anomaly batch law
     over the same events, including the 9-dp HALF_UP rounding."""
     got = sorted(
         (
             (r["user_id"], r["ts_us"], r["v"], r["roll_n"], r["z"], r["is_anomaly"])
             for r in stateful_rolling_zscore_available_now(
-                spark, SF_EVENTS, window=12, min_periods=4
+                spark, SF_EVENTS, str(tmp_path / "root"), window=12, min_periods=4
             ).collect()
         ),
         key=_key,
@@ -66,7 +64,8 @@ def test_null_values_ride_the_frame(spark, tmp_path):
     out = {
         r["ts_us"]: (r["roll_n"], r["z"])
         for r in stateful_rolling_zscore_available_now(
-            spark, f"{path}/part-00000*.parquet", window=3, min_periods=2
+            spark, f"{path}/part-00000*.parquet", str(tmp_path / "root"),
+            window=3, min_periods=2,
         ).collect()
     }
     # 4 events; frames hold 0,1,1,2 non-null prior values respectively
@@ -78,9 +77,9 @@ def test_out_of_order_raises(spark, tmp_path):
     import datetime as dt
 
     path = str(tmp_path / "ev2")
-    # two files: the second carries an OLDER timestamp for the same user —
-    # with maxFilesPerTrigger the per-batch regression check fires; in one
-    # AvailableNow batch the duplicate-detection (<=) fires on the tie
+    # one batch holding a timestamp tie for one user: the fold's
+    # duplicate guard fires (tests/test_streaming_keyed.py drives an
+    # older timestamp across two micro-batches)
     rows = [
         (1, dt.datetime(2024, 1, 1, 0, 0, 5), 7, 1.0, "t", "{}"),
         (2, dt.datetime(2024, 1, 1, 0, 0, 5), 7, 2.0, "t", "{}"),
@@ -90,5 +89,6 @@ def test_out_of_order_raises(spark, tmp_path):
     ).coalesce(1).write.parquet(path)
     with pytest.raises(Exception, match="out-of-order or duplicate"):
         stateful_rolling_zscore_available_now(
-            spark, f"{path}/part-00000*.parquet", window=3, min_periods=2
+            spark, f"{path}/part-00000*.parquet", str(tmp_path / "root"),
+            window=3, min_periods=2,
         ).collect()

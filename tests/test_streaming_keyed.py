@@ -1,6 +1,8 @@
-"""Keyed streaming state as native aggregations (streaming/windowed.py
-stateful_first_seen_available_now / stateful_user_totals_available_now /
-stateful_hll_available_now / stateful_cms_available_now).
+"""Keyed streaming state across micro-batches: the native aggregations
+of streaming/windowed.py (stateful_first_seen_available_now /
+stateful_user_totals_available_now / stateful_hll_available_now /
+stateful_cms_available_now) and the per-micro-batch folds of
+streaming/mv.py (KMV, the rolling z-score).
 
 The oracle parity suite drains the events table in ONE micro-batch, so it
 cannot see how drained rows combine across micro-batches.  Here two
@@ -8,7 +10,9 @@ parquet files arrive as two micro-batches (maxFilesPerTrigger=1); the
 second holds an earlier (ts, event_id) for a key the first already
 registered, and a ts tie that only event_id can break.  Dedup and user
 totals must still equal the batch law over both files, and so must the
-HLL registers and count-min counters that users 1-3 touch in both.
+HLL registers and count-min counters that users 1-3 touch in both.  The
+folds get their own files: a KMV sketch that saturates only in file 2,
+and an in-order z-score series with NULL values.
 """
 
 from __future__ import annotations
@@ -19,10 +23,13 @@ from collections import Counter
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
-from etl_scripts_spark.operators.sketch import cms_build, hll_registers
-from etl_scripts_spark.streaming import windowed
+from etl_scripts_spark.operators.sketch import cms_build, hll_registers, kmv_sketch
+from etl_scripts_spark.reports.anomaly import rolling_zscore
+from etl_scripts_spark.sinks.commit import latest_committed_version
+from etl_scripts_spark.streaming import mv, windowed
 
 T0 = 1_700_000_000_000_000  # epoch µs
 
@@ -57,14 +64,16 @@ def _write(path, rows, mtime):
     os.utime(path, (mtime, mtime))
 
 
-def _two_batch_stream(spark, tmp_path):
-    _write(tmp_path / "events_1.parquet", BATCH_1, 1_000_000)
-    _write(tmp_path / "events_2.parquet", BATCH_2, 2_000_000)
-    schema = spark.read.parquet(str(tmp_path / "events_1.parquet")).schema
+def _two_batch_stream(spark, tmp_path, batch_1=BATCH_1, batch_2=BATCH_2):
+    events = tmp_path / "events"
+    events.mkdir()
+    _write(events / "events_1.parquet", batch_1, 1_000_000)
+    _write(events / "events_2.parquet", batch_2, 2_000_000)
+    schema = spark.read.parquet(str(events / "events_1.parquet")).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(str(tmp_path))
+        .parquet(str(events))
     )
 
 
@@ -120,7 +129,7 @@ def test_user_totals_fold_across_micro_batches(spark, tmp_path, monkeypatch):
 
 
 def _both_files_as_one_batch(spark, tmp_path):
-    return spark.read.parquet(str(tmp_path)).select(
+    return spark.read.parquet(str(tmp_path / "events")).select(
         "event_type", F.col("user_id").cast("string").alias("v")
     )
 
@@ -151,3 +160,90 @@ def test_cms_drain_equals_batch_counters(spark, tmp_path):
         ).collect()
     )
     assert got == want
+
+
+def test_kmv_folds_across_micro_batches(spark, tmp_path):
+    """File 1 leaves the "click" sketch unsaturated (20 < k digests); file
+    2 saturates it, so the committed bottom-k must be the union of both
+    files' digests cut back to k — equal to the batch sketch over both."""
+    batch_1 = [(u, u, u, "click", 0.0) for u in range(1, 21)]
+    batch_2 = [(100 + u, u, u, "click", 0.0) for u in range(10, 51)]
+    batch_2 += [(200 + u, u, u, "view", 0.0) for u in range(1, 6)]
+    root = str(tmp_path / "root")
+    got = {
+        r.event_type: (r.sketch_n, r.est_distinct)
+        for r in mv._kmv(spark, _two_batch_stream(spark, tmp_path, batch_1, batch_2), root)
+        .collect()
+    }
+    k = mv._KMV_K
+    want = {}
+    for r in kmv_sketch(_both_files_as_one_batch(spark, tmp_path), "event_type", "v", k).collect():
+        est = (
+            float(r.sketch_n)
+            if r.sketch_n < k
+            else round(float(k - 1) * (1 << 48) / int(r.kth_hash[:12], 16), 4)
+        )
+        want[r.event_type] = (r.sketch_n, est)
+    assert got == want
+    assert got["click"][0] == k and got["view"] == (5, 5.0)
+    assert latest_committed_version(root) == 2  # one fold per file
+
+
+def _cents_rows(df):
+    return df.select(
+        "user_id",
+        F.unix_micros("ts").alias("ts_us"),
+        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v"),
+    )
+
+
+def test_rolling_zscore_folds_across_micro_batches(spark, tmp_path):
+    """An in-order pair of files: file 2's rows are scored against frames
+    that reach back into file 1 (window 3), NULL values included, and the
+    fold equals the batch law over both files row for row."""
+    values_1 = [1.0, None, 3.0, 10.0, 2.5]
+    values_2 = [4.0, None, 7.25, 1.0, 0.5, 9.0]
+    batch_1 = [(i, 10 * i, u, "t", v) for u in (1, 2) for i, v in enumerate(values_1)]
+    batch_2 = [(50 + i, 100 + i, u, "t", v) for u in (1, 3) for i, v in enumerate(values_2)]
+    stream = _two_batch_stream(spark, tmp_path, batch_1, batch_2)
+    root = str(tmp_path / "root")
+    cols = ["user_id", "ts_us", "v", "roll_n", "z", "is_anomaly"]
+    got = sorted(
+        tuple(r[c] for c in cols)
+        for r in mv._rolling_zscore(spark, stream, root, window=3, min_periods=2).collect()
+    )
+    both = _cents_rows(spark.read.parquet(str(tmp_path / "events")))
+    want = sorted(
+        tuple(r[c] for c in cols)
+        for r in rolling_zscore(both, "user_id", "ts_us", "v", window=3, min_periods=2)
+        .collect()
+    )
+    assert got == want and len(got) == len(batch_1) + len(batch_2)
+    assert latest_committed_version(root) == 2
+    # the premise: user 1's first file-2 rows are scored from file-1 rows
+    first_2 = [r for r in got if r[0] == 1 and r[1] == T0 + 100 * 1_000_000]
+    assert first_2[0][3] == 3 and first_2[0][4] is not None
+
+
+def test_rolling_zscore_raises_on_an_earlier_timestamp_in_a_later_batch(spark, tmp_path):
+    """File 2 holds an earlier timestamp for users 1 and 3 of file 1: the
+    carried rows would follow it, so the fold raises instead of scoring
+    against the wrong frame."""
+    stream = _two_batch_stream(spark, tmp_path)
+    with pytest.raises(Exception, match="out-of-order or duplicate"):
+        mv._rolling_zscore(spark, stream, str(tmp_path / "root"), window=3, min_periods=2)
+
+
+def test_fold_batch_replay_mints_no_version(spark, tmp_path):
+    root = str(tmp_path / "root")
+    batch = spark.createDataFrame([("a", "x")], "event_type string, _h string")
+    empty = batch.limit(0)
+
+    def step(state, b):
+        return state.unionByName(b).distinct()
+
+    assert mv.fold_batch(batch, 0, root, step, empty) is True
+    assert mv.fold_batch(batch, 0, root, step, empty) is False
+    assert latest_committed_version(root) == 1
+    assert mv.fold_batch(batch, 1, root, step, empty) is True
+    assert latest_committed_version(root) == 2
