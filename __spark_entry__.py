@@ -2522,7 +2522,7 @@ def q_srp_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal binary-column decode: spec-valid PNG/JPEG/GIF payloads →
     typed metadata via the real stdlib header parser inside an Arrow-batched
-    mapInPandas stage.  The oracle predicts (format, dims, size) from the
+    stage (multimodal.map_payloads).  The oracle predicts (format, dims, size) from the
     fixture generator's doc_id arithmetic, so a parser regression on any
     container type is a value mismatch, not just a row count."""
     docs = _tp(spark, sf_dir, "documents")
@@ -3024,7 +3024,7 @@ def q_mapping_broadcast_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes a broadcast dimension (register-iontorrent-data.py:198-203,
     443,529-537); the hash join never shuffles the fact side."""
     supplier = _t(spark, sf_dir, "supplier")
-    mapping = spark.createDataFrame(_PATIENT_MAP, "k INT, patient STRING")
+    mapping = catalog.literal_table(spark, _PATIENT_MAP, "k INT, patient STRING")
     return (
         supplier.join(F.broadcast(mapping), F.col("s_nationkey") % 10 == F.col("k"))
         .select("s_suppkey", "s_name", "patient")
@@ -5656,8 +5656,8 @@ def q_domain_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_scripts_spark.operators import web
 
     rollup = web.domain_rollup(_docs_with_urls(spark, sf_dir))
-    block = spark.createDataFrame(
-        [("site0.example.com",), ("site3.example.com",)], "domain string"
+    block = catalog.literal_table(
+        spark, [("site0.example.com",), ("site3.example.com",)], "domain string"
     )
     return web.drop_blocklisted_domains(rollup, block)
 
@@ -6465,17 +6465,18 @@ def q_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-group skipping report (sinks/layout.py rowgroup_stats /
     skipping_report) over REAL parquet footers this query writes itself:
     lineitem is bucketed by l_orderkey%8, each bucket written as one file
-    sorted by l_partkey with a FIXED 1024-row row-group size (distributed
-    applyInPandas writer — no driver materialization), then the footer
-    sweep (mapInPandas + pyarrow, O(files) never O(bytes)) measures how
-    many row groups the predicate v BETWEEN 100 AND 299 can prune.
+    sorted by l_partkey with a FIXED 1024-row row-group size (Spark's own
+    partitioned parquet writer: one task per bucket, no driver
+    materialization), then the footer sweep (pyarrow on the driver,
+    O(files) never O(bytes)) measures how many row groups the predicate
+    v BETWEEN 100 AND 299 can prune.
     Because the writer's sort and chunk law are deterministic, DuckDB
     reconstructs every footer's (n_rows, min, max) from the VIEW with a
     row_number window — the oracle never needs filesystem access, yet a
     footer the sweep misreads (or a chunk boundary drift) breaks the
     match.  Sorted layout → interior groups prune; that is the measurable
     claim behind write_zordered/plan_compaction at 100 TB."""
-    import os
+    import glob
 
     from etl_scripts_spark.sinks.layout import rowgroup_stats, skipping_report
 
@@ -6487,27 +6488,16 @@ def q_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("k1"),
         F.col("l_linenumber").cast("bigint").alias("k2"),
     )
-
-    def write_bucket(pdf):
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        b = int(pdf["bucket"].iloc[0])
-        pdf = pdf.sort_values(["v", "k1", "k2"], kind="mergesort")
-        path = f"{dest}/bucket={b}.parquet"
-        pq.write_table(
-            pa.Table.from_pandas(pdf[["v"]].reset_index(drop=True)),
-            path,
-            row_group_size=g_rows,
-        )
-        return pd.DataFrame({"bucket": [b], "file": [path]})
-
-    written = li.groupBy("bucket").applyInPandas(
-        write_bucket, "bucket bigint, file string"
+    (
+        li.repartition(8, "bucket")
+        .sortWithinPartitions("bucket", "v", "k1", "k2")
+        .select("bucket", "v")
+        .write.partitionBy("bucket")
+        .option("parquet.block.row.count.limit", g_rows)
+        .mode("overwrite")
+        .parquet(dest)
     )
-    written.count()  # force the write stage before the footer sweep reads
-    files = [f"{dest}/bucket={b}.parquet" for b in range(8)]
+    files = sorted(glob.glob(f"{dest}/bucket=*/*.parquet"))
     rep = skipping_report(rowgroup_stats(spark, files, "v"), lo, hi)
     return rep.select(
         F.regexp_extract("file", r"bucket=(\d+)", 1).cast("bigint").alias("bucket"),
@@ -7663,7 +7653,7 @@ def q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_scripts_spark.operators.corpus import phrase_search
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    phrases = spark.createDataFrame(_PHRASES, "query_id bigint, phrase string")
+    phrases = catalog.literal_table(spark, _PHRASES, "query_id bigint, phrase string")
     return phrase_search(docs, phrases)
 
 
@@ -7818,7 +7808,7 @@ def q_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("src") != F.col("dst"))
     )
-    seeds = spark.createDataFrame([(0,), (1,)], "node long")
+    seeds = catalog.literal_table(spark, [(0,), (1,)], "node long")
     return bfs_distances(edges, seeds, max_hops=4)
 
 
@@ -8229,21 +8219,45 @@ def entry(spark: SparkSession) -> DataFrame:
 # — a regression in a long-green query can hide for at most that long.
 
 #: Head of the rotation: queries whose code changed since their last
-#: green CORRECTNESS row.  First the two stream folds that left Python
-#: state (KMV, rolling z-score), the batch rolling z-score, which now
-#: evaluates its guard once per row, and the two queries whose committed
-#: snapshots are read without a schema-inference job; then the seven
-#: vector-search consumers, whose quantizers now share one Lloyd trainer
-#: (and IVF pins its candidate join's build side), then the nine connected-components consumers,
-#: whose label propagation pointer-jumps from round 6 and drops null
-#: endpoints every round, then the two streaming sketches that became the
-#: batch sketch operators drained in complete mode, then the nine
-#: perfbench mix queries that read their tables through catalog.load,
-#: whose schemas now come from the parquet footer, then the other five
-#: whose round loops moved onto ckpt.next_round / ckpt.fixpoint, then the
-#: two streaming queries whose keyed state became native aggregations.
-#: Everything else rides the least-recently-green order.
+#: green CORRECTNESS row.  First the sixteen codec/tool queries whose
+#: Python stage is now the one `multimodal.map_payloads` driver
+#: (mapInArrow), q_skipping_report (Spark's partitioned writer and a
+#: driver-side footer sweep) and the four queries whose literal tables
+#: are now `catalog.literal_table` local relations; then the two stream
+#: folds that left Python state (KMV, rolling z-score), the batch rolling
+#: z-score, which now evaluates its guard once per row, and the two
+#: queries whose committed snapshots are read without a schema-inference
+#: job; then the seven vector-search consumers, whose quantizers now
+#: share one Lloyd trainer (and IVF pins its candidate join's build
+#: side), then the nine connected-components consumers, whose label
+#: propagation pointer-jumps from round 6 and drops null endpoints every
+#: round, then the two streaming sketches that became the batch sketch
+#: operators drained in complete mode, then six of the perfbench mix
+#: queries whose schemas now come from the parquet footer.  The head is
+#: capped at the driver's 50-query window; everything else rides the
+#: least-recently-green order.
 _CHANGED_THIS_ROUND = (
+    "q_multimodal_features",
+    "q_multimodal_frame_sample",
+    "q_multimodal_image_meta",
+    "q_multimodal_jpeg_stats",
+    "q_multimodal_pixel_stats",
+    "q_multimodal_resize",
+    "q_multimodal_audio_stats",
+    "q_multimodal_video_frames",
+    "q_audio_spectrogram",
+    "q_pdf_metadata",
+    "q_tool_dryrun",
+    "q_image_ahash",
+    "q_mjpeg_video_stats",
+    "q_gif_pixel_stats",
+    "q_tiff_pixel_stats",
+    "q_g711_audio_stats",
+    "q_skipping_report",
+    "q_bfs_distances",
+    "q_phrase_search",
+    "q_mapping_broadcast_lookup",
+    "q_domain_quality_rollup",
     "q_stream_kmv",
     "q_stream_rolling_zscore",
     "q_rolling_zscore",
@@ -8273,16 +8287,6 @@ _CHANGED_THIS_ROUND = (
     "q_experimental_design",
     "q_pricing_summary",
     "q_revenue_by_nation",
-    "q_tpch_q04",
-    "q_register_fastq",
-    "q_wf_results_register",
-    "q_pagerank",
-    "q_bpe_merges",
-    "q_bpe_encode",
-    "q_k_core",
-    "q_train_classifier",
-    "q_stream_dedup",
-    "q_stream_user_totals",
 )
 
 

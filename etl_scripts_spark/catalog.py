@@ -180,6 +180,28 @@ def _nullable(dt: T.DataType) -> T.DataType:
     return dt
 
 
+def literal_table(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A driver-side list of tuples as a DataFrame planned as a
+    `LocalRelation`, so no job that scans it starts a Python task.
+
+    `spark.createDataFrame(<list>, schema)` plans a scan of a Python RDD
+    (every job over it runs `defaultParallelism` Python tasks); built
+    from an Arrow table it is a local relation, whatever the session's
+    Arrow conf.  `schema` is a StructType or a DDL string.  A naive
+    datetime is a session-local timestamp, as `createDataFrame` reads it
+    from a list."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema, timestamp_utc=False)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=arrow)
+    return spark.createDataFrame(table, schema)
+
+
 def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load + widen partitioning for CPU-heavy downstream projections.
 

@@ -1,5 +1,5 @@
 """External-tool stages (W10/W11): subprocess transforms as isolated
-mapInPandas stages, never inside the commit path.
+Arrow-batched stages (multimodal.map_payloads), never inside the commit path.
 
 Re-expresses the reference's blocking in-transaction subprocess calls
 (remote msconvert via ssh/rsync with a 7200 s timeout, etl_msconvert.py:
@@ -16,6 +16,8 @@ import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from .multimodal import map_payloads
 
 TOOL_RESULT_SCHEMA = T.StructType(
     [
@@ -42,39 +44,36 @@ def run_tool_stage(
     test_msconvert.py:37-50).
     """
 
-    def batches(it):
+    def rows(item_id, value):
         import subprocess
         import tempfile
 
-        import pandas as pd
+        argv = [a.replace("{}", str(value)) for a in argv_template]
+        if dryrun:
+            return [(item_id, "dryrun", " ".join(argv))]
+        if shutil.which(argv[0]) is None:
+            return [(item_id, "error", f"binary not found: {argv[0]}")]
+        try:
+            with tempfile.TemporaryDirectory() as tmp:
+                proc = subprocess.run(
+                    argv, capture_output=True, text=True,
+                    timeout=timeout_s, cwd=tmp,
+                )
+        except subprocess.TimeoutExpired:
+            return [(item_id, "timeout", f"timed out after {timeout_s}s")]
+        status = "ok" if proc.returncode == 0 else "error"
+        return [(item_id, status, (proc.stdout or proc.stderr).strip()[:1000])]
 
-        for pdf in it:
-            ids, statuses, outputs = [], [], []
-            for item_id, value in zip(pdf[id_col], pdf[input_col]):
-                ids.append(int(item_id))
-                argv = [a.replace("{}", str(value)) for a in argv_template]
-                if dryrun:
-                    statuses.append("dryrun")
-                    outputs.append(" ".join(argv))
-                    continue
-                if shutil.which(argv[0]) is None:
-                    statuses.append("error")
-                    outputs.append(f"binary not found: {argv[0]}")
-                    continue
-                try:
-                    with tempfile.TemporaryDirectory() as tmp:
-                        proc = subprocess.run(
-                            argv, capture_output=True, text=True,
-                            timeout=timeout_s, cwd=tmp,
-                        )
-                    statuses.append("ok" if proc.returncode == 0 else "error")
-                    outputs.append((proc.stdout or proc.stderr).strip()[:1000])
-                except subprocess.TimeoutExpired:
-                    statuses.append("timeout")
-                    outputs.append(f"timed out after {timeout_s}s")
-            yield pd.DataFrame({"item_id": ids, "status": statuses, "output": outputs})
+    return map_payloads(df, id_col, input_col, TOOL_RESULT_SCHEMA, rows)
 
-    return df.select(id_col, input_col).mapInPandas(batches, TOOL_RESULT_SCHEMA)
+
+ARCHIVE_MEMBER_SCHEMA = T.StructType(
+    [
+        T.StructField("item_id", T.LongType()),
+        T.StructField("member", T.StringType()),
+        T.StructField("n_bytes", T.LongType()),
+    ]
+)
 
 
 def unpack_archives(df: DataFrame, id_col: str = "item_id", bin_col: str = "payload") -> DataFrame:
@@ -82,38 +81,20 @@ def unpack_archives(df: DataFrame, id_col: str = "item_id", bin_col: str = "payl
     dropbox.py:178-186).  Pure-Python stdlib codecs, so no stub needed:
     each archive member becomes a row."""
 
-    def batches(it):
+    def rows(item_id, raw):
         import io
         import tarfile
         import zipfile
 
-        import pandas as pd
+        try:
+            if zipfile.is_zipfile(io.BytesIO(raw)):
+                with zipfile.ZipFile(io.BytesIO(raw)) as z:
+                    members = [(i.filename, i.file_size) for i in z.infolist()]
+            else:
+                with tarfile.open(fileobj=io.BytesIO(raw)) as t:
+                    members = [(m.name, m.size) for m in t if m.isfile()]
+        except Exception:
+            members = [("<unreadable>", 0)]
+        return [(item_id, name, int(size)) for name, size in members]
 
-        for pdf in it:
-            out = {"item_id": [], "member": [], "n_bytes": []}
-            for item_id, b in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(b) if b is not None else b""
-                bio = io.BytesIO(raw)
-                try:
-                    if zipfile.is_zipfile(bio):
-                        with zipfile.ZipFile(io.BytesIO(raw)) as z:
-                            members = [(i.filename, i.file_size) for i in z.infolist()]
-                    else:
-                        with tarfile.open(fileobj=io.BytesIO(raw)) as t:
-                            members = [(m.name, m.size) for m in t if m.isfile()]
-                except Exception:
-                    members = [("<unreadable>", 0)]
-                for name, size in members:
-                    out["item_id"].append(int(item_id))
-                    out["member"].append(name)
-                    out["n_bytes"].append(int(size))
-            yield pd.DataFrame(out)
-
-    schema = T.StructType(
-        [
-            T.StructField("item_id", T.LongType()),
-            T.StructField("member", T.StringType()),
-            T.StructField("n_bytes", T.LongType()),
-        ]
-    )
-    return df.select(id_col, bin_col).mapInPandas(batches, schema)
+    return map_payloads(df, id_col, bin_col, ARCHIVE_MEMBER_SCHEMA, rows)

@@ -23,7 +23,7 @@ every baseline file DECLARES its tables in DHT, and the decoder builds
 whatever is declared, standard Annex K tables included).
 
 Scale shape: both directions run inside the existing Arrow-batched
-mapInPandas codec stages (multimodal.decode_pixel_stats /
+codec stages (multimodal.map_payloads under decode_pixel_stats /
 with_jpeg_payload) — the payload never round-trips through the driver,
 and partitioning carries over from the upstream scan.
 

@@ -2,8 +2,10 @@
 
 At 100 TB the payload never round-trips through the driver: binary columns
 ride in parquet/object storage, and decode / feature-extract / resize /
-frame-sample run as Arrow-batched `mapInPandas` stages over whatever
-partitioning the upstream scan produced.  Image *metadata* needs no codec
+frame-sample run as Arrow-batched stages over whatever partitioning the
+upstream scan produced.  Every such stage is :func:`map_payloads` plus a
+per-row law `rows(id, payload)`; the batching, the NULL-payload rule and
+the output typing live there once.  Image *metadata* needs no codec
 library at all — PNG/JPEG/GIF/BMP dimensions live in the container header
 and `parse_image_header` reads them with stdlib `struct`.  The PIXEL path
 is real for the three containers decodable without a codec library —
@@ -21,11 +23,51 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def map_payloads(
+    df: DataFrame,
+    id_col: str,
+    bin_col: str,
+    schema: T.StructType,
+    rows: Callable[[object, object], Iterable[tuple]],
+) -> DataFrame:
+    """THE per-row Python stage: map-only over the upstream partitioning,
+    `rows(id, value)` yields zero, one or many output tuples in `schema`
+    order for each input row.
+
+    Batches cross JVM → Arrow → Python lists → a `pa.RecordBatch` typed by
+    `schema` (`mapInArrow`), so no law spells nullable dtypes: None is NULL
+    in any column.  A NULL binary `bin_col` reaches `rows` as b"" (an
+    undecodable payload, handled by each law's quarantine); a NULL of any
+    other type reaches it as None."""
+    src = df.select(id_col, bin_col)
+    null = b"" if isinstance(src.schema[1].dataType, T.BinaryType) else None
+
+    def batches(it: Iterator) -> Iterator:
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow = to_arrow_schema(schema)
+        for batch in it:
+            ids, vals = (c.to_pylist() for c in batch.columns)
+            out = [
+                r
+                for i, v in zip(ids, vals)
+                for r in rows(i, null if v is None else v)
+            ]
+            cols = list(zip(*out)) if out else [()] * len(arrow)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+            )
+
+    return src.mapInArrow(batches, schema)
+
 
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -726,34 +768,15 @@ def with_wav_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def decode_audio_stats(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload") -> DataFrame:
     """binary → REAL WAV decode → per-file stats (rate, n, sum, peak)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(did, b):
+        dec = decode_wav_audio(b)
+        if dec is None:
+            return [(did, None, None, None, None)]
+        rate, samples = dec
+        x = samples.astype("int64")
+        return [(did, rate, len(x), int(x.sum()), int(abs(x).max()) if len(x) else None)]
 
-        for pdf in it:
-            out = {"doc_id": [], "sample_rate": [], "n_samples": [], "sum_samples": [], "peak": []}
-            for did, b in zip(pdf[id_col], pdf[bin_col]):
-                dec = decode_wav_audio(bytes(b) if b is not None else b"")
-                out["doc_id"].append(int(did))
-                if dec is None:
-                    for k in ("sample_rate", "n_samples", "sum_samples", "peak"):
-                        out[k].append(None)
-                else:
-                    rate, s = dec
-                    out["sample_rate"].append(rate)
-                    out["n_samples"].append(len(s))
-                    out["sum_samples"].append(int(s.astype("int64").sum()))
-                    out["peak"].append(int(abs(s.astype("int64")).max()) if len(s) else None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "sample_rate": pd.array(out["sample_rate"], dtype="Int32"),
-                    "n_samples": pd.array(out["n_samples"], dtype="Int32"),
-                    "sum_samples": pd.array(out["sum_samples"], dtype="Int64"),
-                    "peak": pd.array(out["peak"], dtype="Int32"),
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(batches, AUDIO_STATS_SCHEMA)
+    return map_payloads(df, id_col, bin_col, AUDIO_STATS_SCHEMA, rows)
 
 
 def synthetic_avi_bytes(doc_id: int) -> bytes:
@@ -838,39 +861,20 @@ def sample_video_frames(
     fan-out doesn't multiply payload bytes through the rest of the plan.
     """
 
-    def batches(it: Iterator) -> Iterator:
+    def rows(did, b):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            out = {k.name: [] for k in VIDEO_FRAME_SCHEMA.fields}
-            for did, b in zip(pdf[id_col], pdf[bin_col]):
-                frames = demux_avi_frames(bytes(b) if b is not None else b"")
-                if not frames:
-                    continue  # undecodable → no rows (quarantine upstream)
-                k = len(frames)
-                for j in range(n_frames):
-                    src = j * k // n_frames
-                    _off, data = frames[src]
-                    arr = np.frombuffer(data, dtype=np.uint8)
-                    out["doc_id"].append(int(did))
-                    out["frame_idx"].append(j)
-                    out["src_frame"].append(src)
-                    out["n_frames"].append(k)
-                    out["n_bytes"].append(len(data))
-                    out["byte_sum"].append(int(arr.astype("int64").sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "frame_idx": pd.array(out["frame_idx"], dtype="Int32"),
-                    "src_frame": pd.array(out["src_frame"], dtype="Int32"),
-                    "n_frames": pd.array(out["n_frames"], dtype="Int32"),
-                    "n_bytes": pd.array(out["n_bytes"], dtype="Int32"),
-                    "byte_sum": pd.array(out["byte_sum"], dtype="Int64"),
-                }
-            )
+        frames = demux_avi_frames(b)
+        if not frames:
+            return  # undecodable → no rows (quarantine upstream)
+        k = len(frames)
+        for j in range(n_frames):
+            src = j * k // n_frames
+            _off, data = frames[src]
+            arr = np.frombuffer(data, dtype=np.uint8)
+            yield did, j, src, k, len(data), int(arr.astype("int64").sum())
 
-    return df.select(id_col, bin_col).mapInPandas(batches, VIDEO_FRAME_SCHEMA)
+    return map_payloads(df, id_col, bin_col, VIDEO_FRAME_SCHEMA, rows)
 
 
 PAYLOAD_SCHEMA = T.StructType(
@@ -884,19 +888,11 @@ PAYLOAD_SCHEMA = T.StructType(
 def _payload_source(df: DataFrame, id_col: str, synth) -> DataFrame:
     """Shared fixture-source stage: one synthetic payload per id, map-only
     and Arrow-batched, keeping the upstream partitioning.  ONE definition
-    for all nine per-codec sources — a fix to the batching (dtype
-    handling, id column naming) cannot silently miss a copy."""
+    for every per-codec source (and the PDF one in parsers/sidecars) — the
+    id column always comes out as `doc_id`."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {"doc_id": ids, "payload": [synth(int(i)) for i in ids]}
-            )
-
-    return df.select(id_col).mapInPandas(batches, PAYLOAD_SCHEMA)
+    # the id is its own payload column: `rows` ignores the second value
+    return map_payloads(df, id_col, id_col, PAYLOAD_SCHEMA, lambda i, _: [(i, synth(i))])
 
 
 def with_image_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -907,25 +903,13 @@ def with_image_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def decode_image_meta(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload") -> DataFrame:
-    """binary column → typed metadata via Arrow-batched mapInPandas, using
+    """binary column → typed metadata via the Arrow-batched stage, using
     the real stdlib header parser (no codec library needed for metadata)."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(did, b):
+        return [(did, len(b), *parse_image_header(b))]
 
-        for pdf in it:
-            metas = [parse_image_header(bytes(b) if b is not None else b"") for b in pdf[bin_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_bytes": [len(b) if b is not None else 0 for b in pdf[bin_col]],
-                    "format": [m[0] for m in metas],
-                    "width": pd.array([m[1] for m in metas], dtype="Int32"),
-                    "height": pd.array([m[2] for m in metas], dtype="Int32"),
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(batches, IMAGE_META_SCHEMA)
+    return map_payloads(df, id_col, bin_col, IMAGE_META_SCHEMA, rows)
 
 
 def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -943,7 +927,7 @@ FEATURE_SCHEMA = T.StructType(
 
 
 def extract_features(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload", dim: int = 16) -> DataFrame:
-    """binary payload → fixed-dim feature vector via Arrow-batched mapInPandas.
+    """binary payload → fixed-dim feature vector via the Arrow-batched stage.
 
     The STUB embedding is a normalized byte histogram (deterministic, so the
     ANN operators downstream are testable); swap the histogram for a real
@@ -952,22 +936,16 @@ def extract_features(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payl
     directly: decode → embed → bucket → join is one plan, no driver hop.
     """
 
-    def batches(it):
+    def rows(did, b):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            feats = []
-            for b in pdf[bin_col]:
-                arr = np.frombuffer(bytes(b) if b is not None else b"", dtype=np.uint8)
-                if arr.size == 0:
-                    feats.append([0.0] * dim)
-                    continue
-                hist = np.bincount(arr % dim, minlength=dim).astype("float64")
-                feats.append((hist / hist.sum()).tolist())
-            yield pd.DataFrame({"doc_id": pdf[id_col].astype("int64"), "feature": feats})
+        arr = np.frombuffer(b, dtype=np.uint8)
+        if arr.size == 0:
+            return [(did, [0.0] * dim)]
+        hist = np.bincount(arr % dim, minlength=dim).astype("float64")
+        return [(did, (hist / hist.sum()).tolist())]
 
-    return df.select(id_col, bin_col).mapInPandas(batches, FEATURE_SCHEMA)
+    return map_payloads(df, id_col, bin_col, FEATURE_SCHEMA, rows)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -990,23 +968,13 @@ def sample_frames(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload
     drops frame_bytes once features are extracted.
     """
 
-    def batches(it):
-        import pandas as pd
+    def rows(did, raw):
+        step = max(len(raw) // n_frames, 1)
+        for i in range(n_frames):
+            off = min(i * step, max(len(raw) - 1, 0))
+            yield did, i, off, raw[off : off + step]
 
-        for pdf in it:
-            out = {"doc_id": [], "frame_idx": [], "frame_offset": [], "frame_bytes": []}
-            for did, b in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(b) if b is not None else b""
-                step = max(len(raw) // n_frames, 1)
-                for i in range(n_frames):
-                    off = min(i * step, max(len(raw) - 1, 0))
-                    out["doc_id"].append(int(did))
-                    out["frame_idx"].append(i)
-                    out["frame_offset"].append(off)
-                    out["frame_bytes"].append(raw[off : off + step])
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, bin_col).mapInPandas(batches, FRAME_SCHEMA)
+    return map_payloads(df, id_col, bin_col, FRAME_SCHEMA, rows)
 
 
 def with_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1064,52 +1032,23 @@ def decode_pixel_stats(df: DataFrame, id_col: str = "doc_id", bin_col: str = "pa
     metadata — a one-byte codec bug shifts px_sum.
     """
 
-    def batches(it: Iterator) -> Iterator:
+    def rows(did, b):
         from decimal import ROUND_HALF_UP, Decimal
 
-        import pandas as pd
+        fmt, img = decode_image_pixels(b)
+        if img is None:
+            return [(did, fmt, None, None, None, None, None)]
+        h, w, ch = img.shape
+        s = int(img.astype("int64").sum())
+        # HALF_UP over the double's shortest decimal repr —
+        # bit-for-bit what Spark round() does (BigDecimal
+        # .valueOf → HALF_UP; Python repr == Java
+        # Double.toString shortest form).  Python round() is
+        # banker's (half-even) and diverges on exact .5 ties.
+        mean = Decimal(repr(s / (h * w * ch))).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP)
+        return [(did, fmt, w, h, ch, s, float(mean))]
 
-        for pdf in it:
-            out = {k.name: [] for k in PIXEL_STATS_SCHEMA.fields}
-            for did, b in zip(pdf[id_col], pdf[bin_col]):
-                fmt, img = decode_image_pixels(bytes(b) if b is not None else b"")
-                out["doc_id"].append(int(did))
-                out["format"].append(fmt)
-                if img is None:
-                    for k in ("width", "height", "channels", "px_sum", "mean_px"):
-                        out[k].append(None)
-                else:
-                    h, w, ch = img.shape
-                    s = int(img.astype("int64").sum())
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["channels"].append(ch)
-                    out["px_sum"].append(s)
-                    # HALF_UP over the double's shortest decimal repr —
-                    # bit-for-bit what Spark round() does (BigDecimal
-                    # .valueOf → HALF_UP; Python repr == Java
-                    # Double.toString shortest form).  Python round() is
-                    # banker's (half-even) and diverges on exact .5 ties.
-                    out["mean_px"].append(
-                        float(
-                            Decimal(repr(s / (h * w * ch))).quantize(
-                                Decimal("0.0001"), rounding=ROUND_HALF_UP
-                            )
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "format": out["format"],
-                    "width": pd.array(out["width"], dtype="Int32"),
-                    "height": pd.array(out["height"], dtype="Int32"),
-                    "channels": pd.array(out["channels"], dtype="Int32"),
-                    "px_sum": pd.array(out["px_sum"], dtype="Int64"),
-                    "mean_px": pd.array(out["mean_px"], dtype="Float64"),
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(batches, PIXEL_STATS_SCHEMA)
+    return map_payloads(df, id_col, bin_col, PIXEL_STATS_SCHEMA, rows)
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -1138,7 +1077,7 @@ def _nn_sample(img, width: int, height: int):
 
 def resize_image(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload", width: int = 224, height: int = 224) -> DataFrame:
     """REAL image resize: stdlib decode → nearest-neighbor sample → raw
-    bytes out, as an Arrow-batched mapInPandas stage.
+    bytes out, as an Arrow-batched stage.
 
     Nearest-neighbor (src = floor(dst * in/out), the standard C2-style
     mapping) is deterministic integer arithmetic — reproducible across
@@ -1148,33 +1087,13 @@ def resize_image(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload"
     widen coverage without touching the plumbing.
     """
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(did, b):
+        _fmt, img = decode_image_pixels(b)
+        if img is None:
+            return [(did, width, height, None, None)]
+        return [(did, width, height, img.shape[2], _nn_sample(img, width, height).tobytes())]
 
-        for pdf in it:
-            out = {"doc_id": [], "out_w": [], "out_h": [], "channels": [], "resized": []}
-            for did, b in zip(pdf[id_col], pdf[bin_col]):
-                _fmt, img = decode_image_pixels(bytes(b) if b is not None else b"")
-                out["doc_id"].append(int(did))
-                out["out_w"].append(width)
-                out["out_h"].append(height)
-                if img is None:
-                    out["channels"].append(None)
-                    out["resized"].append(None)
-                    continue
-                out["channels"].append(img.shape[2])
-                out["resized"].append(_nn_sample(img, width, height).tobytes())
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "out_w": pd.array(out["out_w"], dtype="Int32"),
-                    "out_h": pd.array(out["out_h"], dtype="Int32"),
-                    "channels": pd.array(out["channels"], dtype="Int32"),
-                    "resized": out["resized"],
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(batches, RESIZE_SCHEMA)
+    return map_payloads(df, id_col, bin_col, RESIZE_SCHEMA, rows)
 
 
 RESIZE_SUM_SCHEMA = T.StructType(
@@ -1206,67 +1125,35 @@ def resize_byte_sum(
 
     Why fused: the chained form ships every resized pixel blob
     JVM → Python → JVM → Python — two extra Arrow crossings plus a second
-    per-batch pandas materialization, pure boundary overhead for bytes
+    per-batch Python materialization, pure boundary overhead for bytes
     whose only consumer is a sum (guide-§4 shape: cross the boundary once,
     pass only what the function needs).  The chained operators stay for
     callers that need the actual resized payloads.
     """
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(did, b):
+        _fmt, img = decode_image_pixels(b)
+        if img is None:
+            return [(did, width, height, None, None)]
+        res_sum = int(_nn_sample(img, width, height).astype("int64").sum())
+        return [(did, width, height, img.shape[2], res_sum)]
 
-        for pdf in it:
-            out = {"doc_id": [], "channels": [], "res_sum": []}
-            for did, b in zip(pdf[id_col], pdf[bin_col]):
-                _fmt, img = decode_image_pixels(bytes(b) if b is not None else b"")
-                out["doc_id"].append(int(did))
-                if img is None:
-                    out["channels"].append(None)
-                    out["res_sum"].append(None)
-                    continue
-                out["channels"].append(img.shape[2])
-                out["res_sum"].append(
-                    int(_nn_sample(img, width, height).astype("int64").sum())
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "out_w": pd.array([width] * len(out["doc_id"]), dtype="Int32"),
-                    "out_h": pd.array([height] * len(out["doc_id"]), dtype="Int32"),
-                    "channels": pd.array(out["channels"], dtype="Int32"),
-                    "res_sum": pd.array(out["res_sum"], dtype="Int64"),
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(batches, RESIZE_SUM_SCHEMA)
+    return map_payloads(df, id_col, bin_col, RESIZE_SUM_SCHEMA, rows)
 
 
 def resized_byte_sum(resized: DataFrame) -> DataFrame:
     """Byte-sum fingerprint of `resize_image` output (oracle-comparable
     scalar per image; raw pixel blobs don't hash portably across engines)."""
 
-    def batches(it: Iterator) -> Iterator:
+    def rows(did, r):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            sums = [
-                int(np.frombuffer(bytes(b), dtype=np.uint8).astype("int64").sum())
-                if b is not None
-                else None
-                for b in pdf["resized"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "out_w": pdf["out_w"].astype("int32"),
-                    "out_h": pdf["out_h"].astype("int32"),
-                    "channels": pdf["channels"].astype("Int32"),
-                    "res_sum": pd.array(sums, dtype="Int64"),
-                }
-            )
+        b = r["resized"]
+        s = None if b is None else int(np.frombuffer(b, dtype=np.uint8).astype("int64").sum())
+        return [(did, r["out_w"], r["out_h"], r["channels"], s)]
 
-    return resized.mapInPandas(batches, RESIZE_SUM_SCHEMA)
+    img = F.struct("out_w", "out_h", "channels", "resized").alias("img")
+    return map_payloads(resized.select("doc_id", img), "doc_id", "img", RESIZE_SUM_SCHEMA, rows)
 
 
 # --- MJPEG video: codec-level frame decode -------------------------------
@@ -1319,51 +1206,27 @@ def decode_video_frame_pixels(
     inside the Arrow stage; frame pixels never leave it.
     """
 
-    def batches(it: Iterator) -> Iterator:
+    def rows(did, b):
         import numpy as np
-        import pandas as pd
 
         from .jpeg import decode_jpeg_pixels
 
-        for pdf in it:
-            rows = []
-            for did, b in zip(pdf[id_col], pdf[bin_col]):
-                frames = demux_avi_frames(bytes(b) if b is not None else b"")
-                if not frames:
-                    continue  # undecodable container → no rows
-                k = len(frames)
-                for j in range(n_frames):
-                    src = j * k // n_frames
-                    _off, data = frames[src]
-                    try:
-                        img = decode_jpeg_pixels(data)
-                    except ValueError:
-                        rows.append((int(did), j, src, k) + (None,) * 6)
-                        continue
-                    arr = img.astype(np.int64)
-                    rows.append(
-                        (
-                            int(did),
-                            j,
-                            src,
-                            k,
-                            img.shape[0],
-                            img.shape[1],
-                            img.shape[2],
-                            int(arr.sum()),
-                            int(arr.min()),
-                            int(arr.max()),
-                        )
-                    )
-            cols = [f.name for f in MJPEG_FRAME_PIXEL_SCHEMA.fields]
-            out = pd.DataFrame(rows, columns=cols)
-            for c in ("frame_idx", "src_frame", "n_frames", "height", "width", "channels", "px_min", "px_max"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            out["doc_id"] = pd.array(out["doc_id"], dtype="Int64")
-            out["px_sum"] = pd.array(out["px_sum"], dtype="Int64")
-            yield out
+        frames = demux_avi_frames(b)
+        if not frames:
+            return  # undecodable container → no rows
+        k = len(frames)
+        for j in range(n_frames):
+            src = j * k // n_frames
+            _off, data = frames[src]
+            try:
+                img = decode_jpeg_pixels(data)
+            except ValueError:
+                yield (did, j, src, k) + (None,) * 6
+                continue
+            arr = img.astype(np.int64)
+            yield (did, j, src, k, *img.shape, int(arr.sum()), int(arr.min()), int(arr.max()))
 
-    return df.select(id_col, bin_col).mapInPandas(batches, MJPEG_FRAME_PIXEL_SCHEMA)
+    return map_payloads(df, id_col, bin_col, MJPEG_FRAME_PIXEL_SCHEMA, rows)
 
 
 # --- Perceptual image hashing: near-duplicate images ----------------------
@@ -1414,24 +1277,10 @@ def _payload_signature_stage(df: DataFrame, hasher, id_col: str, bin_col: str) -
     NULL signature (the pair stage drops them); rows with a NULL id are
     skipped the same way — both quarantine, neither fails the task."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def rows(did, b):
+        return [] if did is None else [(did, hasher(b))]
 
-        for pdf in it:
-            ids, hashes = [], []
-            for did, b in zip(pdf[id_col], pdf[bin_col]):
-                if did is None or pd.isna(did):
-                    continue
-                ids.append(int(did))
-                hashes.append(hasher(bytes(b) if b is not None else b""))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(ids, dtype="Int64"),
-                    "ahash": pd.array(hashes, dtype="Int64"),
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(batches, AHASH_SCHEMA)
+    return map_payloads(df, id_col, bin_col, AHASH_SCHEMA, rows)
 
 
 def _sig_pairs(df: DataFrame, sig_fn, id_col: str, bin_col: str, max_hamming: int) -> DataFrame:
@@ -1650,47 +1499,23 @@ def audio_spectrogram(
     row so the doc stays visible downstream.
     """
 
-    def batches(it: Iterator) -> Iterator:
+    def rows(did, b):
         import numpy as np
-        import pandas as pd
 
-        for pdf in it:
-            out: dict[str, list] = {k.name: [] for k in SPECTROGRAM_SCHEMA}
+        dec = decode_wav_pcm(b)
+        if dec is None:
+            return [(did, None, None, None, None)]
+        rate, channels, s = dec
+        mono = s[0::channels].astype(np.int64)
+        n_frames = len(mono) // frame
+        if n_frames == 0:
+            return [(did, None, None, None, None)]
+        frames = mono[: n_frames * frame].reshape(n_frames, frame)
+        mag2 = np.abs(np.fft.rfft(frames, axis=1)) ** 2
+        dom = np.argmax(mag2[:, 1:], axis=1) + 1
+        energy = (frames * frames).sum(axis=1)
+        return [
+            (did, rate, i, int(dom[i]), int(energy[i])) for i in range(n_frames)
+        ]
 
-            def null_row(did: int) -> None:
-                out["doc_id"].append(did)
-                for k in ("sample_rate", "frame_idx", "dominant_bin", "frame_energy"):
-                    out[k].append(None)
-
-            for did, b in zip(pdf[id_col], pdf[bin_col]):
-                did = int(did)
-                dec = decode_wav_pcm(bytes(b) if b is not None else b"")
-                if dec is None:
-                    null_row(did)
-                    continue
-                rate, channels, s = dec
-                mono = s[0::channels].astype(np.int64)
-                n_frames = len(mono) // frame
-                if n_frames == 0:
-                    null_row(did)
-                    continue
-                frames = mono[: n_frames * frame].reshape(n_frames, frame)
-                mag2 = np.abs(np.fft.rfft(frames, axis=1)) ** 2
-                dom = np.argmax(mag2[:, 1:], axis=1) + 1
-                energy = (frames * frames).sum(axis=1)
-                out["doc_id"].extend([did] * n_frames)
-                out["sample_rate"].extend([rate] * n_frames)
-                out["frame_idx"].extend(range(n_frames))
-                out["dominant_bin"].extend(int(x) for x in dom)
-                out["frame_energy"].extend(int(x) for x in energy)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(out["doc_id"], dtype="Int64"),
-                    "sample_rate": pd.array(out["sample_rate"], dtype="Int32"),
-                    "frame_idx": pd.array(out["frame_idx"], dtype="Int32"),
-                    "dominant_bin": pd.array(out["dominant_bin"], dtype="Int32"),
-                    "frame_energy": pd.array(out["frame_energy"], dtype="Int64"),
-                }
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(batches, SPECTROGRAM_SCHEMA)
+    return map_payloads(df, id_col, bin_col, SPECTROGRAM_SCHEMA, rows)

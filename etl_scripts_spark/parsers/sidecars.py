@@ -11,11 +11,11 @@
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..operators.multimodal import _payload_source, map_payloads
 
 
 def read_checksum_file(spark: SparkSession, path: str) -> DataFrame:
@@ -227,7 +227,8 @@ def extract_pdf_text(raw: bytes) -> str:
 
 def pdf_metadata(df, id_col: str = "doc_id", bin_col: str = "payload"):
     """S11: PDF metadata scrape (microarray order number + per-barcode RIN,
-    register-cel-dropbox.py:49-81) as an Arrow-batched mapInPandas stage.
+    register-cel-dropbox.py:49-81) as an Arrow-batched stage
+    (multimodal.map_payloads).
 
     Text extraction is :func:`extract_pdf_text` — a real stdlib content-
     stream parser (uncompressed + FlateDecode) — followed by the same
@@ -238,29 +239,16 @@ def pdf_metadata(df, id_col: str = "doc_id", bin_col: str = "payload"):
     order_re = re.compile(r"Auftrag:\s*(\S+)")
     rin_re = re.compile(r"(Q[A-Z0-9]{4}[0-9]{3}[A-Z][A-Z0-9])\s+RIN:\s*([0-9.]+)")
 
-    def batches(it):
-        import pandas as pd
+    def rows(did, b):
+        text = extract_pdf_text(b)
+        m = order_re.search(text)
+        return [(did, m.group(1) if m else None, dict(rin_re.findall(text)))]
 
-        for pdf in it:
-            ids, orders, rins = [], [], []
-            for did, b in zip(pdf[id_col], pdf[bin_col]):
-                text = extract_pdf_text(bytes(b) if b is not None else b"")
-                m = order_re.search(text)
-                ids.append(int(did))
-                orders.append(m.group(1) if m else None)
-                rins.append({bc: rin for bc, rin in rin_re.findall(text)})
-            yield pd.DataFrame({"doc_id": ids, "order_number": orders, "rin_map": rins})
-
-    return df.select(id_col, bin_col).mapInPandas(batches, PDF_META_SCHEMA)
+    return map_payloads(df, id_col, bin_col, PDF_META_SCHEMA, rows)
 
 
 def with_pdf_payload(df, id_col: str = "doc_id"):
-    """Attach the deterministic synthetic order-sheet PDF as a binary
-    `payload` column (Arrow-batched; the fixture generator runs on the
+    """(doc_id, payload): the deterministic synthetic order-sheet PDF per
+    id (map-only and Arrow-batched; the fixture generator runs on the
     executors, never the driver)."""
-
-    @F.pandas_udf(T.BinaryType())
-    def _gen(ids: pd.Series) -> pd.Series:
-        return ids.map(lambda i: synthetic_pdf_bytes(int(i)))
-
-    return df.withColumn("payload", _gen(F.col(id_col)))
+    return _payload_source(df, id_col, synthetic_pdf_bytes)

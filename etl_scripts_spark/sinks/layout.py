@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..catalog import literal_table
+
 
 def write_files_by_day(files: DataFrame, dest: str, date_col: str = "ingest_date") -> None:
     """Partition the path-info table by ingest day (partition pruning for
@@ -180,9 +182,10 @@ def write_zordered(
 def rowgroup_stats(spark, files: list[str], column: str) -> DataFrame:
     """(file, row_group, n_rows, min_v, max_v) for a NUMERIC column, read
     from parquet FOOTERS only — the metadata every engine's data-skipping
-    consults.  The file list fans out over the cluster and each task opens
-    just the footer (pyarrow reads it without touching row data), so the
-    report costs O(files), not O(bytes) — at 100 TB that is the difference
+    consults.  The driver opens each file's footer (pyarrow reads it
+    without touching row data, as `catalog._footer_schema` does) and the
+    rows come back as a local relation, so the report costs O(files), not
+    O(bytes), and runs no Spark task — at 100 TB that is the difference
     between a metadata sweep and a full scan.
 
     Completes the layout trio: write_zordered produces the clustering,
@@ -190,40 +193,22 @@ def rowgroup_stats(spark, files: list[str], column: str) -> DataFrame:
     bought — the fraction of row groups a predicate can skip.  DuckDB's
     parquet_metadata() reads the same footers, so the law is oracle-able.
     """
-    import pandas as pd
+    import pyarrow.parquet as pq
 
-    files_df = spark.createDataFrame([(f,) for f in files], "file string")
-
-    def read_footers(batches):
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            out = []
-            for f in pdf["file"]:
-                md = pq.ParquetFile(f.removeprefix("file:")).metadata
-                idx = md.schema.names.index(column)
-                for rg in range(md.num_row_groups):
-                    grp = md.row_group(rg)
-                    st = grp.column(idx).statistics
-                    # all-null chunks write statistics with has_min_max
-                    # False (st.min is None) — statless, must-read
-                    no_stats = st is None or not st.has_min_max
-                    out.append(
-                        (
-                            f,
-                            rg,
-                            grp.num_rows,
-                            None if no_stats else float(st.min),
-                            None if no_stats else float(st.max),
-                        )
-                    )
-            yield pd.DataFrame(
-                out, columns=["file", "row_group", "n_rows", "min_v", "max_v"]
-            )
-
-    return files_df.mapInPandas(
-        read_footers,
-        "file string, row_group int, n_rows bigint, min_v double, max_v double",
+    out = []
+    for f in files:
+        md = pq.ParquetFile(f.removeprefix("file:")).metadata
+        idx = md.schema.names.index(column)
+        for rg in range(md.num_row_groups):
+            grp = md.row_group(rg)
+            st = grp.column(idx).statistics
+            # all-null chunks write statistics with has_min_max
+            # False (st.min is None) — statless, must-read
+            no_stats = st is None or not st.has_min_max
+            lo, hi = (None, None) if no_stats else (float(st.min), float(st.max))
+            out.append((f, rg, grp.num_rows, lo, hi))
+    return literal_table(
+        spark, out, "file string, row_group int, n_rows bigint, min_v double, max_v double"
     )
 
 

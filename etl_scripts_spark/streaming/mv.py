@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import literal_table
 from ..operators.sketch import bottom_k_hashes
 from ..reports.anomaly import rolling_zscore
 from ..sinks.commit import (
@@ -118,14 +119,6 @@ def fold_available_now(
     return empty if committed is None else committed
 
 
-def _empty(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    """A zero-row frame of `schema`, planned as an empty local relation
-    (`createDataFrame([], schema)` scans a Python RDD, so every job that
-    reads it starts Python workers)."""
-    nulls = (F.lit(None).cast(f.dataType).alias(f.name) for f in schema)
-    return spark.range(1).select(*nulls).limit(0)
-
-
 # --- materialized-view rollup ----------------------------------------------
 
 
@@ -165,7 +158,9 @@ def rollup_maintenance_available_now(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(feed_path)
     )
-    empty = rollup_table(_empty(spark, feed.schema).drop("_change_type"), group_keys, sum_cols)
+    empty = rollup_table(
+        literal_table(spark, [], feed.schema).drop("_change_type"), group_keys, sum_cols
+    )
     return fold_available_now(
         feed, root, checkpoint_dir, _rollup_step(group_keys, sum_cols), empty
     )
@@ -187,7 +182,8 @@ def _kmv(spark: SparkSession, stream: DataFrame, root: str) -> DataFrame:
         return bottom_k_hashes(state.unionByName(batch).distinct(), "event_type", _KMV_K)
 
     checkpoint = os.path.join(root, "_checkpoint")
-    bottom = fold_available_now(digests, root, checkpoint, step, _empty(spark, digests.schema))
+    empty = literal_table(spark, [], digests.schema)
+    bottom = fold_available_now(digests, root, checkpoint, step, empty)
     k48 = F.conv(F.substring(F.max("_h"), 1, 12), 16, 10).cast("bigint")
     sketch = bottom.groupBy("event_type").agg(
         F.count("*").alias("sketch_n"), k48.alias("_k48")
@@ -276,7 +272,7 @@ def _rolling_zscore(
         "user_id", F.unix_micros(F.col("ts")).alias("ts_us"), cents.alias("v")
     )
     step = _rz_step(window, min_periods, z_thresh)
-    empty = _empty(spark, rows.schema)
+    empty = literal_table(spark, [], rows.schema)
     fold_available_now(rows, root, os.path.join(root, "_checkpoint"), step, empty)
     versions = [
         read_version(spark, root, v)

@@ -20,8 +20,9 @@ import __spark_entry__ as entrymod
 SF = "/root/testdata/sf0.001"
 
 #: queries whose plans intentionally contain an Arrow-batched Python stage
-#: (multimodal codec stubs, external-tool wrappers) — Pandas UDFs, never
-#: row-at-a-time BatchEvalPython.
+#: (multimodal codecs, the PDF scrape, external-tool wrappers) — each one
+#: a `multimodal.map_payloads` stage (MapInArrow), never row-at-a-time
+#: BatchEvalPython and never a pandas stage.
 ARROW_STAGES = {
     "q_multimodal_features",
     "q_multimodal_frame_sample",
@@ -36,9 +37,6 @@ ARROW_STAGES = {
     "q_audio_spectrogram",
     "q_pdf_metadata",
     "q_tool_dryrun",
-    # parquet FOOTER sweep (mapInPandas+pyarrow) + distributed bucket writer
-    # (applyInPandas) — the layout trio's measurement path, O(files)
-    "q_skipping_report",
     # r10 flips: real PNG/BMP decode → 8x8 aHash, and AVI demux + baseline
     # JPEG frame decode — both map-only Arrow stages, pixels never leave
     # the batch
@@ -153,12 +151,12 @@ def _plan(spark, name: str, mode: str = "extended") -> str:
 @pytest.mark.parametrize("name", sorted(set(entrymod.queries()) - STREAMING - EAGER))
 def test_no_row_at_a_time_python(spark, name):
     """BatchEvalPython (per-row pickling) must never appear; Python stages
-    are Arrow-batched (ArrowEvalPython / MapInPandas) and only in the
-    declared codec/tool wrappers."""
+    are Arrow-batched (MapInArrow) and only in the declared codec/tool
+    wrappers."""
     plan = _plan(spark, name)
     assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time Python UDF"
     if name not in ARROW_STAGES:
-        for marker in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
+        for marker in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas", "MapInArrow"):
             assert marker not in plan, f"{name} has an undeclared Python stage ({marker})"
     if name not in CROSS_JOINS_BY_DESIGN:
         for marker in ("CartesianProduct", "BroadcastNestedLoopJoin"):
@@ -169,6 +167,16 @@ def test_no_row_at_a_time_python(spark, name):
     assert "element_at(split(trim(regexp_replace" not in plan, (
         f"{name} inlines the tokenizer expression into a HOF lambda"
     )
+
+
+@pytest.mark.parametrize("name", sorted(ARROW_STAGES))
+def test_codec_stages_are_map_payloads(spark, name):
+    """Every declared Python stage is the one `map_payloads` driver:
+    MapInArrow, and no pandas stage of any kind."""
+    plan = _plan(spark, name)
+    assert "MapInArrow" in plan, f"{name} has no map_payloads stage"
+    for marker in ("MapInPandas", "ArrowEvalPython", "FlatMapGroupsInPandas"):
+        assert marker not in plan, f"{name} has a pandas stage ({marker})"
 
 
 def test_pricing_summary_scan_is_minimal(spark):
@@ -522,7 +530,7 @@ def _lazy_plan_of(df):
 
 def _audit_lazy(plan: str, label: str) -> None:
     assert "BatchEvalPython" not in plan, f"{label}: row-at-a-time Python UDF"
-    for marker in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
+    for marker in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas", "MapInArrow"):
         assert marker not in plan, f"{label}: undeclared Python stage ({marker})"
     assert "element_at(split(trim(regexp_replace" not in plan, (
         f"{label}: tokenizer expression inlined into a HOF lambda"
@@ -631,3 +639,55 @@ def test_batch_retrieval_lazy_plan_shape(spark):
     formatted = buf.getvalue()
     assert "LeftSemi" in formatted, "postings not pruned by the query vocabulary"
     assert "WindowGroupLimit" in formatted, "top-k cut lost its group-limit"
+
+
+@pytest.mark.parametrize("arrow", ["false", "true"])
+def test_literal_table_is_a_local_relation(spark, arrow):
+    """catalog.literal_table plans a LocalRelation (no Python RDD scan)
+    whatever the Arrow conf, and round-trips values and nulls."""
+    from decimal import Decimal
+
+    from etl_scripts_spark.catalog import literal_table
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        rows = [(1, "a", Decimal("1.25")), (None, None, None)]
+        df = literal_table(spark, rows, "k bigint, s string, d decimal(10,2)")
+        empty = literal_table(spark, [], "k bigint")
+        for d in (df, empty):
+            plan = d._jdf.queryExecution().optimizedPlan().toString()
+            assert plan.startswith("LocalRelation"), plan
+        assert [tuple(r) for r in df.collect()] == rows
+        assert empty.collect() == [] and empty.schema.simpleString() == "struct<k:bigint>"
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_no_python_list_dataframes_in_the_program():
+    """`spark.createDataFrame(<list>)` scans a Python RDD; the program
+    builds every literal table through catalog.literal_table."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    sources = [root / "__spark_entry__.py", *sorted((root / "etl_scripts_spark").rglob("*.py"))]
+    found = []
+    for path in sources:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        helper = {
+            id(n)
+            for f in ast.walk(tree)
+            if isinstance(f, ast.FunctionDef) and f.name == "literal_table"
+            for n in ast.walk(f)
+        }
+        found += [
+            f"{path.relative_to(root)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "createDataFrame"
+            and id(n) not in helper
+        ]
+    assert not found, f"createDataFrame outside catalog.literal_table: {found}"

@@ -1,4 +1,5 @@
-"""Unit tests for mapInPandas stages: external tools, archives, multimodal.
+"""Unit tests for the Arrow-batched Python stages (multimodal.map_payloads
+and its callers): external tools, archives, multimodal.
 
 These stages are rows-only at the driver gate (no SQL oracle), so their
 determinism and failure handling are pinned here instead.
@@ -11,12 +12,63 @@ import tarfile
 import zipfile
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_scripts_spark.operators import external, multimodal
 
 
 def _items(spark, rows, schema):
     return spark.createDataFrame(rows, schema)
+
+
+def test_map_payloads_row_law_and_typing(spark):
+    """One input row yields 0, 1 or 3 output rows; a NULL binary payload
+    reaches the law as b"" and a NULL id as None; None is NULL in an int
+    column and a dict is a map value (the pdf_metadata `rin_map` shape)."""
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("n", T.IntegerType()),
+            T.StructField("m", T.MapType(T.StringType(), T.StringType())),
+        ]
+    )
+
+    def rows(did, b):
+        # the payload names its own fan-out: b"0" none, b"3" three,
+        # b"" one (and bytes only: a None payload would raise here)
+        k = int(b) if b else 1
+        return [(did, None if i == 1 else i, {"b": repr(b)}) for i in range(k)]
+
+    df = _items(
+        spark,
+        [(1, bytearray(b"0")), (2, None), (3, bytearray(b"3")), (None, bytearray(b""))],
+        "doc_id LONG, payload BINARY",
+    )
+    out = multimodal.map_payloads(df, "doc_id", "payload", schema, rows)
+    assert out.schema == schema
+    got = sorted(
+        (tuple(r) for r in out.collect()), key=lambda r: (r[0] is None, r[0] or 0, r[1] or 0)
+    )
+    assert got == [
+        (2, 0, {"b": "b''"}),
+        (3, 0, {"b": "b'3'"}),
+        (3, None, {"b": "b'3'"}),
+        (3, 2, {"b": "b'3'"}),
+        (None, 0, {"b": "b''"}),
+    ]
+    # a batch whose every row yields nothing is a typed empty batch
+    none = _items(
+        spark, [(1, bytearray(b"0")), (2, bytearray(b"0"))], "doc_id LONG, payload BINARY"
+    ).coalesce(1)
+    assert multimodal.map_payloads(none, "doc_id", "payload", schema, rows).collect() == []
+
+
+def test_tool_stage_null_input_is_none(spark):
+    """The tool input is a string column, so a NULL reaches the law as
+    None (not b"") and renders as str(None)."""
+    df = _items(spark, [(1, None)], "item_id LONG, input STRING")
+    out = external.run_tool_stage(df, ["conv", "{}"], dryrun=True).collect()
+    assert [(r.item_id, r.status, r.output) for r in out] == [(1, "dryrun", "conv None")]
 
 
 def test_tool_dryrun_is_deterministic(spark):
