@@ -8219,24 +8219,40 @@ def entry(spark: SparkSession) -> DataFrame:
 # — a regression in a long-green query can hide for at most that long.
 
 #: Head of the rotation: queries whose code changed since their last
-#: green CORRECTNESS row.  First the sixteen codec/tool queries whose
-#: Python stage is now the one `multimodal.map_payloads` driver
-#: (mapInArrow), q_skipping_report (Spark's partitioned writer and a
-#: driver-side footer sweep) and the four queries whose literal tables
-#: are now `catalog.literal_table` local relations; then the two stream
-#: folds that left Python state (KMV, rolling z-score), the batch rolling
-#: z-score, which now evaluates its guard once per row, and the two
-#: queries whose committed snapshots are read without a schema-inference
-#: job; then the seven vector-search consumers, whose quantizers now
-#: share one Lloyd trainer (and IVF pins its candidate join's build
-#: side), then the nine connected-components consumers, whose label
-#: propagation pointer-jumps from round 6 and drops null endpoints every
-#: round, then the two streaming sketches that became the batch sketch
-#: operators drained in complete mode, then six of the perfbench mix
-#: queries whose schemas now come from the parquet footer.  The head is
-#: capped at the driver's 50-query window; everything else rides the
-#: least-recently-green order.
+#: green CORRECTNESS row.  First the eight native stream drains, whose
+#: state shard count is now min(8, configured shuffle partitions), the
+#: four range-prefix queries, whose range exchange now takes the session's
+#: shuffle partitions, and the four queries whose walks stop on (or take
+#: their vocabulary from) the checkpoint's own count; then the sixteen
+#: codec/tool queries whose Python stage is the one
+#: `multimodal.map_payloads` driver (mapInArrow), q_skipping_report
+#: (Spark's partitioned writer and a driver-side footer sweep) and three
+#: queries whose literal tables are `catalog.literal_table` local
+#: relations; then the two stream folds that left Python state (KMV,
+#: rolling z-score), the batch rolling z-score and the two queries whose
+#: committed snapshots are read without a schema-inference job; then the
+#: seven vector-search consumers on the one Lloyd trainer and two
+#: connected-components consumers.  The head is capped at the driver's
+#: 50-query window; everything else (the other CC consumers and perfbench
+#: mix queries that stood here before) rides the least-recently-green
+#: order.
 _CHANGED_THIS_ROUND = (
+    "q_stream_sessionize",
+    "q_stream_hourly_rollup",
+    "q_stream_enriched",
+    "q_stream_interval_join",
+    "q_stream_dedup",
+    "q_stream_user_totals",
+    "q_stream_hll",
+    "q_stream_cms",
+    "q_lm_buckets",
+    "q_exact_percentiles",
+    "q_mad_outliers",
+    "q_plan_compaction",
+    "q_experimental_design",
+    "q_lineage_roots",
+    "q_bfs_distances",
+    "q_setsim_pairs",
     "q_multimodal_features",
     "q_multimodal_frame_sample",
     "q_multimodal_image_meta",
@@ -8254,7 +8270,6 @@ _CHANGED_THIS_ROUND = (
     "q_tiff_pixel_stats",
     "q_g711_audio_stats",
     "q_skipping_report",
-    "q_bfs_distances",
     "q_phrase_search",
     "q_mapping_broadcast_lookup",
     "q_domain_quality_rollup",
@@ -8272,21 +8287,6 @@ _CHANGED_THIS_ROUND = (
     "q_ivf_recall",
     "q_graph_components_chain",
     "q_graph_components",
-    "q_resolve_entities",
-    "q_incremental_components",
-    "q_near_dup_clusters",
-    "q_signature_dup_clusters",
-    "q_span_dup_clusters",
-    "q_component_sizes",
-    "q_corpus_curation",
-    "q_stream_hll",
-    "q_stream_cms",
-    "q_query_files",
-    "q_projects_with_data",
-    "q_sample_lookup",
-    "q_experimental_design",
-    "q_pricing_summary",
-    "q_revenue_by_nation",
 )
 
 

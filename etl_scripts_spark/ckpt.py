@@ -24,7 +24,9 @@ recomputed -- a later action on it raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
 after the new round's checkpoint, and never the DataFrame an operator
 returns.  The two exceptions keep every round: ``graph.bfs_distances`` and
 ``lineage.ancestors_to_root`` return the union of all their per-hop slices,
-so each hop's checkpoint is still read when the result is collected.
+so each hop's checkpoint is still read when the result is collected.  They
+call ``next_round(frame, None, cols)`` -- ``prev=None`` frees nothing -- and
+stop on the observed count of 0, so the empty last hop costs no extra job.
 
 Convergence.  A fixpoint round is fingerprinted by ``(count,
 bit_xor(xxhash64(cols)))``, observed DURING the eager checkpoint's own job

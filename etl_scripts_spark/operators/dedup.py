@@ -21,7 +21,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import fixpoint, free_local_checkpoint
+from ..ckpt import fixpoint, free_local_checkpoint, next_round
 from ..exactness import e9_div_expr
 from .text import normalize_text, words
 
@@ -1048,15 +1048,12 @@ def setsim_pairs(
     """
     _check_setsim_threshold(t_num, t_den)
     toks = _setsim_toks(df, text_col, id_col)
-    # checkpointed so the regime/salt decision's count() is a
-    # vocabulary-sized lookup and the doc build reads the materialized
-    # df table instead of re-aggregating it
-    freq = (
-        toks.groupBy("_tok")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .localCheckpoint(eager=True)
+    # checkpointed so the doc build reads the materialized df table instead
+    # of re-aggregating it; the checkpoint's own job counts the vocabulary
+    # for the regime/salt decision
+    freq, (n_vocab, _h) = next_round(
+        toks.groupBy("_tok").agg(F.count(F.lit(1)).alias("_df")), None, ["_tok"]
     )
-    n_vocab = freq.count()
     n_salts = _setsim_salts(freq, n_vocab)
     if n_vocab <= 64:
         return _setsim_pairs_bitmask(toks, freq, t_num, t_den, n_salts)

@@ -156,8 +156,8 @@ def bfs_distances(
     visited set keeps only first-time nodes.  State is node-sized; each
     round's new slice is localCheckpointed (the kmeans/pagerank round
     pattern) so the plan stays flat across rounds.  Rounds stop early on
-    an empty frontier (isEmpty — an aggregate action, no row data to the
-    driver).  The (possibly derived) edge table is materialized ONCE at
+    an empty frontier, counted by the checkpoint's own job (no extra
+    job).  The (possibly derived) edge table is materialized ONCE at
     entry instead of re-executing its upstream plan every hop, and freed
     before return — the result union reads only the per-hop checkpoints,
     never the edge table itself.
@@ -185,15 +185,17 @@ def bfs_distances(
     )
     frontier = dist
     for h in range(1, max_hops + 1):
-        nxt = (
+        # prev=None: every slice is read by the returned union
+        nxt, (n, _h) = next_round(
             frontier.join(e, frontier["node"] == e["_s"])
             .select(F.col("_d").alias("node"))
             .distinct()
             .join(dist, "node", "left_anti")
-            .select("node", F.lit(h).cast("int").alias("dist"))
-            .localCheckpoint(eager=True)
+            .select("node", F.lit(h).cast("int").alias("dist")),
+            None,
+            ["node"],
         )
-        if nxt.isEmpty():
+        if n == 0:
             # the empty terminal frontier joins no result — free it now;
             # every non-empty slice stays live inside the returned union
             free_local_checkpoint(nxt)

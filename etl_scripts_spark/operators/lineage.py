@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..ckpt import next_round
+
 
 def parent_map(codes: DataFrame, edges: DataFrame, code_col: str = "code") -> DataFrame:
     """1-hop child→parents expansion (reporting-plugins/get-parentmap/script.py:21-26)."""
@@ -48,11 +50,18 @@ def ancestors_to_root(edges: DataFrame, max_hops: int = 20) -> DataFrame:
             stepped.filter(F.col("_anc_parent").isNull())
             .select("child_code", F.col("anc").alias("root_code"), "depth")
         )
-        frontier = stepped.filter(F.col("_anc_parent").isNotNull()).select(
-            "child_code", F.col("_anc_parent").alias("anc"), (F.col("depth") + 1).alias("depth")
+        # prev=None: each frontier is read by its hop's slice in the returned
+        # union; the checkpoint's own job counts the new frontier
+        frontier, (n, _h) = next_round(
+            stepped.filter(F.col("_anc_parent").isNotNull()).select(
+                "child_code",
+                F.col("_anc_parent").alias("anc"),
+                (F.col("depth") + 1).alias("depth"),
+            ),
+            None,
+            ["child_code", "anc", "depth"],
         )
-        frontier = frontier.localCheckpoint(eager=True)
-        if frontier.isEmpty():
+        if n == 0:
             break
     out = results[0]
     for r in results[1:]:

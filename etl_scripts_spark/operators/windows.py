@@ -85,76 +85,55 @@ def top_k_per_group(
 
 
 def global_row_number(
-    df: DataFrame, order_cols: list[str], n_parts: int = 32, out_col: str = "rank"
+    df: DataFrame, order_cols: list[str], out_col: str = "rank"
 ) -> DataFrame:
     """Exact global row_number over a total order WITHOUT collapsing to a
     single partition (the classic `Window.orderBy(...)` trap that
-    serializes the whole table through one task).
-
-    Distributed shape: range-partition on the order key, per-partition
-    local row_number (the window partitions by the physical range
-    partition, so every task ranks only its slice), then add the
-    broadcast cumulative size of all earlier partitions.  The result
-    depends only on the total order, not on where the sampled range
-    boundaries land — `order_cols` must therefore be a total order
-    (include a unique id as the last column).
-
-    The range-partitioned frame is localCheckpointed because BOTH the
-    local-rank branch and the partition-size branch read it: a re-sampled
-    range exchange between branches would make offsets inconsistent with
-    local ranks.
-    """
-    ranked, _sizes = _range_ranked(df, order_cols, n_parts, out_col)
-    return ranked.drop("_pid")
-
-
-def _range_ranked(
-    df: DataFrame, order_cols: list[str], n_parts: int, out_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """Shared internals of :func:`global_row_number` / :func:`ntile_buckets`
-    / :func:`exact_percentiles`: (globally-ranked frame still carrying
-    `_pid`, partition-sizes frame (_pid, _cnt)).  Consumers that need the
-    TOTAL row count aggregate the ≤ n_parts `sizes` rows instead of
-    re-counting the ranked frame — the count branch re-plans the
-    broadcast-offsets join over a second scan of the checkpoint (guide
-    §2.4 duplicated subtree; measured on q_lm_buckets r14)."""
-    parted = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    local = parted.withColumn("_lrn", F.row_number().over(w))
-    sizes = parted.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    woff = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = sizes.select(  # ≤ n_parts rows — the only single-partition window
-        "_pid", F.coalesce(F.sum("_cnt").over(woff), F.lit(0)).alias("_off")
-    )
-    ranked = (
-        local.join(F.broadcast(offs), "_pid")
-        .withColumn(out_col, F.col("_lrn") + F.col("_off"))
-        .drop("_lrn", "_off")
-    )
-    return ranked, sizes
+    serializes the whole table through one task): the running sum of
+    ``lit(1)`` in :func:`_range_ranked`.  `order_cols` must be a total
+    order (include a unique id as the last column)."""
+    return _range_ranked(df, order_cols, out_col)[0].drop("_pid")
 
 
 def global_running_sum(
-    df: DataFrame,
-    order_cols: list[str],
-    sum_col: str,
-    n_parts: int = 32,
-    out_col: str = "running",
+    df: DataFrame, order_cols: list[str], sum_col: str, out_col: str = "running"
 ) -> DataFrame:
     """Exact global running (prefix) sum of `sum_col` over a total order,
-    the same distributed shape as :func:`global_row_number`: range
-    partition, per-partition local prefix sums, broadcast cumulative
-    partition totals — no single-partition window over the data.
+    the same distributed shape as :func:`global_row_number`.
 
     `order_cols` must be a total order (include a unique id last);
     `sum_col` must be integral/decimal for the sum to be exact.
     """
+    return _range_ranked(df, order_cols, out_col, F.col(sum_col))[0].drop("_pid")
+
+
+def _range_ranked(
+    df: DataFrame, order_cols: list[str], out_col: str, measure=None
+) -> tuple[DataFrame, DataFrame]:
+    """The one range-prefix kernel: the exact global running sum of
+    `measure` (default ``lit(1)``, i.e. the global rank) over the total
+    order `order_cols`.  Returns (frame + `out_col`, still carrying
+    `_pid`; per-partition totals (_pid, _tot)).
+
+    Distributed shape: range-partition on the order key (the session's
+    shuffle partitions, which AQE may coalesce — coalescing merges
+    adjacent ranges, so partition ids stay in key order), a per-partition
+    local prefix sum (the window partitions by the physical range
+    partition, so every task sums only its slice), plus the broadcast
+    sum of all earlier partitions' totals.  The result depends only on
+    the total order, not on where the sampled range boundaries land.
+
+    The range-partitioned frame is localCheckpointed because BOTH the
+    local-prefix branch and the partition-totals branch read it: a
+    re-sampled range exchange between branches would make offsets
+    inconsistent with local sums.  Consumers that need the TOTAL row
+    count aggregate the one-row-per-partition `totals` instead of
+    re-counting the ranked frame — the count branch re-plans the
+    broadcast-offsets join over a second scan of the checkpoint (guide
+    §2.4 duplicated subtree; measured on q_lm_buckets r14)."""
+    m = F.lit(1) if measure is None else measure
     parted = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
+        df.repartitionByRange(*[F.col(c) for c in order_cols])
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint(eager=True)
     )
@@ -163,24 +142,24 @@ def global_running_sum(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    local = parted.withColumn("_lsum", F.sum(sum_col).over(w))
-    totals = parted.groupBy("_pid").agg(F.sum(sum_col).alias("_psum"))
+    local = parted.withColumn("_lsum", F.sum(m).over(w))
+    totals = parted.groupBy("_pid").agg(F.sum(m).alias("_tot"))
     woff = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = totals.select(  # ≤ n_parts rows — the only single-partition window
-        "_pid", F.coalesce(F.sum("_psum").over(woff), F.lit(0)).alias("_off")
+    offs = totals.select(  # one row per partition — the only single-partition window
+        "_pid", F.coalesce(F.sum("_tot").over(woff), F.lit(0)).alias("_off")
     )
-    return (
+    ranked = (
         local.join(F.broadcast(offs), "_pid")
         .withColumn(out_col, F.col("_lsum") + F.col("_off"))
-        .drop("_pid", "_lsum", "_off")
+        .drop("_lsum", "_off")
     )
+    return ranked, totals
 
 
 def ntile_buckets(
     df: DataFrame,
     order_cols: list[str],
     n_buckets: int = 4,
-    n_parts: int = 32,
     out_col: str = "bucket",
 ) -> DataFrame:
     """Exact ANSI NTILE over a total order, built on
@@ -191,15 +170,15 @@ def ntile_buckets(
     tests/test_stages.py pins the formula against the builtin ntile on a
     remainder-bearing frame.
     """
-    # total row count from the ≤ n_parts partition sizes, NOT a count over
+    # total row count from the one-row-per-partition totals, NOT a count over
     # the ranked frame: Catalyst prunes the unused Window from that count,
     # but the branch still re-plans the broadcast-offsets join — its own
     # Exchange + HashAggregate tower over a second scan of the checkpoint
     # (r14: q_lm_buckets 16 → 14 Exchanges, ABAB pairs 4.17 → 3.30 s)
-    ranked, sizes = _range_ranked(df, order_cols, n_parts, out_col="_grank")
+    ranked, totals = _range_ranked(df, order_cols, "_grank")
     ranked = ranked.drop("_pid")
-    n_row = sizes.groupBy().agg(
-        F.coalesce(F.sum("_cnt"), F.lit(0)).cast("bigint").alias("_n")
+    n_row = totals.groupBy().agg(
+        F.coalesce(F.sum("_tot"), F.lit(0)).cast("bigint").alias("_n")
     )
     out = ranked.join(F.broadcast(n_row))
     q = F.floor(F.col("_n") / n_buckets)
@@ -217,7 +196,6 @@ def exact_percentiles(
     value_col: str,
     pcts: tuple[int, ...] = (25, 50, 75),
     by: str | None = None,
-    n_parts: int = 32,
 ) -> DataFrame:
     """Exact distributed PERCENTILE_DISC at integer percents:
     (by?, pct, value) — the value at rank ceil(pct·n/100) of the non-NULL
@@ -245,14 +223,12 @@ def exact_percentiles(
             raise ValueError(f"pcts must be integers in [1, 100], got {pct!r}")
     vals = df.filter(F.col(value_col).isNotNull())
     if by is None:
-        # total row count from the partition sizes (see _range_ranked) —
+        # total row count from the partition totals (see _range_ranked) —
         # never a second counting pass over the window-sorted frame
-        ranked, sizes = _range_ranked(
-            vals.select(value_col), [value_col], n_parts, out_col="_rn"
-        )
+        ranked, totals = _range_ranked(vals.select(value_col), [value_col], "_rn")
         ranked = ranked.drop("_pid")
-        counts = sizes.groupBy().agg(
-            F.coalesce(F.sum("_cnt"), F.lit(0)).cast("bigint").alias("_n")
+        counts = totals.groupBy().agg(
+            F.coalesce(F.sum("_tot"), F.lit(0)).cast("bigint").alias("_n")
         )
         from .corpus import join_singleton
 

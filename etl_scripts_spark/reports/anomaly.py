@@ -127,7 +127,6 @@ def mad_outliers(
     by: str | None = None,
     k_num: int = 3,
     k_den: int = 1,
-    n_parts: int = 32,
 ) -> DataFrame:
     """Robust outlier flags via the median-absolute-deviation rule:
     every input row annotated with (med, mad, is_outlier) where
@@ -175,11 +174,11 @@ def mad_outliers(
             F.broadcast(stat), base[by].eqNullSafe(stat["_g"]), "left"
         ).drop("_g")
 
-    med = exact_percentiles(df, value_col, (50,), by, n_parts)
+    med = exact_percentiles(df, value_col, (50,), by)
     with_med = attach(df, med, "med")
     dev = F.abs(F.col(value_col) - F.col("med"))
     with_dev = with_med.withColumn("_dev", dev)
-    mad = exact_percentiles(with_dev, "_dev", (50,), by, n_parts)
+    mad = exact_percentiles(with_dev, "_dev", (50,), by)
     out = attach(with_dev, mad, "mad")
     flag = F.when(
         F.col(value_col).isNotNull() & F.col("med").isNotNull(),

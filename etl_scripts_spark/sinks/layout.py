@@ -87,7 +87,6 @@ def plan_compaction(
     target_bytes: int,
     path_col: str = "path",
     size_col: str = "size_bytes",
-    n_parts: int = 32,
 ) -> DataFrame:
     """Byte-based bin packing over a FILE LISTING (no data read): assign
     every file to a merge bin of ~`target_bytes`, the planning half of
@@ -121,7 +120,6 @@ def plan_compaction(
         # breaks size ties to make the order total
         order_cols=["_negsize", "path"],
         sum_col="size_bytes",
-        n_parts=n_parts,
         out_col="_run",
     ).withColumn("bin_id", F.expr(f"(_run - 1) DIV {int(target_bytes)}"))
     return run.select("path", "size_bytes", "bin_id")

@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketch import cms_build, hll_registers
-from .tuning import state_shuffle_partitions
 
 _name_counter = itertools.count()
 
@@ -44,13 +43,16 @@ def _events_stream(spark: SparkSession, events_parquet: str) -> DataFrame:
     return normalize_events(spark.readStream.schema(schema).parquet(glob_path))
 
 
-def _drain(
-    spark: SparkSession, out: DataFrame, approx_keys: int, mode: str = "complete"
-) -> DataFrame:
-    """Shared AvailableNow → memory-sink drain with the state shard
-    count sized to the key cardinality (see :mod:`.tuning`)."""
+def _drain(spark: SparkSession, out: DataFrame, mode: str = "complete") -> DataFrame:
+    """Shared AvailableNow → memory-sink drain over min(8, configured)
+    state shards."""
     name = f"etl_stream_out_{next(_name_counter)}"
-    with state_shuffle_partitions(spark, approx_keys):
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+    # the state shard count is fixed at query start and AQE cannot coalesce
+    # it; the local[32] sweep (OPTIMIZATION_r14 §3) measured 8 shards best
+    spark.conf.set(conf, str(min(8, int(old))))
+    try:
         query = (
             out.writeStream.outputMode(mode)
             .format("memory")
@@ -59,6 +61,8 @@ def _drain(
             .start()
         )
         query.awaitTermination()
+    finally:
+        spark.conf.set(conf, old)
     return spark.table(name)
 
 
@@ -66,7 +70,6 @@ def session_windows_available_now(
     spark: SparkSession,
     events_parquet: str,
     gap_minutes: int = 30,
-    approx_keys: int = 100_000,
 ) -> DataFrame:
     """Streaming gap-based sessionization via the native session_window
     operator (merging keyed session state, watermark-driven eviction),
@@ -89,7 +92,7 @@ def session_windows_available_now(
         .agg(F.count("*").alias("n_events"))
     )
     gap_us = gap_minutes * 60 * 1_000_000
-    return _drain(spark, agg, approx_keys).select(
+    return _drain(spark, agg).select(
         "user_id",
         F.col("session_window.start").alias("session_start"),
         "n_events",
@@ -101,17 +104,14 @@ def session_windows_available_now(
     )
 
 
-def hourly_counts_available_now(
-    spark: SparkSession, events_parquet: str, approx_keys: int = 4000
-) -> DataFrame:
+def hourly_counts_available_now(spark: SparkSession, events_parquet: str) -> DataFrame:
     """Streaming tumbling-hour rollup over a parquet path, drained to a batch
     result via Trigger.AvailableNow + memory sink.
 
     Uses `window(ts, '1 hour')` — the streaming-native tumbling window whose
     start equals `date_trunc('hour', ts)`, so the batch oracle matches.
     Aggregation state is keyed by (hour-window × event_type) — a few
-    thousand keys — so the state shard count is sized to that cardinality,
-    not to the event volume (see :mod:`.tuning`).
+    thousand keys, whatever the event volume.
     """
     stream = _events_stream(spark, events_parquet)
     agg = (
@@ -122,7 +122,7 @@ def hourly_counts_available_now(
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
         )
     )
-    return _drain(spark, agg, approx_keys).select(
+    return _drain(spark, agg).select(
         F.date_format(F.col("window.start"), "yyyy-MM-dd HH").alias("hour_start"),
         "event_type",
         "n_events",
@@ -136,7 +136,6 @@ def enriched_counts_available_now(
     dim: DataFrame,
     dim_key: str,
     group_col: str,
-    approx_keys: int = 256,
 ) -> DataFrame:
     """Stream-static enrichment join + windowed rollup — THE standard
     streaming-dimension pattern: the event stream joins a static (slowly-
@@ -145,8 +144,8 @@ def enriched_counts_available_now(
     Scale shape: the static side broadcasts (re-resolved per micro-batch,
     so a dim refresh between batches is picked up); the stream side never
     shuffles until the windowed aggregate, whose state is keyed by
-    (attribute × hour) — a tiny keyspace, so shards are sized to it, not
-    to event volume.  Events missing from the dimension are kept
+    (attribute × hour) — a tiny keyspace, whatever the event volume.
+    Events missing from the dimension are kept
     (left join, attribute NULL→'UNKNOWN') — dropping them would silently
     under-count, the streaming analogue of the keep-flowing contract.
     """
@@ -162,7 +161,7 @@ def enriched_counts_available_now(
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
         )
     )
-    return _drain(spark, agg, approx_keys).select(
+    return _drain(spark, agg).select(
         F.date_format(F.col("window.start"), "yyyy-MM-dd HH").alias("hour_start"),
         F.col("_grp").alias("group_key"),
         "n_events",
@@ -176,7 +175,6 @@ def interval_join_available_now(
     left_type: str = "purchase",
     right_type: str = "click",
     window_hours: int = 6,
-    approx_keys: int = 1000,
 ) -> DataFrame:
     """STREAM-STREAM interval join: each left-type event joins the same
     user's right-type events from the preceding `window_hours` — the
@@ -233,9 +231,7 @@ def interval_join_available_now(
             / F.lit(1_000_000)
         ).cast("bigint").alias("lag_s"),
     )
-    # join state is keyed by user — shard count sized to key cardinality
-    # (each extra shard is 4 state stores here: left/right × keyed/KV)
-    return _drain(spark, out, approx_keys, mode="append")
+    return _drain(spark, out, mode="append")
 
 
 def hopping_counts_available_now(
@@ -243,7 +239,6 @@ def hopping_counts_available_now(
     events_parquet: str,
     width_s: int = 3600,
     slide_s: int = 900,
-    approx_keys: int = 4000,
 ) -> DataFrame:
     """Streaming HOPPING-window rollup drained to a batch result — the
     streaming twin of operators.windows.hopping_rollup, completing the
@@ -271,7 +266,7 @@ def hopping_counts_available_now(
             ).alias("value_cents"),
         )
     )
-    return _drain(spark, agg, approx_keys).select(
+    return _drain(spark, agg).select(
         F.unix_micros(F.col("window.start")).alias("window_start_us"),
         F.unix_micros(F.col("window.end")).alias("window_end_us"),
         "event_type",
@@ -280,7 +275,7 @@ def hopping_counts_available_now(
     )
 
 
-def _first_seen(spark: SparkSession, stream: DataFrame, approx_keys: int) -> DataFrame:
+def _first_seen(spark: SparkSession, stream: DataFrame) -> DataFrame:
     """Keyed first-seen state over any events stream: per (user_id,
     event_type) the min of struct(ts, event_id) — the (ts, event_id)
     lexicographic first arrival, stable under any micro-batch arrival
@@ -292,7 +287,7 @@ def _first_seen(spark: SparkSession, stream: DataFrame, approx_keys: int) -> Dat
         F.count("*").alias("n"),
     )
     return (
-        _drain(spark, agg, approx_keys, mode="update")
+        _drain(spark, agg, mode="update")
         .groupBy("user_id", "event_type")
         .agg(F.min("first").alias("first"), F.max("n").alias("n"))
         .select(
@@ -306,7 +301,7 @@ def _first_seen(spark: SparkSession, stream: DataFrame, approx_keys: int) -> Dat
 
 
 def stateful_first_seen_available_now(
-    spark: SparkSession, events_parquet: str, approx_keys: int = 7500
+    spark: SparkSession, events_parquet: str
 ) -> DataFrame:
     """Dedup-on-ingest as keyed streaming state: the reference's "already
     registered → log & drop" semantics (SURVEY §2.8) keyed by (user_id,
@@ -315,10 +310,10 @@ def stateful_first_seen_available_now(
     aggregation, so it never leaves the JVM.  The state store IS the
     registered-set; a restart resumes from the checkpoint instead of
     re-registering."""
-    return _first_seen(spark, _events_stream(spark, events_parquet), approx_keys)
+    return _first_seen(spark, _events_stream(spark, events_parquet))
 
 
-def _user_totals(spark: SparkSession, stream: DataFrame, approx_keys: int) -> DataFrame:
+def _user_totals(spark: SparkSession, stream: DataFrame) -> DataFrame:
     """Per-user running (count, value-cents) over any events stream.  Cents
     via floor(v*100 + 0.5) — the same IEEE law in Spark and any SQL
     oracle, unlike round() whose tie-breaking differs per engine.  Both
@@ -328,7 +323,7 @@ def _user_totals(spark: SparkSession, stream: DataFrame, approx_keys: int) -> Da
         F.sum(F.floor(F.col("value") * 100.0 + F.lit(0.5))).alias("sum_cents"),
     )
     return (
-        _drain(spark, agg, approx_keys, mode="update")
+        _drain(spark, agg, mode="update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -338,14 +333,12 @@ def _user_totals(spark: SparkSession, stream: DataFrame, approx_keys: int) -> Da
 
 
 def stateful_user_totals_available_now(
-    spark: SparkSession, events_parquet: str, approx_keys: int = 1500
+    spark: SparkSession, events_parquet: str
 ) -> DataFrame:
     """Per-user running totals as keyed streaming state, drained to a
     batch result — the final state equals the batch groupBy, which is
-    what the oracle checks.  The catalog's events table has ~1.5 k
-    distinct users per sf; at production key counts pass the
-    table-statistics estimate."""
-    return _user_totals(spark, _events_stream(spark, events_parquet), approx_keys)
+    what the oracle checks."""
+    return _user_totals(spark, _events_stream(spark, events_parquet))
 
 
 #: streaming HLL precision: m=1024 registers per event type
@@ -355,7 +348,7 @@ _CMS_D = 4
 _CMS_W = 256
 
 
-def _hll(spark: SparkSession, stream: DataFrame, approx_keys: int) -> DataFrame:
+def _hll(spark: SparkSession, stream: DataFrame) -> DataFrame:
     """sketch.hll_registers over any events stream, drained in complete
     mode: a register is max(rho) per (event_type, bucket), so the state
     store holds the register table itself and the sink holds its final
@@ -366,19 +359,16 @@ def _hll(spark: SparkSession, stream: DataFrame, approx_keys: int) -> DataFrame:
         "v",
         p=_HLL_P,
     )
-    return _drain(spark, regs, approx_keys << _HLL_P)
+    return _drain(spark, regs)
 
 
-def stateful_hll_available_now(
-    spark: SparkSession, events_parquet: str, approx_keys: int = 8
-) -> DataFrame:
+def stateful_hll_available_now(spark: SparkSession, events_parquet: str) -> DataFrame:
     """Streaming HyperLogLog maintenance: per-event-type registers kept
     in the state store (≤ 2^p keys per type, whatever the stream volume).
     The drain equals the batch register table over all events
     row-for-row — (event_type, bucket, register), absent buckets implicit
-    — so hll_estimate composes unchanged.  `approx_keys` counts event
-    types."""
-    return _hll(spark, _events_stream(spark, events_parquet), approx_keys)
+    — so hll_estimate composes unchanged."""
+    return _hll(spark, _events_stream(spark, events_parquet))
 
 
 def _count_min(spark: SparkSession, stream: DataFrame) -> DataFrame:
@@ -393,7 +383,7 @@ def _count_min(spark: SparkSession, stream: DataFrame) -> DataFrame:
         d=_CMS_D,
         w=_CMS_W,
     )
-    return _drain(spark, cms, _CMS_D * _CMS_W)
+    return _drain(spark, cms)
 
 
 def stateful_cms_available_now(

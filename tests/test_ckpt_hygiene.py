@@ -134,6 +134,31 @@ def test_label_prop_jump_round_runs_its_aggregate_once(spark, monkeypatch):
     assert max(jump) <= max(plain) + 1, jobs
 
 
+def test_ancestors_to_root_runs_one_job_per_hop(spark):
+    # a 3-tier chain c -> b -> a takes 2 hops; each hop's checkpoint job
+    # also counts its frontier, so the empty last frontier needs no
+    # isEmpty job.  AQE off: it would submit each query stage of a hop as
+    # a job of its own
+    from etl_scripts_spark.operators.lineage import ancestors_to_root
+
+    edges = spark.createDataFrame(
+        [("c", "b"), ("b", "a")], "child_code string, parent_code string"
+    )
+    sc = spark.sparkContext
+    group = "test-ancestors-to-root"
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, group)
+    try:
+        out = ancestors_to_root(edges)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+    assert jobs == 2, jobs
+    assert sorted(map(tuple, out.collect())) == [("b", "a", 1), ("c", "a", 2)]
+
+
 def test_round_cap_raises_with_the_operator_name(spark):
     # a 12-node chain needs more rounds than 2 in every fixpoint operator;
     # stopping there would return split components or a non-core, so each

@@ -1,13 +1,22 @@
 """Unit tests for the round-7 banked operators: integer-exact PageRank
-(operators/graph.py) and the byte-based compaction planner
-(sinks/layout.plan_compaction on windows.global_running_sum)."""
+(operators/graph.py), the byte-based compaction planner
+(sinks/layout.plan_compaction on windows.global_running_sum) and the
+range-prefix kernel under it (windows._range_ranked)."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etl_scripts_spark.operators import graph
-from etl_scripts_spark.operators.windows import global_running_sum
+from etl_scripts_spark.operators.windows import (
+    _range_ranked,
+    global_row_number,
+    global_running_sum,
+    ntile_buckets,
+)
 from etl_scripts_spark.sinks.layout import plan_compaction
 
 
@@ -50,19 +59,74 @@ def test_pagerank_dangling_and_sourceless_nodes(spark):
     assert got == {1: 150, 2: 277}
 
 
-def test_global_running_sum_matches_single_partition_window(spark):
-    df = spark.range(100).select(
+@contextmanager
+def _range_partitions(spark, n):
+    """Scope the session's shuffle partitions to `n`, uncoalesced, so the
+    range-prefix kernel really splits a small frame, and restore both."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def _scored(spark):
+    return spark.range(100).select(
         F.col("id"), ((F.col("id") * 37) % 11 + 1).alias("v")
     )
-    got = {
-        r["id"]: r["running"]
-        for r in global_running_sum(df, ["id"], "v", n_parts=7).collect()
-    }
+
+
+def test_global_running_sum_matches_single_partition_window(spark):
+    df = _scored(spark)
+    with _range_partitions(spark, 7):
+        assert _range_ranked(df, ["id"], "_r")[1].count() > 1
+        got = {
+            r["id"]: r["running"]
+            for r in global_running_sum(df, ["id"], "v").collect()
+        }
     rows = sorted(df.collect(), key=lambda r: r["id"])
     acc = 0
     for r in rows:
         acc += r["v"]
         assert got[r["id"]] == acc
+
+
+def test_global_row_number_matches_single_partition_window(spark):
+    df = _scored(spark)
+    with _range_partitions(spark, 7):
+        assert _range_ranked(df, ["v", "id"], "_r")[1].count() > 1
+        got = {r["id"]: r["rank"] for r in global_row_number(df, ["v", "id"]).collect()}
+    want = {
+        r["id"]: r["rn"]
+        for r in df.select(
+            "id", F.row_number().over(Window.orderBy("v", "id")).alias("rn")
+        ).collect()
+    }
+    assert got == want
+
+
+def test_ntile_buckets_matches_single_partition_window(spark):
+    df = _scored(spark)
+    for k in (3, 8):
+        with _range_partitions(spark, 7):
+            got = {
+                r["id"]: r["bucket"]
+                for r in ntile_buckets(df, ["v", "id"], n_buckets=k).collect()
+            }
+        want = {
+            r["id"]: r["b"]
+            for r in df.select(
+                "id", F.ntile(k).over(Window.orderBy("v", "id")).alias("b")
+            ).collect()
+        }
+        assert got == want, f"k={k}"
 
 
 def test_plan_compaction_bins_sequential_fill(spark):

@@ -283,8 +283,8 @@ def test_boilerplate_topk_broadcasts(spark):
 def test_lm_buckets_avoids_global_window(spark):
     """The ntile must NOT plan a single-partition Window over the scored
     corpus (the `Window.orderBy` trap).  The only single-partition pieces
-    allowed are the tiny partition-size offset table (<= n_parts rows) and
-    1-row stats gathers; the corpus-side rank partitions by the physical
+    allowed are the tiny partition-size offset table (one row per range
+    partition) and 1-row stats gathers; the corpus-side rank partitions by the physical
     range partition id."""
     plan = _plan(spark, "q_lm_buckets", "formatted")
     # (the range exchange itself is hidden behind global_row_number's

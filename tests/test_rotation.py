@@ -44,6 +44,24 @@ def test_changed_plus_never_green_fit_the_driver_window():
     )
 
 
+def test_rotation_head_is_not_already_green_in_the_newest_round():
+    """A head whose every name already has an all-green row in the newest
+    CORRECTNESS_r*.json re-verifies nothing new: it is last round's list,
+    left stale, and the changed queries of this round ride the tail."""
+    import re
+
+    newest = max(
+        int(re.search(r"CORRECTNESS_r(\d+)\.json$", p.name).group(1))
+        for p in REPO.glob("CORRECTNESS_r*.json")
+    )
+    last = entrymod._last_green_round()
+    head = [k for k in entrymod._CHANGED_THIS_ROUND if k in entrymod._QUERIES]
+    assert any(last.get(k) != newest for k in head), (
+        f"every _CHANGED_THIS_ROUND name is already green in "
+        f"CORRECTNESS_r{newest:02d}.json — the rotation head is stale"
+    )
+
+
 def test_rotation_head_is_changed_then_never_green_then_stalest():
     last = entrymod._last_green_round()
     order = entrymod._rotation_order()

@@ -71,38 +71,46 @@ def test_commit_batch_all_or_nothing(spark, tmp_path):
     assert not os.path.exists(os.path.join(root, "runs", "batch=b2"))
 
 
-def test_state_shard_sizing(spark):
-    from etl_scripts_spark.streaming.tuning import (
-        shards_for_keys,
-        state_shuffle_partitions,
-    )
+def test_drain_pins_min_8_state_shards(spark, sf_small):
+    """Every AvailableNow drain starts its state store on min(8,
+    configured) shards — 4 at a configured 4, 8 at a configured 32 —
+    read from the progress events' stateOperators, and leaves the
+    configured shuffle partitions as it found them."""
+    from pyspark.sql.streaming import StreamingQueryListener
 
-    assert shards_for_keys(10) == 4          # floor: local parallelism
-    assert shards_for_keys(10**9) == 10_000  # cap
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    with state_shuffle_partitions(spark, 1500) as n:
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    from etl_scripts_spark.streaming.windowed import hourly_counts_available_now
 
+    class Shards(StreamingQueryListener):
+        def __init__(self):
+            self.seen = []
 
-def test_state_shard_sizing_per_operator_class(spark):
-    """r14 shard-economics law (tuning.py): native streaming aggregations
-    shard at ~12k keys/shard (commit fixed cost dominates) — the measured
-    optimum recorded in OPTIMIZATION_r14.md §3."""
-    from etl_scripts_spark.streaming.tuning import (
-        NATIVE_STATE_KEYS_PER_SHARD,
-        shards_for_keys,
-        state_shuffle_partitions,
-    )
+        def onQueryStarted(self, event):
+            pass
 
-    assert NATIVE_STATE_KEYS_PER_SHARD == 12_000
-    # ~100k session keys → 8 shards; small key spaces floor at 4
-    assert shards_for_keys(100_000) == 8
-    assert shards_for_keys(4000) == 4
-    # the context manager still clamps to the configured slot count
-    with state_shuffle_partitions(spark, 10**9) as n:
-        assert n == int(spark.conf.get("spark.sql.shuffle.partitions"))
-        assert n <= 8  # the test session's configured shuffle partitions
+        def onQueryProgress(self, event):
+            self.seen += [op.numShufflePartitions for op in event.progress.stateOperators]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    listener = Shards()
+    spark.streams.addListener(listener)
+    try:
+        for configured, want in ((4, 4), (32, 8)):
+            spark.conf.set(conf, str(configured))
+            listener.seen = []
+            hourly_counts_available_now(spark, f"{sf_small}/events.parquet")
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+            assert listener.seen and set(listener.seen) == {want}, listener.seen
+            assert spark.conf.get(conf) == str(configured)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.conf.set(conf, before)
 
 
 def test_bucketed_samples_join_skips_shuffle(spark, tmp_path):

@@ -95,7 +95,7 @@ def test_first_seen_folds_across_micro_batches(spark, tmp_path, monkeypatch):
     drained = _spy_drains(monkeypatch)
     got = {
         (r.user_id, r.event_type): (r.first_event_id, r.first_us, r.n_duplicates)
-        for r in windowed._first_seen(spark, _two_batch_stream(spark, tmp_path), 8)
+        for r in windowed._first_seen(spark, _two_batch_stream(spark, tmp_path))
         .withColumn("first_us", F.unix_micros("first_ts"))
         .collect()
     }
@@ -117,7 +117,7 @@ def test_user_totals_fold_across_micro_batches(spark, tmp_path, monkeypatch):
     got = {
         r.user_id: (r.n_events, r.sum_cents)
         for r in windowed._user_totals(
-            spark, _two_batch_stream(spark, tmp_path), 8
+            spark, _two_batch_stream(spark, tmp_path)
         ).collect()
     }
     want = {}
@@ -138,7 +138,7 @@ def test_hll_drain_equals_batch_registers(spark, tmp_path):
     """Complete mode leaves each (event_type, bucket) register once, at
     its final max — a multiset compare, so a duplicate key fails."""
     stream = _two_batch_stream(spark, tmp_path)
-    got = Counter(tuple(r) for r in windowed._hll(spark, stream, 8).collect())
+    got = Counter(tuple(r) for r in windowed._hll(spark, stream).collect())
     want = Counter(
         tuple(r)
         for r in hll_registers(
