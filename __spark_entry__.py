@@ -8219,24 +8219,32 @@ def entry(spark: SparkSession) -> DataFrame:
 # — a regression in a long-green query can hide for at most that long.
 
 #: Head of the rotation: queries whose code changed since their last
-#: green CORRECTNESS row.  First the eight native stream drains, whose
-#: state shard count is now min(8, configured shuffle partitions), the
-#: four range-prefix queries, whose range exchange now takes the session's
-#: shuffle partitions, and the four queries whose walks stop on (or take
-#: their vocabulary from) the checkpoint's own count; then the sixteen
-#: codec/tool queries whose Python stage is the one
-#: `multimodal.map_payloads` driver (mapInArrow), q_skipping_report
-#: (Spark's partitioned writer and a driver-side footer sweep) and three
-#: queries whose literal tables are `catalog.literal_table` local
-#: relations; then the two stream folds that left Python state (KMV,
-#: rolling z-score), the batch rolling z-score and the two queries whose
-#: committed snapshots are read without a schema-inference job; then the
-#: seven vector-search consumers on the one Lloyd trainer and two
-#: connected-components consumers.  The head is capped at the driver's
-#: 50-query window; everything else (the other CC consumers and perfbench
-#: mix queries that stood here before) rides the least-recently-green
-#: order.
+#: green CORRECTNESS row.  First the seven queries on the pinning
+#: operators (ER, record linkage, PageRank, BFS and the three corpus
+#: scorers), whose eager checkpoints are now their only form; then the
+#: eight native stream drains, whose state shard count is now min(8,
+#: configured shuffle partitions), the four range-prefix queries, whose
+#: range exchange now takes the session's shuffle partitions, and the
+#: three other queries whose walks stop on (or take their vocabulary
+#: from) the checkpoint's own count; then the sixteen codec/tool queries
+#: whose Python stage is the one `multimodal.map_payloads` driver
+#: (mapInArrow), q_skipping_report (Spark's partitioned writer and a
+#: driver-side footer sweep) and three queries whose literal tables are
+#: `catalog.literal_table` local relations; then the two stream folds
+#: that left Python state (KMV, rolling z-score), the batch rolling
+#: z-score and the two queries whose committed snapshots are read
+#: without a schema-inference job; then three consumers of the one Lloyd
+#: trainer.  The head is capped at the driver's 50-query window;
+#: everything else (the other Lloyd and CC consumers and perfbench mix
+#: queries that stood here before) rides the least-recently-green order.
 _CHANGED_THIS_ROUND = (
+    "q_pagerank",
+    "q_resolve_entities",
+    "q_link_records",
+    "q_batch_retrieval",
+    "q_pmi_collocations",
+    "q_bigram_lm",
+    "q_bfs_distances",
     "q_stream_sessionize",
     "q_stream_hourly_rollup",
     "q_stream_enriched",
@@ -8251,7 +8259,6 @@ _CHANGED_THIS_ROUND = (
     "q_plan_compaction",
     "q_experimental_design",
     "q_lineage_roots",
-    "q_bfs_distances",
     "q_setsim_pairs",
     "q_multimodal_features",
     "q_multimodal_frame_sample",
@@ -8281,12 +8288,6 @@ _CHANGED_THIS_ROUND = (
     "q_kmeans_assign",
     "q_ivf_trained",
     "q_semdedup",
-    "q_pq_topk",
-    "q_pq_recall",
-    "q_ivf_topk",
-    "q_ivf_recall",
-    "q_graph_components_chain",
-    "q_graph_components",
 )
 
 

@@ -119,9 +119,14 @@ def free_session_litter(spark) -> int:
     release path for loop consumers of operators that pin their inputs
     under the returned plan (pagerank, link_records, batch_retrieval,
     the n-gram scorers): call it after each fully-consumed result, as
-    bench.py does between queries.  Safe because nothing in this engine
-    `.cache()`s across calls — anything registered on the context after
-    a result has been collected is a finished call's checkpoint litter.
+    bench.py does between queries.
+
+    Not everything it frees is checkpoint litter: `_fastq_incoming` and
+    `_ms_incoming` (__spark_entry__.py) `.persist()` their synthetic
+    manifests as a predicate-pushdown barrier, and that cache outlives
+    the call.  Unpersisting its blocks is still safe: the cached RDD
+    keeps its lineage, so the next reader recomputes the manifest (the
+    plan keeps its barrier; only the cached bytes go).
 
     CONTRACT: only call AFTER every outstanding result DataFrame has
     been consumed (collected / written) — a lazily-held result whose

@@ -113,14 +113,14 @@ def asof_join_forward(
     with ``right[on] >= left[on]`` (per ``by`` key if given) — "the next
     calibration after this run", "the following price tick".
 
-    Implementation is the negated-timeline trick resample_interp already
-    relies on: backward-asof over ``-on`` IS forward-asof over ``on``
-    (right_neg <= left_neg  ⇔  right >= left, inclusive on equality both
-    ways), so the whole tagged-union machinery — one key shuffle, one
-    sort, skew notes and all — is reused rather than re-derived.  The
-    matched right timestamp comes back un-negated.  Timestamps of
-    bigint-min cannot be negated (ANSI throws; they are sentinel garbage
-    anyway).
+    Implementation is the negated-timeline trick: backward-asof over
+    ``-on`` IS forward-asof over ``on`` (right_neg <= left_neg  ⇔
+    right >= left, inclusive on equality both ways), so the whole
+    tagged-union machinery — one key shuffle, one sort, skew notes and
+    all — is reused rather than re-derived.  The matched right timestamp
+    comes back un-negated as ``{on}{suffix}``; resample_interp finds each
+    tick's following observation this way.  Timestamps of bigint-min
+    cannot be negated (ANSI throws; they are sentinel garbage anyway).
     """
     out = asof_join(
         left.withColumn(on, -F.col(on)),
@@ -307,11 +307,11 @@ def resample_interp(
     between the bracketing observations (rounded to 6 dp; both engines
     divide IEEE-identically).  Grid law is resample_ffill's, so every
     tick has a preceding observation, and the following one is found by
-    a SECOND as-of pass over the NEGATED timeline (latest -obs ≤ -tick ⟺
-    earliest obs ≥ tick) — two tagged-union carries, both shuffling on
-    the same key.  A tick that lands exactly on an observation (or at
-    the key's last observation, where prev == next) returns that value
-    (the t_next == t_prev guard).
+    asof_join_forward (a second as-of pass, over the negated timeline) —
+    two tagged-union carries, both shuffling on the same key.  A tick
+    that lands exactly on an observation (or at the key's last
+    observation, where prev == next) returns that value (the
+    t_next == t_prev guard).
 
     Returns (by, on, v_interp).  DuckDB mirror: generate_series grid +
     one ASOF JOIN forward + one ASOF JOIN on negated ts.
@@ -322,19 +322,10 @@ def resample_interp(
     # to recover the tick list
     grid = _resample_grid(obs, by, on, step)
     prev = asof_join(grid, obs, on=on, by=by, suffix="_p")
-    neg_obs = obs.select(
-        F.col(by), (-F.col(on)).alias("_neg"), F.col(value_col)
-    )
-    nxt = asof_join(
-        grid.select(by, on, (-F.col(on)).alias("_neg")),
-        neg_obs,
-        on="_neg",
-        by=by,
-        suffix="_n",
-    )
-    j = prev.join(nxt.select(by, on, f"{value_col}_n", "_neg_n"), [by, on])
+    nxt = asof_join_forward(grid, obs, on=on, by=by, suffix="_n")
+    j = prev.join(nxt.select(by, on, f"{value_col}_n", f"{on}_n"), [by, on])
     t_prev = F.col(f"{on}_p").cast("double")
-    t_next = (-F.col("_neg_n")).cast("double")
+    t_next = F.col(f"{on}_n").cast("double")
     v_prev = F.col(f"{value_col}_p").cast("double")
     v_next = F.col(f"{value_col}_n").cast("double")
     interp = F.when(t_next == t_prev, v_prev).otherwise(

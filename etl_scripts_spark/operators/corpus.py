@@ -811,7 +811,6 @@ def bigram_lm_scores(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-document interpolated bigram-LM mean log-likelihood:
     p(w2|w1) = 0.75·c(w1,w2)/c(w1·) + 0.25·p_uni(w2) with add-one unigram
@@ -833,12 +832,8 @@ def bigram_lm_scores(
     # materialization is near-free and caps the corpus tokenize+explode
     # at one pass per count table (the pmi_collocations pattern).  The
     # corpus-sized `pairs`/`toks` stay lazy — materializing those is the
-    # semdedup-class losing trade.  materialize=False = fully lazy form
-    # for plan audits.
-    def _pin(frame: DataFrame) -> DataFrame:
-        return frame.localCheckpoint(eager=True) if materialize else frame
-
-    vocab = _pin(toks.groupBy("term").agg(F.count("*").alias("cu")))
+    # semdedup-class losing trade.
+    vocab = toks.groupBy("term").agg(F.count("*").alias("cu")).localCheckpoint(eager=True)
     stats = vocab.agg(
         F.count("*").alias("v"), F.sum("cu").alias("n_tok")
     )
@@ -858,7 +853,7 @@ def bigram_lm_scores(
             )
         ).alias("_p"),
     ).select(id_col, "_p.w1", "_p.w2")
-    big = _pin(pairs.groupBy("w1", "w2").agg(F.count("*").alias("c2")))
+    big = pairs.groupBy("w1", "w2").agg(F.count("*").alias("c2")).localCheckpoint(eager=True)
     ctx = big.groupBy("w1").agg(F.sum("c2").alias("c1"))
     scored = join_singleton(
         pairs.join(big, ["w1", "w2"])
@@ -892,7 +887,6 @@ def batch_retrieval(
     top_k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    materialize: bool = True,
 ) -> DataFrame:
     """BM25 top-k documents for a BATCH of queries — the offline
     retrieval-evaluation / hard-negative-mining workload (score a
@@ -947,16 +941,12 @@ def batch_retrieval(
     # downstream consumer needs, and replaces two extra full-corpus
     # scan+tokenize passes (sf0.1 A/B: floor 10.69 -> 7.78 s).  The two
     # checkpoints stay pinned under the returned plan for the session
-    # (they cannot be freed — the result reads them); callers that only
-    # want the PLAN (audits, explain) pass materialize=False and get the
-    # fully lazy form.
-    def _pin(frame: DataFrame) -> DataFrame:
-        return frame.localCheckpoint(eager=True) if materialize else frame
-
-    qterms = _pin(
+    # (they cannot be freed — the result reads them).
+    qterms = (
         qtoks.select(F.col(query_id_col), F.explode("_qw").alias("term"))
         .filter(F.col("term") != "")
         .distinct()
+        .localCheckpoint(eager=True)
     )
     # prune the exploded token stream to query terms FIRST (semi on the
     # broadcast query vocabulary, evaluated map-side at the scan), and
@@ -981,10 +971,11 @@ def batch_retrieval(
         .filter(F.col("term") != "")
         .join(F.broadcast(qterms.select("term").distinct()), "term", "left_semi")
     )
-    relevant = _pin(
+    relevant = (
         matched_toks.repartition(dp, F.col(id_col))
         .groupBy(id_col, "dl", "term")
         .agg(F.count("*").alias("tf"))
+        .localCheckpoint(eager=True)
     )
     dfreq = relevant.groupBy("term").agg(F.count("*").alias("df"))
     scored = join_singleton(relevant.join(F.broadcast(dfreq), "term"), stats)
@@ -1023,7 +1014,6 @@ def pmi_collocations(
     df: DataFrame,
     text_col: str = "text",
     min_count: int = 5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Collocation mining: consecutive word pairs scored by PMI and NPMI
     — the phrase-detection step (word2vec-style "new_york" merging,
@@ -1055,15 +1045,11 @@ def pmi_collocations(
     # consumer can re-run the explode (5 static corpus scans in the lazy
     # plan).  The favorable case of the materialize-only-when-measured
     # rule: tiny write, heavy subtree (cf. semdedup's documented revert).
-    # materialize=False returns the fully lazy plan for audits/explain
-    # (checkpoints hide subtrees behind LogicalRDD scans).
-    def _pin(frame: DataFrame) -> DataFrame:
-        return frame.localCheckpoint(eager=True) if materialize else frame
-
-    uni = _pin(
+    uni = (
         w.select(F.explode("_w").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c_uni"))
+        .localCheckpoint(eager=True)
     )
     n_uni = uni.agg(F.sum("c_uni").alias("n_uni"))
 
@@ -1077,11 +1063,12 @@ def pmi_collocations(
         ),
         lambda p: p["w2"].isNotNull(),
     )
-    bi = _pin(
+    bi = (
         w.select(F.explode(pairs).alias("p"))
         .select("p.w1", "p.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c_ab"))
+        .localCheckpoint(eager=True)
     )
     n_bi = bi.agg(F.sum("c_ab").alias("n_bi"))
 

@@ -4,8 +4,9 @@ Designed for 100 TB corpora:
 
   - exact dedup is a hash-groupBy on a 128-bit content digest — one shuffle
     on the digest, map-side partial aggregation, no full-text comparison;
-  - MinHash signatures are a pure *projection* (no shuffle): per row, k
-    minimums over the shingle array computed inside whole-stage codegen;
+  - MinHash signatures tokenize once, explode the shingles and take the
+    per-seed minima with map-side partial aggregation — the one shuffle,
+    keyed by doc id, carries partial minima, never shingles;
   - LSH banding turns near-dup search from O(n²) into an equi-join on
     (band_id, band_hash) — a single shuffle whose key space is uniform by
     construction (md5), so no skew;
@@ -57,36 +58,6 @@ def shingles_from_words(wcol: Column, k: int = 3) -> Column:
     return F.transform(F.sequence(F.lit(1), n), shingle_at)
 
 
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """Array of k-word shingles of the normalized text (≥1 shingle always).
-
-    Convenience for one-shot use; in a plan that consumes the shingles more
-    than once (or explodes them), stage `words(text)` first and call
-    :func:`shingles_from_words` — see that docstring for why.
-    """
-    return shingles_from_words(words(text), k)
-
-
-def minhash_signature(text: Column, num_hashes: int = 8, k: int = 3) -> list[Column]:
-    """k independent MinHash values: min over shingles of md5(seed|shingle).
-
-    Lexicographic min over md5 hex strings — engine-portable, uniform.
-    Pure projection: no shuffle, no UDF.
-    """
-    sh = word_shingles(text, k)
-
-    def seeded_hasher(seed: int):
-        prefix = f"{seed}|"
-        # NB: the returned lambda must take exactly ONE arg — pyspark treats a
-        # two-parameter lambda (even with defaults) as an (element, index) HOF.
-        return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-    return [
-        F.array_min(F.transform(sh, seeded_hasher(i))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-
-
 def minhash_df(df: DataFrame, text_col: str, id_col: str, num_hashes: int = 8, k: int = 3) -> DataFrame:
     """MinHash signatures via staged tokenize → explode shingles → agg min.
 
@@ -105,8 +76,9 @@ def minhash_df(df: DataFrame, text_col: str, id_col: str, num_hashes: int = 8, k
     is the already-reduced partial aggregate.  Skew-free: the shuffle key is
     the unique doc id.
 
-    Output is identical to :func:`minhash_signature`: min over
-    md5('seed|' + shingle), short-document fallback included.
+    Signature value `mh{i}` is the min over the document's k-word
+    shingles of md5('{i}|' + shingle), short-document fallback included
+    (the law `oracle.minhash_sigs_ctes` reproduces).
     """
     staged = df.select(F.col(id_col), words(F.col(text_col)).alias("_w"))
     sh = staged.select(

@@ -110,7 +110,6 @@ def candidate_pairs(
     keys: DataFrame,
     id_col: str = "rec_id",
     max_block: int = 50,
-    materialize: bool = True,
 ) -> DataFrame:
     """Distinct (id_a < id_b) pairs sharing a block key, with blocks
     larger than `max_block` records EXCLUDED before the self-join — the
@@ -122,9 +121,8 @@ def candidate_pairs(
     # returned plan.  Same-methodology A/B at sf0.1 (fresh JVMs, 2 runs
     # per variant): with 2.7-3.3 s, without 3.0-3.5 s — neutral-to-
     # better locally, and the saved normalize+explode passes are the
-    # 100 TB win.  materialize=False = fully lazy form for plan audits.
-    if materialize:
-        keys = keys.localCheckpoint(eager=True)
+    # 100 TB win.
+    keys = keys.localCheckpoint(eager=True)
     capped = keys.join(
         keys.groupBy("block_key")
         .agg(F.count("*").alias("_n"))
@@ -186,13 +184,12 @@ def resolve_entities(
     max_block: int = 50,
     prefix_len: int = 3,
     initials_len: int = 1,
-    materialize: bool = True,
 ) -> DataFrame:
     """Full pipeline: (rec_id, entity_id, is_canonical) for every record
     in a matched pair; unmatched records are implicitly their own
     entity (left out, like near_dup_clusters)."""
     keys = blocking_keys(df, name_col, id_col, prefix_len, initials_len)
-    cands = candidate_pairs(keys, id_col, max_block, materialize=materialize)
+    cands = candidate_pairs(keys, id_col, max_block)
     matched = match_pairs(cands, df, name_col, id_col, threshold)
     cc = connected_components(matched.select("id_a", "id_b"))
     return cc.select(
@@ -232,7 +229,6 @@ def link_candidates(
     left_id: str = "rec_id",
     right_id: str = "rec_id",
     max_block: int = 50,
-    materialize: bool = True,
 ) -> DataFrame:
     """Bipartite candidate generation: distinct (id_l, id_r) sharing a
     block key, with keys that are hot on EITHER side excluded before the
@@ -243,10 +239,8 @@ def link_candidates(
     # anti-join arm — materialize once per side so the normalize+explode
     # upstream runs once, not twice (same rationale as candidate_pairs;
     # measured via q_link_records: 3.53 -> 1.86 s standalone at sf0.1).
-    # materialize=False = fully lazy form for plan audits.
-    if materialize:
-        left_keys = left_keys.localCheckpoint(eager=True)
-        right_keys = right_keys.localCheckpoint(eager=True)
+    left_keys = left_keys.localCheckpoint(eager=True)
+    right_keys = right_keys.localCheckpoint(eager=True)
     hot = (
         left_keys.groupBy("block_key").agg(F.count("*").alias("_n"))
         .filter(F.col("_n") > max_block)
@@ -279,7 +273,6 @@ def link_records(
     prefix_len: int = 3,
     initials_len: int = 1,
     suffix_len: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Record linkage across two tables — the reference's register-time
     decision ("does this incoming record match an existing entity, or is
@@ -298,9 +291,7 @@ def link_records(
     """
     lkeys = blocking_keys(left, left_name, left_id, prefix_len, initials_len, suffix_len)
     rkeys = blocking_keys(right, right_name, right_id, prefix_len, initials_len, suffix_len)
-    cands = link_candidates(
-        lkeys, rkeys, left_id, right_id, max_block, materialize=materialize
-    )
+    cands = link_candidates(lkeys, rkeys, left_id, right_id, max_block)
 
     ln = _name_forms(left, left_name, left_id).select(
         F.col(left_id).alias("id_l"), F.col("_nm").alias("_na"), F.col("_ts").alias("_ta")

@@ -63,7 +63,6 @@ def pagerank(
     scale: int = 10**12,
     src: str = "src",
     dst: str = "dst",
-    materialize: bool = True,
 ) -> DataFrame:
     """(node, rank) after `rounds` integer-exact power-iteration rounds
     over the directed edge list; every node starts at `scale` units and
@@ -77,17 +76,14 @@ def pagerank(
     # pins its edge table the same way).  All three stay live under the
     # returned plan, so they are never freed here; loop consumers release
     # them between calls via ckpt.free_session_litter (bench.py does).
-    # materialize=False = audit/explain form (input subtrees stay lazy).
-    def _pin(frame: DataFrame) -> DataFrame:
-        return frame.localCheckpoint(eager=True) if materialize else frame
-
-    edges = _pin(edges.select(F.col(src), F.col(dst)))
-    nodes = _pin(
+    edges = edges.select(F.col(src), F.col(dst)).localCheckpoint(eager=True)
+    nodes = (
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    deg = _pin(out_degrees(edges, src))
+    deg = out_degrees(edges, src).localCheckpoint(eager=True)
     base = (100 - damping_pct) * scale // 100
     ranks = nodes.select("node", F.lit(scale).cast("bigint").alias("rank"))
     ranks_cp = None
@@ -138,7 +134,6 @@ def bfs_distances(
     src: str = "src",
     dst: str = "dst",
     directed: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """(node, dist) — minimal hop distance from ANY source node, for every
     node reachable within `max_hops` hops (multi-source BFS; unreached
@@ -175,8 +170,7 @@ def bfs_distances(
             edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d"))
         )
     e = e.filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
-    if materialize:
-        e = e.localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=True)
     dist = (
         sources.select(F.col(sources.columns[0]).alias("node"))
         .filter(F.col("node").isNotNull())

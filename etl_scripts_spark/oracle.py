@@ -126,7 +126,8 @@ def shingles_from_ws_sql(ws: str, k: int = 3) -> str:
 
 
 def shingles_sql(col: str = "text", k: int = 3) -> str:
-    """DuckDB twin of operators.dedup.word_shingles (k-word shingles, ≥1)."""
+    """DuckDB k-word shingles (≥1) of the tokenized `col` — the twin of
+    operators.dedup.shingles_from_words over `words(col)`."""
     return shingles_from_ws_sql(words_sql(col), k)
 
 

@@ -555,39 +555,25 @@ def _lazy_er_sides(spark):
 
 
 def _lazy_form(spark, name):
-    """Build ONE operator in its materialize=False form — checkpoints
-    hide subtrees behind LogicalRDD scans, so the registered queries'
-    plan audit cannot see the tokenize/normalize/postings pipelines;
-    these audit the full lazy plan per operator (and double as the
-    explain-only-callers contract: materialize=False must not launch
-    jobs).  One builder per requested name — constructing all five per
-    parameterized case would re-run resolve_entities' eager CC each
-    time for forms that never look at it.
+    """Build ONE operator with its eager checkpoints elided: while it is
+    constructed, `localCheckpoint` returns its receiver, so the plan is
+    the one the pins cut into LogicalRDD scans — the tokenize/normalize/
+    postings pipelines the registered queries' plan audit cannot see
+    behind them.  The patch targets the classic DataFrame, whose
+    `localCheckpoint` overrides `pyspark.sql.DataFrame`'s, and is scoped
+    to construction.  Only the requested form is built.
 
-    CC limitation: resolve_entities' connected_components is ITERATIVE
-    (per-round eager localCheckpoints are the algorithm, not a caching
-    choice), so its materialize=False output is still mostly LogicalRDD
-    scans and auditing it would be vacuous — instead we audit its
-    pre-CC subplan (blocking → candidate_pairs → match_pairs), which is
-    everything materialize=False can make lazy.  link_records has no CC
-    and its lazy form IS the full pipeline (verified: zero LogicalRDD,
-    all-parquet relations)."""
+    Loops are not patched: resolve_entities' connected_components and
+    bfs_distances stop on the counts their checkpoints' jobs observe, so
+    the resolve_entities audit stops at its pre-CC subplan (blocking →
+    candidate_pairs → match_pairs) and bfs_distances has no lazy form.
+    link_records has no CC and its lazy form IS the full pipeline."""
+    from unittest import mock
+
     from pyspark.sql import functions as F
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
-    if name in ("batch_retrieval", "pmi_collocations", "bigram_lm_scores"):
-        from etl_scripts_spark.operators import corpus as _c
-
-        docs = _lazy_docs(spark)
-        if name == "batch_retrieval":
-            queries_df = docs.filter(F.col("doc_id") % 41 == 0).select(
-                F.col("doc_id").alias("query_id"),
-                F.substring("text", 1, 80).alias("query_text"),
-            )
-            return _c.batch_retrieval(docs, queries_df, top_k=10, materialize=False)
-        if name == "pmi_collocations":
-            return _c.pmi_collocations(docs, materialize=False)
-        return _c.bigram_lm_scores(docs, materialize=False)
-
+    from etl_scripts_spark.operators import corpus as _c
     from etl_scripts_spark.operators.er import (
         blocking_keys,
         candidate_pairs,
@@ -595,33 +581,48 @@ def _lazy_form(spark, name):
         match_pairs,
     )
 
-    left, right = _lazy_er_sides(spark)
-    if name == "resolve_entities_pre_cc":
-        keys = blocking_keys(left, "name", "rec_id", 3, 1)
-        cands = candidate_pairs(keys, "rec_id", 50, materialize=False)
-        return match_pairs(cands, left, "name", "rec_id", 0.82)
-    assert name == "link_records"
-    return link_records(left, right, "name", "name", materialize=False)
+    with mock.patch.object(ClassicDataFrame, "localCheckpoint", lambda self, *a, **k: self):
+        if name in ("batch_retrieval", "pmi_collocations", "bigram_lm_scores"):
+            docs = _lazy_docs(spark)
+            if name == "batch_retrieval":
+                queries_df = docs.filter(F.col("doc_id") % 41 == 0).select(
+                    F.col("doc_id").alias("query_id"),
+                    F.substring("text", 1, 80).alias("query_text"),
+                )
+                return _c.batch_retrieval(docs, queries_df, top_k=10)
+            if name == "pmi_collocations":
+                return _c.pmi_collocations(docs)
+            return _c.bigram_lm_scores(docs)
+
+        left, right = _lazy_er_sides(spark)
+        if name == "resolve_entities_pre_cc":
+            keys = blocking_keys(left, "name", "rec_id", 3, 1)
+            cands = candidate_pairs(keys, "rec_id", 50)
+            return match_pairs(cands, left, "name", "rec_id", 0.82)
+        assert name == "link_records"
+        return link_records(left, right, "name", "name")
 
 
-@pytest.mark.parametrize(
-    "name",
-    ["batch_retrieval", "pmi_collocations", "bigram_lm_scores",
-     "resolve_entities_pre_cc", "link_records"],
-)
+LAZY_FORMS = [
+    "batch_retrieval", "pmi_collocations", "bigram_lm_scores",
+    "resolve_entities_pre_cc", "link_records",
+]
+
+
+@pytest.mark.parametrize("name", LAZY_FORMS)
 def test_lazy_form_stays_on_the_scale_contract(spark, name):
     df = _lazy_form(spark, name)
     _audit_lazy(_lazy_plan_of(df), name)
 
 
 def test_er_lazy_form_shapes(spark):
-    """Pin the CC-limitation facts the lazy audit relies on: the pre-CC
-    resolve_entities subplan and the full link_records lazy form read
-    straight from parquet with ZERO LogicalRDD (no hidden eager
-    checkpoint launched a job at plan-build time)."""
-    for name in ("resolve_entities_pre_cc", "link_records"):
+    """Every audited lazy form reads straight from parquet with ZERO
+    LogicalRDD: a pin that bypasses `localCheckpoint` (an RDD round
+    trip, a `checkpoint()`) would survive the patch and hide a subtree
+    from the audit, so it fails here instead."""
+    for name in LAZY_FORMS:
         plan = _lazy_plan_of(_lazy_form(spark, name))
-        assert "LogicalRDD" not in plan, f"{name}: eager checkpoint in lazy form"
+        assert "LogicalRDD" not in plan, f"{name}: pin outside localCheckpoint"
         assert "Relation [" in plan or "parquet" in plan
 
 
