@@ -18,7 +18,7 @@ from etl_scripts_spark import catalog, oracle
 from etl_scripts_spark.expressions import (
     BARCODE_REGEX,
     barcode_checksum_char,
-    extract_barcode,
+    cents,
     is_valid_barcode,
     split_wf_name,
 )
@@ -27,7 +27,7 @@ from etl_scripts_spark.operators.asof import asof_join, asof_join_sliced
 from etl_scripts_spark.operators.numbering import allocate_sequence, experiment_code, padded_patient_id, run_sample_code
 from etl_scripts_spark.parsers import sidecars
 from etl_scripts_spark.parsers import vcf as vcfmod
-from etl_scripts_spark.pipelines.fastq import register_fastq_batch
+from etl_scripts_spark.pipelines.fastq import register_fastq_batch, validate_barcodes
 from etl_scripts_spark.pipelines.wf_results import (
     parse_hla_typing,
     peakpick_fanout,
@@ -836,7 +836,6 @@ _perturbed = (
     f" || 'B' || substring({_bc9} || {oracle.checksum_char_sql(_bc9)}, 10, 1)"
     f" ELSE {_bc9} || {oracle.checksum_char_sql(_bc9)} END"
 )
-_p9 = f"substring({_perturbed}, 1, 9)"
 
 
 @_register(
@@ -2526,7 +2525,9 @@ def q_multimodal_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture generator's doc_id arithmetic, so a parser regression on any
     container type is a value mismatch, not just a row count."""
     docs = _tp(spark, sf_dir, "documents")
-    return multimodal.decode_image_meta(multimodal.with_image_payload(docs))
+    return multimodal.decode_image_meta(
+        multimodal.payload_source(docs, "doc_id", multimodal.synthetic_image_bytes)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3502,7 +3503,9 @@ def q_multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _tp(spark, sf_dir, "documents")
     # the operator's mean_px is HALF_UP over the double's shortest repr —
     # exactly Spark round() semantics, so no per-query recompute needed
-    return multimodal.decode_pixel_stats(multimodal.with_pixel_image_payload(docs))
+    return multimodal.decode_pixel_stats(
+        multimodal.payload_source(docs, "doc_id", multimodal.synthetic_pixel_image_bytes)
+    )
 
 
 @_register(
@@ -3543,8 +3546,12 @@ def q_multimodal_jpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, value-exact against closed-form oracle arithmetic.
     Progressive/arithmetic JPEG remain the declared seam (decoder raises,
     stats flow NULL)."""
+    from etl_scripts_spark.operators.jpeg import synthetic_jpeg_bytes
+
     docs = _tp(spark, sf_dir, "documents")
-    return multimodal.decode_pixel_stats(multimodal.with_jpeg_payload(docs))
+    return multimodal.decode_pixel_stats(
+        multimodal.payload_source(docs, "doc_id", synthetic_jpeg_bytes)
+    )
 
 
 @_register(
@@ -3578,7 +3585,9 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sum."""
     docs = _tp(spark, sf_dir, "documents")
     return multimodal.resize_byte_sum(
-        multimodal.with_pixel_image_payload(docs), width=16, height=16
+        multimodal.payload_source(docs, "doc_id", multimodal.synthetic_pixel_image_bytes),
+        width=16,
+        height=16,
     )
 
 
@@ -3607,7 +3616,9 @@ def q_multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     audio modality's decode path is stdlib-real end-to-end; only lossy
     codecs (mp3 et al.) remain a library seam."""
     docs = _tp(spark, sf_dir, "documents")
-    return multimodal.decode_audio_stats(multimodal.with_wav_payload(docs))
+    return multimodal.decode_audio_stats(
+        multimodal.payload_source(docs, "doc_id", multimodal.synthetic_wav_bytes)
+    )
 
 
 @_register(
@@ -3641,7 +3652,9 @@ def q_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out never multiplies payload bytes through the plan; the codec
     payload itself stays an ffmpeg seam."""
     docs = _tp(spark, sf_dir, "documents")
-    return multimodal.sample_video_frames(multimodal.with_avi_payload(docs))
+    return multimodal.sample_video_frames(
+        multimodal.payload_source(docs, "doc_id", multimodal.synthetic_avi_bytes)
+    )
 
 
 @_register(
@@ -3819,7 +3832,9 @@ def q_pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     per document, then run the real stdlib pdftotext equivalent
     (content-stream walk, Flate inflate, Tj/TJ replay) + regex scan."""
     docs = _tp(spark, sf_dir, "documents")
-    out = sidecars.pdf_metadata(sidecars.with_pdf_payload(docs.select("doc_id")))
+    out = sidecars.pdf_metadata(
+        multimodal.payload_source(docs, "doc_id", sidecars.synthetic_pdf_bytes)
+    )
     return out.select(
         "doc_id",
         "order_number",
@@ -3950,11 +3965,8 @@ def q_timestamped_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_user_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W13: user attribution — tr.setUserId becomes an audit column stamped
     on every written row (register-attachment-dropbox.py:90-91)."""
-    incoming = _fastq_incoming(spark, sf_dir)
-    validated = incoming.withColumn("barcode", extract_barcode(F.col("incoming_name"))).withColumn(
-        "valid", is_valid_barcode(F.col("barcode"))
-    )
-    return validated.filter(F.col("valid")).select(
+    validated, _ = validate_barcodes(_fastq_incoming(spark, sf_dir))
+    return validated.select(
         "arrival_id",
         "barcode",
         F.concat(F.lit("uploader_"), (F.col("arrival_id") % 7).cast("string")).alias("registered_by"),
@@ -3976,9 +3988,8 @@ def q_skew_salted_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     16 partials.  Result is identical to a plain groupBy — which is what the
     oracle asserts."""
     events = _tp(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
     return skew.salted_agg(
-        events.select("event_type", cents.alias("_cents")),
+        events.select("event_type", cents(F.col("value")).alias("_cents")),
         ["event_type"],
         {
             "n": (F.count("*"), F.sum("n")),
@@ -6670,7 +6681,9 @@ def q_audio_spectrogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the fixture's closed-form law (sample rate, frame
     count, fundamental bin, ±A energy), integer-exact in both engines."""
     docs = _tp(spark, sf_dir, "documents").select("doc_id")
-    return multimodal.audio_spectrogram(multimodal.with_square_wav_payload(docs))
+    return multimodal.audio_spectrogram(
+        multimodal.payload_source(docs, "doc_id", multimodal.synthetic_square_wav_bytes)
+    )
 
 
 #: the ONE copy of the grouped_ols fixture law (oracle side).  The
@@ -6913,7 +6926,9 @@ def q_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes every hash from the fixture's closed-form
     pixel law — a one-byte decode bug flips signature bits."""
     docs = _tp(spark, sf_dir, "documents").select("doc_id")
-    return multimodal.image_ahash(multimodal.with_pixel_image_payload(docs))
+    return multimodal.image_ahash(
+        multimodal.payload_source(docs, "doc_id", multimodal.synthetic_pixel_image_bytes)
+    )
 
 
 @_register(
@@ -7023,7 +7038,8 @@ def q_mjpeg_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stat from the fixture's closed-form block law."""
     docs = _tp(spark, sf_dir, "documents").select("doc_id")
     return multimodal.decode_video_frame_pixels(
-        multimodal.with_mjpeg_avi_payload(docs), n_frames=3
+        multimodal.payload_source(docs, "doc_id", multimodal.synthetic_mjpeg_avi_bytes),
+        n_frames=3,
     )
 
 
@@ -7876,7 +7892,11 @@ def q_g711_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage.  Map-only, zero shuffles.  The oracle replays the expansion
     law itself in SQL, so a wrong table entry cannot hide."""
     docs = _tp(spark, sf_dir, "documents").select("doc_id")
-    return multimodal.decode_audio_stats(multimodal.with_g711_payload(docs, law=7))
+    return multimodal.decode_audio_stats(
+        multimodal.payload_source(
+            docs, "doc_id", lambda d: multimodal.synthetic_g711_wav_bytes(d, 7)
+        )
+    )
 
 
 @_register(
@@ -7914,8 +7934,12 @@ def q_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     interlace passes) → per-image pixel stats.  Map-only Arrow stage;
     the oracle recomputes every RGB value from the fixture's palette +
     index laws — a palette-order or LZW-width bug shifts px_sum."""
+    from etl_scripts_spark.operators.gif import synthetic_gif_bytes
+
     docs = _tp(spark, sf_dir, "documents").select("doc_id")
-    return multimodal.decode_pixel_stats(multimodal.with_gif_payload(docs))
+    return multimodal.decode_pixel_stats(
+        multimodal.payload_source(docs, "doc_id", synthetic_gif_bytes)
+    )
 
 
 @_register(
@@ -7948,8 +7972,12 @@ def q_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout with external tag values, both byte orders, PackBits RLE
     clamped to the strip's expected bytes) → per-image pixel stats over
     the shared _pixel_pattern law.  Map-only Arrow stage."""
+    from etl_scripts_spark.operators.tiff import synthetic_tiff_bytes
+
     docs = _tp(spark, sf_dir, "documents").select("doc_id")
-    return multimodal.decode_pixel_stats(multimodal.with_tiff_payload(docs))
+    return multimodal.decode_pixel_stats(
+        multimodal.payload_source(docs, "doc_id", synthetic_tiff_bytes)
+    )
 
 
 @_register(
@@ -8219,25 +8247,60 @@ def entry(spark: SparkSession) -> DataFrame:
 # — a regression in a long-green query can hide for at most that long.
 
 #: Head of the rotation: queries whose code changed since their last
-#: green CORRECTNESS row.  First the seven queries on the pinning
+#: green CORRECTNESS row.  First the queries whose twin law now has one
+#: copy: the tumbling rollups (batch and stream run `hourly_rollup`), the
+#: KMV estimate, the as-of carry, set-similarity, the text stages, the
+#: barcode intake and outbox rows and the cents law; then the thirteen
+#: codec/tool queries that pass their fixture encoder to
+#: `multimodal.payload_source`; then the seven queries on the pinning
 #: operators (ER, record linkage, PageRank, BFS and the three corpus
-#: scorers), whose eager checkpoints are now their only form; then the
-#: eight native stream drains, whose state shard count is now min(8,
-#: configured shuffle partitions), the four range-prefix queries, whose
-#: range exchange now takes the session's shuffle partitions, and the
-#: three other queries whose walks stop on (or take their vocabulary
-#: from) the checkpoint's own count; then the sixteen codec/tool queries
-#: whose Python stage is the one `multimodal.map_payloads` driver
-#: (mapInArrow), q_skipping_report (Spark's partitioned writer and a
-#: driver-side footer sweep) and three queries whose literal tables are
-#: `catalog.literal_table` local relations; then the two stream folds
-#: that left Python state (KMV, rolling z-score), the batch rolling
-#: z-score and the two queries whose committed snapshots are read
-#: without a schema-inference job; then three consumers of the one Lloyd
-#: trainer.  The head is capped at the driver's 50-query window;
-#: everything else (the other Lloyd and CC consumers and perfbench mix
-#: queries that stood here before) rides the least-recently-green order.
+#: scorers), whose eager checkpoints are their only form, and two native
+#: stream drains.  The head is capped at the driver's 50-query window;
+#: everything else (the other stream drains, the range-prefix queries and
+#: the queries of the Arrow-stage and literal-table changes that stood
+#: here before) rides the least-recently-green order.
 _CHANGED_THIS_ROUND = (
+    "q_hourly_rollup",
+    "q_stream_hourly_rollup",
+    "q_kmv_distinct",
+    "q_profile_columns",
+    "q_stream_kmv",
+    "q_asof_join",
+    "q_asof_join_skewed",
+    "q_resample_ffill",
+    "q_setsim_pairs",
+    "q_incremental_setsim_feed",
+    "q_dup_span_removal",
+    "q_dup_ngram_spans",
+    "q_bpe_encode",
+    "q_near_dup_clusters",
+    "q_triangle_count",
+    "q_incremental_dedup",
+    "q_register_fastq",
+    "q_fastq_rejects",
+    "q_outbox_rows",
+    "q_user_attribution",
+    "q_register_ms_batch",
+    "q_ms_routing",
+    "q_ms_instrument_conflicts",
+    "q_tpch_q22",
+    "q_hopping_rollup",
+    "q_skew_salted_counts",
+    "q_stream_user_totals",
+    "q_stream_rolling_zscore",
+    "q_multimodal_image_meta",
+    "q_multimodal_pixel_stats",
+    "q_multimodal_jpeg_stats",
+    "q_multimodal_resize",
+    "q_multimodal_audio_stats",
+    "q_multimodal_video_frames",
+    "q_pdf_metadata",
+    "q_audio_spectrogram",
+    "q_image_ahash",
+    "q_mjpeg_video_stats",
+    "q_g711_audio_stats",
+    "q_gif_pixel_stats",
+    "q_tiff_pixel_stats",
     "q_pagerank",
     "q_resolve_entities",
     "q_link_records",
@@ -8246,48 +8309,7 @@ _CHANGED_THIS_ROUND = (
     "q_bigram_lm",
     "q_bfs_distances",
     "q_stream_sessionize",
-    "q_stream_hourly_rollup",
     "q_stream_enriched",
-    "q_stream_interval_join",
-    "q_stream_dedup",
-    "q_stream_user_totals",
-    "q_stream_hll",
-    "q_stream_cms",
-    "q_lm_buckets",
-    "q_exact_percentiles",
-    "q_mad_outliers",
-    "q_plan_compaction",
-    "q_experimental_design",
-    "q_lineage_roots",
-    "q_setsim_pairs",
-    "q_multimodal_features",
-    "q_multimodal_frame_sample",
-    "q_multimodal_image_meta",
-    "q_multimodal_jpeg_stats",
-    "q_multimodal_pixel_stats",
-    "q_multimodal_resize",
-    "q_multimodal_audio_stats",
-    "q_multimodal_video_frames",
-    "q_audio_spectrogram",
-    "q_pdf_metadata",
-    "q_tool_dryrun",
-    "q_image_ahash",
-    "q_mjpeg_video_stats",
-    "q_gif_pixel_stats",
-    "q_tiff_pixel_stats",
-    "q_g711_audio_stats",
-    "q_skipping_report",
-    "q_phrase_search",
-    "q_mapping_broadcast_lookup",
-    "q_domain_quality_rollup",
-    "q_stream_kmv",
-    "q_stream_rolling_zscore",
-    "q_rolling_zscore",
-    "q_stream_mv_drain",
-    "q_vacuum_report",
-    "q_kmeans_assign",
-    "q_ivf_trained",
-    "q_semdedup",
 )
 
 

@@ -18,8 +18,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 BARCODE_REGEX = "Q[A-Z0-9]{4}[0-9]{3}[A-Z][A-Z0-9]"
-#: derived-sample prefix grammar, e.g. NGS / MS2 / VC1 / HLA1 (SURVEY §1.2)
-PREFIXED_BARCODE_REGEX = "(NGS|MS|VC|HLA|MA|MSQC|NGSQC|PCR|IM|FASTA|RMA|VAC|IMG|MTB|MP|NMR)[0-9]*" + BARCODE_REGEX
 
 
 def barcode_checksum_sum(code: Column) -> Column:
@@ -48,6 +46,17 @@ def is_valid_barcode(code: Column) -> Column:
 def extract_barcode(name: Column) -> Column:
     """First QBiC barcode embedded in a filename ('' if none) — P1."""
     return F.regexp_extract(name, BARCODE_REGEX, 0)
+
+
+def cents(value: Column) -> Column:
+    """Exact integer cents of a DOUBLE amount: floor(v·100 + 0.5), BIGINT.
+
+    The one engine-portable money law: IEEE multiply-add-floor gives the
+    same integer in Spark and any SQL oracle (`floor(v * 100 + 0.5)`),
+    whereas round() breaks ties half-away-from-zero in Spark and
+    disagrees on negative halves.  Integer cents sum exactly under any
+    reduction tree."""
+    return F.floor(value * 100 + F.lit(0.5)).cast("bigint")
 
 
 # --- workflow-result name destructuring (SURVEY §1.2) ---------------------

@@ -44,6 +44,62 @@ def _orderable(dt: T.DataType) -> bool:
     return True
 
 
+def _carry(
+    left: DataFrame,
+    right: DataFrame,
+    on: str,
+    keys: list[str],
+    payload_cols: list[str],
+) -> DataFrame:
+    """The tagged-union carry both as-of joins run: every `left` row with
+    `_match`, the struct of `payload_cols` of the latest `right` row at or
+    before it within its `keys` partition (NULL if none).
+
+    Right rows are tagged 0 and sort first at equal `on`, so the match is
+    inclusive.  Deterministic tie handling: multiple right rows tied on
+    (keys, on) would otherwise carry an arbitrary payload.  When the
+    payload struct is orderable (no map fields), it becomes the final
+    tiebreak — the greatest payload wins, reproducibly.  With unorderable
+    payloads the tie contract is unspecified (documented here, not
+    silently random-ish: within one execution the window sort is stable
+    per partition, but reruns may differ)."""
+    left_cols = list(left.columns)
+    tagged_right = right.select(
+        *keys,
+        F.col(on),
+        F.lit(0).alias("_side"),
+        F.struct(*[F.col(c) for c in payload_cols]).alias("_rpay_s"),
+    )
+    pay_type = tagged_right.schema["_rpay_s"].dataType
+    # align schemas for the union: left keeps its full row, right carries
+    # only (keys, on, payload struct)
+    unioned = left.select(
+        *left_cols, F.lit(1).alias("_side"), F.lit(None).cast(pay_type).alias("_rpay_s")
+    ).unionByName(
+        tagged_right.select(
+            *[
+                F.lit(None).cast(dict(left.dtypes)[c]).alias(c)
+                for c in left_cols
+                if c not in keys and c != on
+            ],
+            *keys,
+            F.col(on),
+            "_side",
+            "_rpay_s",
+        )
+    )
+    order_cols = [F.col(on).asc(), F.col("_side").asc()]
+    if _orderable(pay_type):
+        order_cols.append(F.col("_rpay_s").asc())
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    carried = unioned.withColumn("_match", F.last("_rpay_s", ignorenulls=True).over(w))
+    return carried.filter(F.col("_side") == 1)
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -57,49 +113,11 @@ def asof_join(
     Right columns (except join keys) come back suffixed with ``suffix``.
     """
     payload_cols = [c for c in right.columns if c != by]
-    tagged_left = left.withColumn("_side", F.lit(1))
-    tagged_right = right.select(
-        *( [F.col(by)] if by else [] ),
-        F.col(on),
-        F.lit(0).alias("_side"),
-        F.struct(*[F.col(c) for c in payload_cols]).alias("_rpay_s"),
-    )
-    # align schemas for the union: left keeps its full row, right carries
-    # only (key, ts, payload struct)
-    left_cols = [c for c in left.columns]
-    unioned = tagged_left.select(
-        *left_cols, "_side", F.lit(None).cast(tagged_right.schema["_rpay_s"].dataType).alias("_rpay_s")
-    ).unionByName(
-        tagged_right.select(
-            *[F.lit(None).cast(dict(left.dtypes)[c]).alias(c) for c in left_cols if c not in ((by,) if by else ()) and c != on],
-            *( [F.col(by)] if by else [] ),
-            F.col(on),
-            "_side",
-            "_rpay_s",
-        ),
-        allowMissingColumns=False,
-    )
-    # Deterministic tie handling: multiple right rows tied on (by, on) would
-    # otherwise carry an arbitrary payload.  When the payload struct is
-    # orderable (no map fields), it becomes the final tiebreak — the
-    # greatest payload wins, reproducibly.  With unorderable payloads the
-    # tie contract is unspecified (documented here, not silently random-ish:
-    # within one execution the window sort is stable per partition, but
-    # reruns may differ).
-    order_cols = [F.col(on).asc(), F.col("_side").asc()]
-    if _orderable(tagged_right.schema["_rpay_s"].dataType):
-        order_cols.append(F.col("_rpay_s").asc())
-    w = (
-        Window.partitionBy(*( [by] if by else [] ))
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.withColumn("_match", F.last("_rpay_s", ignorenulls=True).over(w))
-    out = carried.filter(F.col("_side") == 1).select(
-        *left_cols,
+    by_cols = [by] if by else []
+    return _carry(left, right, on, by_cols, payload_cols).select(
+        *left.columns,
         *[F.col(f"_match.{c}").alias(f"{c}{suffix}") for c in payload_cols],
     )
-    return out
 
 
 def asof_join_forward(
@@ -147,13 +165,14 @@ def asof_join_sliced(
 
     :func:`asof_join` windows over ``by`` alone, so one task sorts a hot
     key's entire history (AQE splits skewed JOIN partitions, never window
-    partitions).  Here the same tagged-union carry-forward runs per
+    partitions).  Here the same carry (:func:`_carry`) runs over
     ``(by, slice)`` — bounded task size at any skew — and left rows that
-    precede every in-slice right row coalesce a carried-in payload computed
-    on the bucket-level table (one row per key × slice, aggregated
-    map-side, tiny).  Two extra small shuffles; the final fix-up join is on
-    ``(by, slice)``, the partitioning the window just produced, so the
-    exchange is reused.
+    precede every in-slice right row coalesce a carried-in payload
+    computed on the bucket-level table (one row per key × slice,
+    aggregated map-side, tiny).  Two extra small shuffles; the final
+    fix-up join is on ``(by, slice)``, the partitioning the window just
+    produced, so the exchange is reused.  With ``by=None`` the slice alone
+    keys the carry.
 
     ``bucket``: fn Column → Column mapping the ``on`` value to a slice id
     (default: UTC day).  Same inclusive / greatest-payload-tie semantics as
@@ -163,44 +182,15 @@ def asof_join_sliced(
         bucket = lambda c: F.floor(F.unix_timestamp(c) / 86400)  # noqa: E731
     payload_cols = [c for c in right.columns if c != by]
     pay = F.struct(*[F.col(c) for c in payload_cols])
-    pay_type = T.StructType([right.schema[c] for c in payload_cols])
     by_cols = [by] if by else []
-    left_cols = list(left.columns)
 
     lb = left.withColumn("_b", bucket(F.col(on)))
     rb = right.withColumn("_b", bucket(F.col(on)))
-
-    tagged_left = lb.select(
-        *left_cols, "_b", F.lit(1).alias("_side"), F.lit(None).cast(pay_type).alias("_rpay_s")
-    )
-    tagged_right = rb.select(
-        *[
-            F.lit(None).cast(dict(left.dtypes)[c]).alias(c)
-            for c in left_cols
-            if c not in ((by,) if by else ()) and c != on
-        ],
-        *by_cols,
-        F.col(on),
-        "_b",
-        F.lit(0).alias("_side"),
-        pay.alias("_rpay_s"),
-    )
-    unioned = tagged_left.unionByName(tagged_right)
-
-    orderable = _orderable(pay_type)
-    order_cols = [F.col(on).asc(), F.col("_side").asc()]
-    if orderable:
-        order_cols.append(F.col("_rpay_s").asc())
-    w_slice = (
-        Window.partitionBy(*by_cols, "_b")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = unioned.withColumn("_match", F.last("_rpay_s", ignorenulls=True).over(w_slice))
+    carried = _carry(lb, rb, on, [*by_cols, "_b"], payload_cols)
 
     # bucket-level last right payload; same greatest-payload tie rule as the
     # window when the payload is orderable, unspecified-tie otherwise
-    if orderable:
+    if _orderable(T.StructType([right.schema[c] for c in payload_cols])):
         last_r = (
             rb.groupBy(*by_cols, "_b")
             .agg(F.max(F.struct(F.col(on).alias("_o"), pay.alias("_p"))).alias("_mx"))
@@ -220,13 +210,11 @@ def asof_join_sliced(
         .select(*by_cols, "_b", "_carry")
     )
 
-    out = (
-        carried.filter(F.col("_side") == 1)
-        .join(carry, [*by_cols, "_b"], "left")
-        .withColumn("_match", F.coalesce(F.col("_match"), F.col("_carry")))
+    out = carried.join(carry, [*by_cols, "_b"], "left").withColumn(
+        "_match", F.coalesce(F.col("_match"), F.col("_carry"))
     )
     return out.select(
-        *left_cols,
+        *left.columns,
         *[F.col(f"_match.{c}").alias(f"{c}{suffix}") for c in payload_cols],
     )
 

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..ckpt import next_round
 from .dedup import shingles_from_words
-from .text import words
+from .text import word_positions, words
 
 
 def ngram_hashes(wcol: Column, n: int) -> Column:
@@ -566,19 +566,7 @@ def bpe_encode(
     round's rule is a broadcast 1-row join (see _bpe_train).
     """
     _, seg_tbl = _bpe_train(df, text_col, n_merges)
-    wdf = df.select(F.col(id_col), words(F.col(text_col)).alias("_w"))
-    wp = wdf.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.col("_w"),
-                lambda w, i: F.struct(
-                    (i + 1).cast("bigint").alias("pos"), w.alias("word")
-                ),
-            )
-        ).alias("_p"),
-    ).select(id_col, "_p.pos", "_p.word")
-    joined = wp.join(seg_tbl.select("word", "seg"), "word")
+    joined = word_positions(df, text_col, id_col).join(seg_tbl.select("word", "seg"), "word")
     seg_structs = F.array_sort(
         F.collect_list(F.struct(F.col("pos"), F.col("seg")))
     )

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..ckpt import fixpoint, free_local_checkpoint, next_round
 from ..exactness import e9_div_expr
-from .text import normalize_text, words
+from .text import normalize_text, word_positions, words
 
 
 def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -143,6 +143,21 @@ def lsh_candidate_pairs(band_df: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def _shingle_sets(
+    docs: DataFrame, ids: DataFrame, text_col: str, id_col: str, k: int, out: str
+) -> DataFrame:
+    """(id, `out`): the distinct k-word shingle set of every doc whose id
+    is in `ids` (one column, named `id_col`).  Semi-join FIRST: sets are
+    built for candidate docs only, never for the whole corpus."""
+    staged = docs.join(ids, id_col, "leftsemi").select(
+        F.col(id_col), words(F.col(text_col)).alias("_w")
+    )
+    return staged.select(
+        F.col(id_col),
+        F.array_distinct(shingles_from_words(F.col("_w"), k)).alias(out),
+    )
+
+
 def verified_pairs(
     pairs: DataFrame, docs: DataFrame, text_col: str, id_col: str,
     threshold: float, k: int = 3,
@@ -168,12 +183,9 @@ def verified_pairs(
         .union(pairs.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    touched = docs.join(ids, id_col, "left_semi")
-    staged = touched.select(F.col(id_col), words(F.col(text_col)).alias("_w"))
-    sets = staged.select(
-        F.col(id_col),
-        F.array_distinct(shingles_from_words(F.col("_w"), k)).alias("_sh"),
-    ).localCheckpoint(eager=True)
+    sets = _shingle_sets(docs, ids, text_col, id_col, k, "_sh").localCheckpoint(
+        eager=True
+    )
     a = sets.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a"))
     b = sets.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b"))
     return (
@@ -361,6 +373,24 @@ def positional_gram_hashes(
     return gram.select(id_col, "_g.pos", "_g.h")
 
 
+def _dup_gram_hits(
+    df: DataFrame, text_col: str, id_col: str, n: int, min_docs: int
+) -> DataFrame:
+    """(id, pos) of every n-gram that occurs in at least `min_docs`
+    distinct documents: ONE groupBy on md5-uniform gram keys, then an
+    equi-join mark back on the same keys — never a broadcast, because
+    the duplicated-gram set is data-dependent and can itself be huge on
+    crawl data."""
+    grams = positional_gram_hashes(df, text_col, id_col, n)
+    dup = (
+        grams.groupBy("h")
+        .agg(F.count_distinct(F.col(id_col)).alias("_nd"))
+        .filter(F.col("_nd") >= min_docs)
+        .select("h")
+    )
+    return grams.join(dup, "h", "leftsemi").select(id_col, "pos")
+
+
 def dup_ngram_spans(
     df: DataFrame,
     text_col: str = "text",
@@ -388,14 +418,7 @@ def dup_ngram_spans(
     """
     from pyspark.sql import Window
 
-    grams = positional_gram_hashes(df, text_col, id_col, n)
-    dup = (
-        grams.groupBy("h")
-        .agg(F.count_distinct(F.col(id_col)).alias("_nd"))
-        .filter(F.col("_nd") >= min_docs)
-        .select("h")
-    )
-    hits = grams.join(dup, "h", "leftsemi").select(id_col, "pos")
+    hits = _dup_gram_hits(df, text_col, id_col, n, min_docs)
     w = Window.partitionBy(id_col).orderBy("pos")
     marked = hits.select(
         id_col,
@@ -562,28 +585,8 @@ def dup_span_removal(
     and the rebuild is the package's standard bounded per-doc groupBy (one
     document's words, the same invariant as segment_dedup's rebuild).
     """
-    wdf = df.select(F.col(id_col), words(F.col(text_col)).alias("_w"))
-    # every word with its 1-based position; lambda(e, i) is the (element,
-    # index) HOF form, index 0-based
-    wpos = wdf.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.col("_w"),
-                lambda w, i: F.struct(
-                    (i + 1).cast("bigint").alias("pos"), w.alias("word")
-                ),
-            )
-        ).alias("_p"),
-    ).select(id_col, "_p.pos", "_p.word")
-    grams = positional_gram_hashes(df, text_col, id_col, n)
-    dup = (
-        grams.groupBy("h")
-        .agg(F.count_distinct(F.col(id_col)).alias("_nd"))
-        .filter(F.col("_nd") >= min_docs)
-        .select("h")
-    )
-    hits = grams.join(dup, "h", "leftsemi").select(id_col, "pos")
+    wpos = word_positions(df, text_col, id_col)
+    hits = _dup_gram_hits(df, text_col, id_col, n, min_docs)
     covered = hits.select(
         F.col(id_col),
         F.explode(F.sequence(F.col("pos"), F.col("pos") + F.lit(n - 1))).alias(
@@ -667,28 +670,18 @@ def incremental_near_dups(
         .localCheckpoint(eager=True)
     )
 
-    def _sets(df: DataFrame, keep: DataFrame, out: str) -> DataFrame:
-        # semi-join FIRST: shingle sets are built for candidate ids only —
+    def _sets(df: DataFrame, cand_col: str, out: str) -> DataFrame:
         # the history side must never be re-tokenized wholesale per batch
-        staged = df.join(
-            keep.withColumnRenamed(keep.columns[0], id_col), id_col, "leftsemi"
-        ).select(F.col(id_col), words(F.col(text_col)).alias("_w"))
-        return staged.select(
-            F.col(id_col),
-            F.array_distinct(shingles_from_words(F.col("_w"), k)).alias(out),
-        )
+        keep = cand.select(cand_col).distinct().withColumnRenamed(cand_col, id_col)
+        return _shingle_sets(df, keep, text_col, id_col, k, out)
 
     ver = (
         cand.join(
-            _sets(batch, cand.select("_bid").distinct(), "_shb").withColumnRenamed(
-                id_col, "_bid2"
-            ),
+            _sets(batch, "_bid", "_shb").withColumnRenamed(id_col, "_bid2"),
             F.col("_bid") == F.col("_bid2"),
         )
         .join(
-            _sets(corpus, cand.select("_hid").distinct(), "_shh").withColumnRenamed(
-                id_col, "_hid2"
-            ),
+            _sets(corpus, "_hid", "_shh").withColumnRenamed(id_col, "_hid2"),
             F.col("_hid") == F.col("_hid2"),
         )
         .select(
@@ -848,6 +841,27 @@ def _setsim_toks(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ).filter(F.col("_tok") != "")
 
 
+def _probe_prefix_len(t_num: int, t_den: int) -> Column:
+    """`_p`, the probing prefix length p = s − ceil(t·s) + 1 of a doc of
+    `_s` tokens (exact integer ceil)."""
+    return (
+        F.col("_s")
+        - F.expr(f"({t_num} * _s + {t_den} - 1) DIV {t_den}")
+        + F.lit(1)
+    )
+
+
+def _index_prefix_len(t_num: int, t_den: int) -> Column:
+    """`_pi`, the indexing prefix length p_i = s − ceil(2t/(1+t)·s) + 1
+    of a doc of `_s` tokens — explodes the size-smaller side of every
+    setsim_pairs candidate pair."""
+    return (
+        F.col("_s")
+        - F.expr(f"(2 * {t_num} * _s + {t_num + t_den} - 1) DIV {t_num + t_den}")
+        + F.lit(1)
+    )
+
+
 def _setsim_docs(
     toks: DataFrame, freq: DataFrame, t_num: int, t_den: int,
     checkpoint: bool = True,
@@ -873,12 +887,7 @@ def _setsim_docs(
             F.col("_st._tok").alias("_toks"),
             F.size("_st").alias("_s"),
         )
-        .withColumn(
-            "_p",
-            F.col("_s")
-            - F.expr(f"({t_num} * _s + {t_den} - 1) DIV {t_den}")
-            + F.lit(1),
-        )
+        .withColumn("_p", _probe_prefix_len(t_num, t_den))
     )
     return docs.localCheckpoint(eager=True) if checkpoint else docs
 
@@ -1076,6 +1085,30 @@ def _setsim_salted(a, b, cond, n_salts: int, b_id: str):
     return a, b, (a["_salt"] == b["_salt"]) & cond
 
 
+def _setsim_emit(
+    pairs: DataFrame, size_a: str, size_b: str, t_num: int, t_den: int
+) -> DataFrame:
+    """The verify-and-project tail of both setsim_pairs cores, over
+    (id_a, id_b, `_inter`, set sizes `size_a`/`size_b`) pair rows:
+    keep inter·t_den ≥ union·t_num (exact integer J ≥ t) and emit
+    (id_a, id_b, n_common, n_union, jaccard)."""
+    return (
+        pairs.withColumn("_union", F.col(size_a) + F.col(size_b) - F.col("_inter"))
+        .filter(F.col("_inter") * F.lit(t_den) >= F.col("_union") * F.lit(t_num))
+        .select(
+            # candidates ride the (s, id) order; the output contract stays
+            # id_a < id_b, so canonicalize by id (symmetric stats unmoved)
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+            F.col("_inter").cast("bigint").alias("n_common"),
+            F.col("_union").cast("bigint").alias("n_union"),
+            F.round(
+                F.col("_inter").cast("double") / F.col("_union"), 4
+            ).alias("jaccard"),
+        )
+    )
+
+
 def _setsim_pairs_bitmask(
     toks: DataFrame, freq: DataFrame, t_num: int, t_den: int, n_salts: int
 ) -> DataFrame:
@@ -1108,20 +1141,8 @@ def _setsim_pairs_bitmask(
             ).alias("_mask"),
         )
         .select("_id", "_mask", "_ranks", F.size("_ranks").alias("_s"))
-        .withColumn(
-            "_p",
-            F.col("_s")
-            - F.expr(f"({t_num} * _s + {t_den} - 1) DIV {t_den}")
-            + F.lit(1),
-        )
-        .withColumn(
-            "_pi",
-            F.col("_s")
-            - F.expr(
-                f"(2 * {t_num} * _s + {t_num + t_den} - 1) DIV {t_num + t_den}"
-            )
-            + F.lit(1),
-        )
+        .withColumn("_p", _probe_prefix_len(t_num, t_den))
+        .withColumn("_pi", _index_prefix_len(t_num, t_den))
         .localCheckpoint(eager=True)
     )
 
@@ -1165,7 +1186,7 @@ def _setsim_pairs_bitmask(
             F.lit(64) - (F.col("_rka") - F.lit(1)),
         )
     )
-    return (
+    pairs = (
         a.join(b, cond)
         .select("id_a", "id_b", "_sa", "_sb", "_ma", "_mb", "_rka")
         .withColumn("_common", F.col("_ma").bitwiseAND(F.col("_mb")))
@@ -1177,20 +1198,8 @@ def _setsim_pairs_bitmask(
         # survives exactly once — no dedup needed.
         .filter(F.col("_common").bitwiseAND(below) == 0)
         .withColumn("_inter", F.bit_count("_common").cast("int"))
-        .withColumn("_union", F.col("_sa") + F.col("_sb") - F.col("_inter"))
-        .filter(F.col("_inter") * F.lit(t_den) >= F.col("_union") * F.lit(t_num))
-        .select(
-            # candidates ride the (s, id) order; the output contract stays
-            # id_a < id_b, so canonicalize by id (symmetric stats unmoved)
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            F.col("_inter").cast("bigint").alias("n_common"),
-            F.col("_union").cast("bigint").alias("n_union"),
-            F.round(
-                F.col("_inter").cast("double") / F.col("_union"), 4
-            ).alias("jaccard"),
-        )
     )
+    return _setsim_emit(pairs, "_sa", "_sb", t_num, t_den)
 
 
 def _setsim_pairs_general(
@@ -1204,13 +1213,9 @@ def _setsim_pairs_general(
     carrying full token arrays on every index row (the dense-regime
     trick) was measured SLOWER here (per-match hash-set allocation ×
     duplication beats the saved exchange)."""
-    # indexing prefix p_i = s − ceil(2t/(1+t)·s) + 1 for the size-smaller
-    # side of each pair; the probing side keeps _setsim_docs' `_p`
+    # the probing side keeps _setsim_docs' `_p`
     docs = _setsim_docs(toks, freq, t_num, t_den).withColumn(
-        "_pi",
-        F.col("_s")
-        - F.expr(f"(2 * {t_num} * _s + {t_num + t_den} - 1) DIV {t_num + t_den}")
-        + F.lit(1),
+        "_pi", _index_prefix_len(t_num, t_den)
     )
     a = _setsim_pos_prefixes(docs, "_pi").select(
         F.col("_tok"),
@@ -1233,24 +1238,12 @@ def _setsim_pairs_general(
     db = docs.select(
         F.col("_id").alias("id_b"), F.col("_toks").alias("_tb"), F.col("_s").alias("_nb")
     )
-    return (
+    pairs = (
         cand.join(da, "id_a")
         .join(db, "id_b")
         .withColumn("_inter", F.size(F.array_intersect("_ta", "_tb")))
-        .withColumn("_union", F.col("_na") + F.col("_nb") - F.col("_inter"))
-        .filter(F.col("_inter") * F.lit(t_den) >= F.col("_union") * F.lit(t_num))
-        .select(
-            # candidates ride the (s, id) order; the output contract stays
-            # id_a < id_b, so canonicalize by id (symmetric stats unmoved)
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            F.col("_inter").cast("bigint").alias("n_common"),
-            F.col("_union").cast("bigint").alias("n_union"),
-            F.round(
-                F.col("_inter").cast("double") / F.col("_union"), 4
-            ).alias("jaccard"),
-        )
     )
+    return _setsim_emit(pairs, "_na", "_nb", t_num, t_den)
 
 
 class SetsimIndex(NamedTuple):
@@ -1394,17 +1387,9 @@ def incremental_setsim(
             >= alpha
         )
     )
-    if n_salts > 1:
-        # small-vocabulary skew guard (shared law with setsim_pairs):
-        # replicate the batch side (the smaller one), key the corpus
-        # side by its id's hash
-        bp = bp.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-        )
-        cp = cp.withColumn(
-            "_salt", F.pmod(F.xxhash64("_cid"), F.lit(n_salts)).cast("int")
-        )
-        cond = (bp["_salt"] == cp["_salt"]) & cond
+    # small-vocabulary skew guard: the batch side (the smaller one) is
+    # the replicated side
+    bp, cp, cond = _setsim_salted(bp, cp, cond, n_salts, "_cid")
     # Fused emit-once verification (r13, same law as setsim_pairs): the
     # exact intersection is computed on the join output in the same
     # pipelined stage and a (batch, corpus) pair survives only at its

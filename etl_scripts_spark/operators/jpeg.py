@@ -24,7 +24,7 @@ whatever is declared, standard Annex K tables included).
 
 Scale shape: both directions run inside the existing Arrow-batched
 codec stages (multimodal.map_payloads under decode_pixel_stats /
-with_jpeg_payload) — the payload never round-trips through the driver,
+payload_source) — the payload never round-trips through the driver,
 and partitioning carries over from the upstream scan.
 
 Reference parity: the reference repo ships no image codec at all (its

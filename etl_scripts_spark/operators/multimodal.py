@@ -603,11 +603,6 @@ def synthetic_adpcm_wav_bytes(doc_id: int, channels: int = 1) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def with_adpcm_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture source for the ADPCM path (map-only, Arrow-batched)."""
-    return _payload_source(df, id_col, synthetic_adpcm_wav_bytes)
-
-
 # G.711 μ-law (WAVE format tag 0x0007) and A-law (0x0006) — the standard
 # telephony companding laws (ITU-T G.711; the same expansion arithmetic as
 # Sun's public-domain g711.c).  Pure 256-entry lookup: exact, branch-free,
@@ -663,11 +658,6 @@ def synthetic_g711_wav_bytes(doc_id: int, law: int = 7) -> bytes:
         + b"data" + struct.pack("<I", len(data)) + data
     )
     return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def with_g711_payload(df: DataFrame, id_col: str = "doc_id", law: int = 7) -> DataFrame:
-    """Fixture source for the G.711 path (map-only, Arrow-batched)."""
-    return _payload_source(df, id_col, lambda d: synthetic_g711_wav_bytes(d, law))
 
 
 def decode_wav_audio(payload: bytes):
@@ -760,11 +750,6 @@ AUDIO_STATS_SCHEMA = T.StructType(
 )
 
 
-def with_wav_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture source for the audio path (map-only, Arrow-batched)."""
-    return _payload_source(df, id_col, synthetic_wav_bytes)
-
-
 def decode_audio_stats(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload") -> DataFrame:
     """binary → REAL WAV decode → per-file stats (rate, n, sum, peak)."""
 
@@ -845,11 +830,6 @@ VIDEO_FRAME_SCHEMA = T.StructType(
 )
 
 
-def with_avi_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture source for the video-demux path (map-only, Arrow-batched)."""
-    return _payload_source(df, id_col, synthetic_avi_bytes)
-
-
 def sample_video_frames(
     df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload", n_frames: int = 4
 ) -> DataFrame:
@@ -885,21 +865,17 @@ PAYLOAD_SCHEMA = T.StructType(
 )
 
 
-def _payload_source(df: DataFrame, id_col: str, synth) -> DataFrame:
-    """Shared fixture-source stage: one synthetic payload per id, map-only
-    and Arrow-batched, keeping the upstream partitioning.  ONE definition
-    for every per-codec source (and the PDF one in parsers/sidecars) — the
-    id column always comes out as `doc_id`."""
+def payload_source(df: DataFrame, id_col: str, synth) -> DataFrame:
+    """(doc_id, payload): the fixture source for every codec — one
+    synthetic payload `synth(id)` per id (e.g. `synthetic_wav_bytes`,
+    `sidecars.synthetic_pdf_bytes`), map-only and Arrow-batched, keeping
+    the upstream partitioning.  Stands in for the object-store scan that
+    feeds real binaries at scale; the fixture generator runs on the
+    executors, never the driver.  The id column always comes out as
+    `doc_id`."""
 
     # the id is its own payload column: `rows` ignores the second value
     return map_payloads(df, id_col, id_col, PAYLOAD_SCHEMA, lambda i, _: [(i, synth(i))])
-
-
-def with_image_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture source: one spec-valid image payload per id.  Stands in for
-    the object-store scan that feeds real binaries at scale (map-only, keeps
-    the upstream partitioning)."""
-    return _payload_source(df, id_col, synthetic_image_bytes)
 
 
 def decode_image_meta(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload") -> DataFrame:
@@ -975,39 +951,6 @@ def sample_frames(df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload
             yield did, i, off, raw[off : off + step]
 
     return map_payloads(df, id_col, bin_col, FRAME_SCHEMA, rows)
-
-
-def with_jpeg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture source for the JPEG pixel path: fully decodable baseline
-    JFIF payloads carrying the closed-form block-constant law (see
-    jpeg.synthetic_jpeg_bytes); map-only like the other payload sources."""
-    from .jpeg import synthetic_jpeg_bytes
-
-    return _payload_source(df, id_col, synthetic_jpeg_bytes)
-
-
-def with_pixel_image_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture source for the PIXEL path: fully decodable BMP/PNG payloads
-    (map-only, partitioning carries over from the upstream scan)."""
-    return _payload_source(df, id_col, synthetic_pixel_image_bytes)
-
-
-def with_gif_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture source for the GIF path: fully decodable LZW payloads with
-    closed-form pixels (operators/gif.synthetic_gif_bytes); every 3rd doc
-    interlaced so the 4-pass path is always exercised."""
-    from .gif import synthetic_gif_bytes
-
-    return _payload_source(df, id_col, synthetic_gif_bytes)
-
-
-def with_tiff_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture source for the TIFF path: two-strip grayscale over the
-    shared _pixel_pattern law; every 3rd doc PackBits-compressed
-    (operators/tiff.synthetic_tiff_bytes)."""
-    from .tiff import synthetic_tiff_bytes
-
-    return _payload_source(df, id_col, synthetic_tiff_bytes)
 
 
 PIXEL_STATS_SCHEMA = T.StructType(
@@ -1185,11 +1128,6 @@ def synthetic_mjpeg_avi_bytes(doc_id: int) -> bytes:
     d = int(doc_id)
     k = 2 + d % 5
     return _avi_container([synthetic_jpeg_bytes(d + i) for i in range(k)])
-
-
-def with_mjpeg_avi_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture source for the codec-level video path (map-only)."""
-    return _payload_source(df, id_col, synthetic_mjpeg_avi_bytes)
 
 
 def decode_video_frame_pixels(
@@ -1457,11 +1395,6 @@ def synthetic_square_wav_bytes(doc_id: int) -> bytes:
         + b"data" + struct.pack("<I", len(data)) + data
     )
     return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def with_square_wav_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture source for the spectral path (map-only, Arrow-batched)."""
-    return _payload_source(df, id_col, synthetic_square_wav_bytes)
 
 
 SPECTROGRAM_SCHEMA = T.StructType(

@@ -35,7 +35,7 @@ with no second corpus scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: 2^48 — the hash space when reading the first 12 hex chars of an md5.
@@ -83,21 +83,32 @@ def kmv_sketch(
     )
 
 
+def kmv_estimate(k: int) -> Column:
+    """The KMV distinct-count estimate over a sketch's (kth_hash,
+    sketch_n) columns: sketch_n while the sketch is lossless (sketch_n <
+    k — it then holds every distinct digest), else (k-1)/u_k, u_k being
+    the k-th smallest digest's first 48 bits over 2^48, rounded to 4
+    decimals.  Both engines evaluate the identical literal expression
+    tree, so doubles match bit-exactly."""
+    kth_val = F.conv(F.substring("kth_hash", 1, 12), 16, 10).cast("bigint")
+    return F.when(
+        F.col("sketch_n") < k, F.col("sketch_n").cast("double")
+    ).otherwise(F.round(F.lit(float(k - 1)) * F.lit(_HASH_SPACE) / kth_val, 4))
+
+
 def kmv_distinct(
     df: DataFrame, group_col: str, value_col: str, k: int = 32
 ) -> DataFrame:
     """Per-group KMV distinct-count estimate next to the exact count.
 
-    Returns (group, exact_distinct, est_distinct) where est_distinct =
-    exact when the group has fewer than k distinct values (sketch_n < k —
-    the sketch is then lossless) and (k-1)/u_k otherwise, u_k being the
-    k-th smallest digest's first 48 bits over 2^48.
+    Returns (group, exact_distinct, est_distinct), est_distinct by
+    :func:`kmv_estimate` (exact whenever the group has fewer than k
+    distinct values).
 
     Two branches joined on the group key: the sketch branch (the 100 TB
     path — WindowGroupLimit caps per-task traffic at k rows per group) and
     an exact `count(distinct)` self-check branch a production run would
-    simply drop.  Estimates round to 4 decimals; both engines evaluate the
-    identical literal expression tree, so doubles match bit-exactly.
+    simply drop.
     """
     exact = (
         df.select(group_col, F.md5(F.col(value_col)).alias("_h"))
@@ -106,12 +117,8 @@ def kmv_distinct(
         .agg(F.count("*").alias("exact_distinct"))
     )
     sk = kmv_sketch(df, group_col, value_col, k)
-    kth_val = F.conv(F.substring("kth_hash", 1, 12), 16, 10).cast("bigint")
-    est = F.when(
-        F.col("sketch_n") < k, F.col("exact_distinct").cast("double")
-    ).otherwise(F.round(F.lit(float(k - 1)) * F.lit(_HASH_SPACE) / kth_val, 4))
     return exact.join(sk, group_col).select(
-        group_col, "exact_distinct", est.alias("est_distinct")
+        group_col, "exact_distinct", kmv_estimate(k).alias("est_distinct")
     )
 
 

@@ -37,6 +37,26 @@ def words(text: Column) -> Column:
     return F.split(normalize_text(text), " ")
 
 
+def word_positions(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, pos, word): every word of `words(text)` with its 1-based
+    position — the one per-word explode under the span-removal and
+    BPE-encode rebuilds.  The tokenizer runs once, in its own select (a
+    HOF over the raw tokenizer expression would inline it per element)."""
+    wdf = df.select(F.col(id_col), words(F.col(text_col)).alias("_w"))
+    # lambda(e, i) is the (element, index) HOF form, index 0-based
+    return wdf.select(
+        F.col(id_col),
+        F.explode(
+            F.transform(
+                F.col("_w"),
+                lambda w, i: F.struct(
+                    (i + 1).cast("bigint").alias("pos"), w.alias("word")
+                ),
+            )
+        ).alias("_p"),
+    ).select(id_col, "_p.pos", "_p.word")
+
+
 def whitespace_token_count(text: Column) -> Column:
     return F.size(F.split(F.trim(text), r"\s+"))
 

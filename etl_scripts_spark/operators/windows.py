@@ -1,9 +1,10 @@
 """Event-time windowing, sessionization, and running aggregates.
 
-The reference has no streaming engine (SURVEY §2.8); these are the batch
-equivalents of the Structured Streaming operators in
-:mod:`etl_scripts_spark.streaming`, shared so batch and streaming paths
-produce identical results (same expressions, same window alignment).
+The reference has no streaming engine (SURVEY §2.8).  The tumbling and
+hopping rollups here are written on Spark's `window(ts, ...)`, which runs
+on a batch frame and on a stream alike: the AvailableNow drains of
+:mod:`etl_scripts_spark.streaming.windowed` call these same functions on
+a watermarked stream, so the two paths share one plan, not two copies.
 """
 
 from __future__ import annotations
@@ -11,22 +12,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..expressions import cents
+
 
 def hourly_rollup(events: DataFrame) -> DataFrame:
-    """Tumbling 1-hour counts/sums per event_type (window start as timestamp).
+    """Tumbling 1-hour (hour_start, event_type, n_events, sum_value) —
+    hour_start is the window start as a timestamp.
 
-    Money-style sums go through DECIMAL(18,2) so results are exact and
-    associative — identical under any aggregation order / engine.
+    Groups by the tumbling `window(ts, '1 hour')`, whose start equals
+    date_trunc('hour', ts) in UTC; a row with a NULL ts falls in no
+    window.  On a stream watermarked on ts the same plan is the
+    streaming rollup.  Money-style sums go through DECIMAL(18,2) so
+    results are exact and associative — identical under any aggregation
+    order / engine.
     """
     return (
-        events.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("hour_start"),
-            F.col("event_type"),
-        )
+        events.groupBy(F.window("ts", "1 hour").alias("_w"), F.col("event_type"))
         .agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
         )
+        .select(F.col("_w.start").alias("hour_start"), "event_type", "n_events", "sum_value")
     )
 
 
@@ -289,9 +295,11 @@ def hopping_rollup(
     cross-engine mirror (and most readers) get it wrong — the aligned
     form is what monitors use.  Timestamps convert via unix_micros
     (never cast-as-long); the optional value column snaps to exact
-    integer cents (round(v·100) per row) so sums are
-    reduction-tree-independent.  Window bounds are emitted as epoch
-    MICROSECONDS (engine-portable integers, not timestamps).
+    integer cents per row (:func:`..expressions.cents`,
+    floor(v·100 + 0.5)) so sums are reduction-tree-independent.  Window
+    bounds are emitted as epoch MICROSECONDS (engine-portable integers,
+    not timestamps).  On a stream watermarked on `ts_col` the same plan
+    is the streaming hopping rollup.
     """
     if width_s <= 0 or slide_s <= 0:
         raise ValueError("width_s and slide_s must be positive")
@@ -306,14 +314,7 @@ def hopping_rollup(
     value_names = [value_col] if value_col is not None else []
     aggs = [F.count(F.lit(1)).alias("n_events")]
     if value_col is not None:
-        # floor(v·100 + 0.5): the SHARED engine-portable cents law
-        # (streaming/mv.py uses the same expression) — F.round is
-        # half-away-from-zero and disagrees on negative halves
-        aggs.append(
-            F.sum(
-                F.floor(F.col(value_col) * 100 + F.lit(0.5)).cast("bigint")
-            ).alias("value_cents")
-        )
+        aggs.append(F.sum(cents(F.col(value_col))).alias("value_cents"))
     out = (
         events.filter(F.col(ts_col).isNotNull())
         .select(win, *key_names, *value_names)

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.multimodal import _payload_source, map_payloads
+from ..operators.multimodal import map_payloads
 
 
 def read_checksum_file(spark: SparkSession, path: str) -> DataFrame:
@@ -156,9 +156,6 @@ def synthetic_pdf_bytes(doc_id: int) -> bytes:
     return bytes(out)
 
 
-_PDF_STREAM_RE = None  # compiled lazily on the executor (regex import below)
-
-
 def extract_pdf_text(raw: bytes) -> str:
     """pdftotext, stdlib edition: pull text out of PDF content streams.
 
@@ -245,10 +242,3 @@ def pdf_metadata(df, id_col: str = "doc_id", bin_col: str = "payload"):
         return [(did, m.group(1) if m else None, dict(rin_re.findall(text)))]
 
     return map_payloads(df, id_col, bin_col, PDF_META_SCHEMA, rows)
-
-
-def with_pdf_payload(df, id_col: str = "doc_id"):
-    """(doc_id, payload): the deterministic synthetic order-sheet PDF per
-    id (map-only and Arrow-batched; the fixture generator runs on the
-    executors, never the driver)."""
-    return _payload_source(df, id_col, synthetic_pdf_bytes)

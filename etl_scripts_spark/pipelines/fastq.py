@@ -22,6 +22,23 @@ from pyspark.sql import functions as F
 
 from ..expressions import extract_barcode, is_valid_barcode
 from ..operators.numbering import experiment_code, run_sample_code
+from ..sinks.outbox import build_outbox
+
+
+def validate_barcodes(incoming: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The barcode intake every dropbox shares: extract the first barcode
+    from `incoming_name` (P1, :61) and verify its checksum (P2, :39-45).
+
+    Returns (validated, rejects): the rows whose barcode verifies, with
+    `barcode` added, and (arrival_id, incoming_name, reason) rows for the
+    rest, reason 'INVALID_BARCODE'.  A pure projection and filter, fused
+    into the scan."""
+    extracted = incoming.withColumn("barcode", extract_barcode(F.col("incoming_name")))
+    validated = extracted.withColumn("valid", is_valid_barcode(F.col("barcode")))
+    rejects = validated.filter(~F.col("valid")).select(
+        "arrival_id", "incoming_name", F.lit("INVALID_BARCODE").alias("reason")
+    )
+    return validated.filter(F.col("valid")), rejects
 
 
 def register_fastq_batch(incoming: DataFrame, samples: DataFrame) -> dict[str, DataFrame]:
@@ -32,15 +49,9 @@ def register_fastq_batch(incoming: DataFrame, samples: DataFrame) -> dict[str, D
 
     Returns {"runs", "rejects", "datasets", "outbox"} DataFrames.
     """
-    extracted = incoming.withColumn("barcode", extract_barcode(F.col("incoming_name")))
-    validated = extracted.withColumn("valid", is_valid_barcode(F.col("barcode")))
-    rejects = validated.filter(~F.col("valid")).select(
-        "arrival_id", "incoming_name", F.lit("INVALID_BARCODE").alias("reason")
-    )
-
-    matched = (
-        validated.filter(F.col("valid"))
-        .join(samples.select("code", "project", "space"), F.col("barcode") == F.col("code"), "inner")
+    validated, rejects = validate_barcodes(incoming)
+    matched = validated.join(
+        samples.select("code", "project", "space"), F.col("barcode") == F.col("code"), "inner"
     )
 
     # N1: experiment numbering per project over the batch.
@@ -76,10 +87,5 @@ def register_fastq_batch(incoming: DataFrame, samples: DataFrame) -> dict[str, D
     )
 
     # W6 as an outbox (exactly-once side effects — never inline REST calls).
-    outbox = runs.select(
-        F.col("run_code").alias("entity_code"),
-        F.lit("SAMPLE_TRACKER").alias("service"),
-        F.lit("PENDING").alias("status"),
-        F.lit(0).alias("attempts"),
-    )
+    outbox = build_outbox(runs, "run_code", "SAMPLE_TRACKER")
     return {"runs": runs, "rejects": rejects, "datasets": datasets, "outbox": outbox}

@@ -31,7 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..expressions import extract_barcode, is_valid_barcode
+from ..sinks.outbox import build_outbox
+from .fastq import validate_barcodes
 
 #: routing patterns (etl_msconvert.py ms_prefix_pattern / bsa_run_pattern /
 #: blank_run_pattern analogues)
@@ -69,17 +70,8 @@ def register_ms_batch(
     Returns {"routed", "rejects", "runs", "conflicts", "outbox"}.
     """
     routed = route_incoming(incoming)
-    standard = routed.filter(F.col("route") == "standard")
-
-    extracted = standard.withColumn(
-        "barcode", extract_barcode(F.col("incoming_name"))
-    )
-    validated = extracted.withColumn("valid", is_valid_barcode(F.col("barcode")))
-    rejects = validated.filter(~F.col("valid")).select(
-        "arrival_id", "incoming_name", F.lit("INVALID_BARCODE").alias("reason")
-    )
-
-    matched = validated.filter(F.col("valid")).join(
+    validated, rejects = validate_barcodes(routed.filter(F.col("route") == "standard"))
+    matched = validated.join(
         F.broadcast(samples.select("code", "project", "space")),
         F.col("barcode") == F.col("code"),
         "inner",
@@ -149,18 +141,17 @@ def register_ms_batch(
     # :971) + the accession property write for NON-conflict rows
     # (setPropertyValue('Q_ONTOLOGY_INSTRUMENT_ID') :964-965).  Side
     # effects never run inline — same exactly-once discipline as fastq.
-    tracking = runs.select(
-        F.col("run_code").alias("entity_code"),
-        F.lit("SAMPLE_TRACKER").alias("service"),
-        F.lit("PENDING").alias("status"),
-        F.lit(0).alias("attempts"),
-    )
-    prop_updates = runs.filter(~F.col("conflict")).select(
-        F.concat(F.col("experiment_id"), F.lit("#Q_ONTOLOGY_INSTRUMENT_ID=")
-                 , F.col("instrument_accession")).alias("entity_code"),
-        F.lit("PROPERTY_UPDATE").alias("service"),
-        F.lit("PENDING").alias("status"),
-        F.lit(0).alias("attempts"),
+    tracking = build_outbox(runs, "run_code", "SAMPLE_TRACKER")
+    prop_updates = build_outbox(
+        runs.filter(~F.col("conflict")).select(
+            F.concat(
+                F.col("experiment_id"),
+                F.lit("#Q_ONTOLOGY_INSTRUMENT_ID="),
+                F.col("instrument_accession"),
+            ).alias("entity_code")
+        ),
+        "entity_code",
+        "PROPERTY_UPDATE",
     )
     outbox = tracking.unionByName(prop_updates)
 

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..expressions import cents
+
 
 def _revenue():
     """The exact 4-dp revenue expression price*(1−disc) — defined ONCE:
@@ -154,11 +156,10 @@ def q22_idle_balances(
     left_anti join on the customer key (orders project only o_custkey
     before the join).  Cents ride BIGINT so the grouped total is exact
     and order-independent."""
-    cents = F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("long")
     cust = customer.select(
         "c_custkey",
         (F.col("c_nationkey") % 7).cast("int").alias("cntrycode"),
-        cents.alias("_cents"),
+        cents(F.col("c_acctbal")).alias("_cents"),
     )
     pos = cust.filter(F.col("_cents") > 0)
     thresh = pos.agg(

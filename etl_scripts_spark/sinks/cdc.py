@@ -36,10 +36,6 @@ from pyspark.sql import functions as F
 
 from .commit import latest_committed_version, read_version
 
-#: _change_type values, in the (arbitrary but pinned) emit order.
-CHANGE_TYPES = ("insert", "delete", "update_preimage", "update_postimage")
-
-
 def snapshot_changes(
     old: DataFrame | None, new: DataFrame, keys: list[str]
 ) -> DataFrame:

@@ -58,7 +58,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import literal_table
-from ..operators.sketch import bottom_k_hashes
+from ..expressions import cents
+from ..operators.sketch import bottom_k_hashes, kmv_estimate
 from ..reports.anomaly import rolling_zscore
 from ..sinks.commit import (
     latest_committed_version,
@@ -173,8 +174,8 @@ _KMV_K = 32
 
 def _kmv(spark: SparkSession, stream: DataFrame, root: str) -> DataFrame:
     """Per-event-type bottom-k of md5(user_id) over any events stream,
-    folded per micro-batch.  Returns (event_type, sketch_n, est_distinct):
-    est = sketch_n while the sketch is lossless (< k), else (k-1)/u_k."""
+    folded per micro-batch.  Returns (event_type, sketch_n, est_distinct),
+    the estimate by :func:`..operators.sketch.kmv_estimate`."""
     digests = stream.filter(F.col("user_id").isNotNull()).select(
         "event_type", F.md5(F.col("user_id").cast("string")).alias("_h")
     )
@@ -184,14 +185,12 @@ def _kmv(spark: SparkSession, stream: DataFrame, root: str) -> DataFrame:
     checkpoint = os.path.join(root, "_checkpoint")
     empty = literal_table(spark, [], digests.schema)
     bottom = fold_available_now(digests, root, checkpoint, step, empty)
-    k48 = F.conv(F.substring(F.max("_h"), 1, 12), 16, 10).cast("bigint")
     sketch = bottom.groupBy("event_type").agg(
-        F.count("*").alias("sketch_n"), k48.alias("_k48")
+        F.max("_h").alias("kth_hash"), F.count("*").alias("sketch_n")
     )
-    est = F.when(
-        F.col("sketch_n") < _KMV_K, F.col("sketch_n").cast("double")
-    ).otherwise(F.round(F.lit(float(_KMV_K - 1) * (1 << 48)) / F.col("_k48"), 4))
-    return sketch.select("event_type", "sketch_n", est.alias("est_distinct"))
+    return sketch.select(
+        "event_type", "sketch_n", kmv_estimate(_KMV_K).alias("est_distinct")
+    )
 
 
 def stateful_kmv_available_now(
@@ -267,9 +266,8 @@ def _rolling_zscore(
 ) -> DataFrame:
     """reports/anomaly.rolling_zscore of per-user value-cents folded over
     any events stream: the `_new` rows of every committed version."""
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     rows = stream.filter(F.col("user_id").isNotNull()).select(
-        "user_id", F.unix_micros(F.col("ts")).alias("ts_us"), cents.alias("v")
+        "user_id", F.unix_micros(F.col("ts")).alias("ts_us"), cents(F.col("value")).alias("v")
     )
     step = _rz_step(window, min_periods, z_thresh)
     empty = literal_table(spark, [], rows.schema)
@@ -292,8 +290,8 @@ def stateful_rolling_zscore_available_now(
     min_periods: int = 5,
     z_thresh: float = 3.0,
 ) -> DataFrame:
-    """Streaming anomaly alerts: per-user value-cents (floor(v·100+0.5),
-    the shared engine-portable cents law) scored against the user's
+    """Streaming anomaly alerts: per-user value-cents
+    (:func:`..expressions.cents`) scored against the user's
     trailing `window` observations; after an AvailableNow drain the rows
     equal the batch operator over the same events row-for-row (the
     oracle).  Events must arrive in per-key timestamp order across

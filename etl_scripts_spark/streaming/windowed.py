@@ -3,16 +3,17 @@
 The reference's operational loop (file arrival + marker-file completeness
 gate → process once — SURVEY §2.8) maps to a file-source stream with
 `Trigger.AvailableNow`: process everything currently available, exactly once,
-then stop.  The same aggregation expressions as the batch operators in
-:mod:`..operators.windows` are reused so batch and streaming agree.
+then stop.  Where a batch operator exists, the drain runs THAT operator on
+the stream, never a copy of it: the tumbling and hopping rollups of
+:mod:`..operators.windows` (on a watermarked stream) and the HyperLogLog
+and count-min sketches of :mod:`..operators.sketch` (a register is a max,
+a counter a count), so batch and streaming agree by construction.
 
 Every operator here is a native stateful operator — windowed, session and
-keyed aggregations, the interval join, and the HyperLogLog and count-min
-sketches (the batch operators of :mod:`..operators.sketch` run on the
-stream: a register is a max, a counter a count) — whose state stays in
-the JVM's state store.  Keyed state with no built-in aggregate (the KMV
-bottom-k, the rolling z-score's trailing frame) is a batch operator
-folded per micro-batch on the CAS manifest: :mod:`.mv`.
+keyed aggregations, the interval join and the sketches — whose state
+stays in the JVM's state store.  Keyed state with no built-in aggregate
+(the KMV bottom-k, the rolling z-score's trailing frame) is a batch
+operator folded per micro-batch on the CAS manifest: :mod:`.mv`.
 """
 
 from __future__ import annotations
@@ -22,7 +23,9 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..expressions import cents
 from ..operators.sketch import cms_build, hll_registers
+from ..operators.windows import hopping_rollup, hourly_rollup
 
 _name_counter = itertools.count()
 
@@ -106,24 +109,16 @@ def session_windows_available_now(
 
 def hourly_counts_available_now(spark: SparkSession, events_parquet: str) -> DataFrame:
     """Streaming tumbling-hour rollup over a parquet path, drained to a batch
-    result via Trigger.AvailableNow + memory sink.
-
-    Uses `window(ts, '1 hour')` — the streaming-native tumbling window whose
-    start equals `date_trunc('hour', ts)`, so the batch oracle matches.
+    result via Trigger.AvailableNow + memory sink: the batch
+    :func:`..operators.windows.hourly_rollup` run on the stream
+    watermarked on ts, with hour_start formatted 'yyyy-MM-dd HH'.
     Aggregation state is keyed by (hour-window × event_type) — a few
     thousand keys, whatever the event volume.
     """
     stream = _events_stream(spark, events_parquet)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-    )
+    agg = hourly_rollup(stream.withWatermark("ts", "1 hour"))
     return _drain(spark, agg).select(
-        F.date_format(F.col("window.start"), "yyyy-MM-dd HH").alias("hour_start"),
+        F.date_format(F.col("hour_start"), "yyyy-MM-dd HH").alias("hour_start"),
         "event_type",
         "n_events",
         "sum_value",
@@ -240,39 +235,24 @@ def hopping_counts_available_now(
     width_s: int = 3600,
     slide_s: int = 900,
 ) -> DataFrame:
-    """Streaming HOPPING-window rollup drained to a batch result — the
-    streaming twin of operators.windows.hopping_rollup, completing the
-    batch/streaming symmetry the tumbling rollup already has: the same
-    native `window(ts, width, slide)` multi-assign runs incrementally
-    (state keyed by overlapping-window × event_type; an event updates
-    width/slide window states as it arrives), and an AvailableNow drain
-    over the same files equals the batch operator row-for-row — the
-    verification law every streaming op here follows.  The same shared
-    floor(v·100 + 0.5) exact cents law, the same epoch-µs bounds.
+    """Streaming HOPPING-window rollup drained to a batch result: the
+    batch :func:`..operators.windows.hopping_rollup` run on the stream
+    watermarked `width_s` behind (state keyed by overlapping-window ×
+    event_type; an event updates width/slide window states as it
+    arrives), so an AvailableNow drain over the same files equals the
+    batch operator row-for-row — the verification law every streaming op
+    here follows.  Returns (window_start_us, window_end_us, event_type,
+    n_events, value_cents); hopping_rollup's width/slide guard applies.
     """
-    if width_s <= 0 or slide_s <= 0 or width_s % slide_s != 0:
-        raise ValueError("width_s must be a positive multiple of slide_s")
     stream = _events_stream(spark, events_parquet)
-    agg = (
-        stream.withWatermark("ts", f"{width_s} seconds")
-        .groupBy(
-            F.window("ts", f"{width_s} seconds", f"{slide_s} seconds"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint")
-            ).alias("value_cents"),
-        )
+    agg = hopping_rollup(
+        stream.withWatermark("ts", f"{width_s} seconds"),
+        width_s,
+        slide_s,
+        key_col="event_type",
+        value_col="value",
     )
-    return _drain(spark, agg).select(
-        F.unix_micros(F.col("window.start")).alias("window_start_us"),
-        F.unix_micros(F.col("window.end")).alias("window_end_us"),
-        "event_type",
-        "n_events",
-        "value_cents",
-    )
+    return _drain(spark, agg)
 
 
 def _first_seen(spark: SparkSession, stream: DataFrame) -> DataFrame:
@@ -314,13 +294,12 @@ def stateful_first_seen_available_now(
 
 
 def _user_totals(spark: SparkSession, stream: DataFrame) -> DataFrame:
-    """Per-user running (count, value-cents) over any events stream.  Cents
-    via floor(v*100 + 0.5) — the same IEEE law in Spark and any SQL
-    oracle, unlike round() whose tie-breaking differs per engine.  Both
-    totals only grow, so the drained update rows fold per key by max."""
+    """Per-user running (count, value-cents) over any events stream, cents
+    by :func:`..expressions.cents`.  Both totals only grow, so the
+    drained update rows fold per key by max."""
     agg = stream.groupBy("user_id").agg(
         F.count("*").alias("n_events"),
-        F.sum(F.floor(F.col("value") * 100.0 + F.lit(0.5))).alias("sum_cents"),
+        F.sum(cents(F.col("value"))).alias("sum_cents"),
     )
     return (
         _drain(spark, agg, mode="update")

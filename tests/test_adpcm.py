@@ -103,13 +103,16 @@ def test_distributed_stats_match_closed_form(spark):
     per-file stats, value-exact vs doc_id arithmetic."""
     from etl_scripts_spark.operators.multimodal import (
         decode_audio_stats,
-        with_adpcm_payload,
+        payload_source,
+        synthetic_adpcm_wav_bytes,
     )
 
     docs = spark.range(40).selectExpr("id AS doc_id")
     got = {
         r["doc_id"]: (r["sample_rate"], r["n_samples"], r["sum_samples"], r["peak"])
-        for r in decode_audio_stats(with_adpcm_payload(docs)).collect()
+        for r in decode_audio_stats(
+            payload_source(docs, "doc_id", synthetic_adpcm_wav_bytes)
+        ).collect()
     }
     for d in range(40):
         k = 2 + d % 3

@@ -18,8 +18,8 @@ from etl_scripts_spark.operators.multimodal import (
     _g711_tables,
     decode_audio_stats,
     decode_wav_pcm,
+    payload_source,
     synthetic_g711_wav_bytes,
-    with_g711_payload,
 )
 from tests.parity import compare, duckdb_con
 from tests.conftest import SF_SMALL
@@ -164,7 +164,9 @@ def test_g711_stereo_and_bad_bits():
 
 def test_g711_distributed_stats_match_law(spark):
     ids = spark.range(0, 40).withColumnRenamed("id", "doc_id")
-    rows = decode_audio_stats(with_g711_payload(ids, law=7)).collect()
+    rows = decode_audio_stats(
+        payload_source(ids, "doc_id", lambda d: synthetic_g711_wav_bytes(d, 7))
+    ).collect()
     assert len(rows) == 40
     t = _g711_tables()[7]
     for r in rows:

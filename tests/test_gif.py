@@ -148,13 +148,14 @@ def test_distributed_pixel_stats_match_closed_form(spark):
     value-exact vs the palette/pixel law computed in plain Python."""
     from etl_scripts_spark.operators.multimodal import (
         decode_pixel_stats,
-        with_gif_payload,
+        payload_source,
     )
+    from etl_scripts_spark.operators.gif import synthetic_gif_bytes
 
     docs = spark.range(30).selectExpr("id AS doc_id")
     got = {
         r["doc_id"]: (r["format"], r["width"], r["height"], r["channels"], r["px_sum"])
-        for r in decode_pixel_stats(with_gif_payload(docs)).collect()
+        for r in decode_pixel_stats(payload_source(docs, "doc_id", synthetic_gif_bytes)).collect()
     }
     for d in range(30):
         w, h = 8 + d % 8, 8 + (d * 3) % 8

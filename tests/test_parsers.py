@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from etl_scripts_spark.operators.multimodal import payload_source
 from etl_scripts_spark.parsers import metadata, sidecars, vcf
 
 
@@ -146,8 +147,10 @@ def test_pdf_text_extraction_roundtrip():
 
 
 def test_pdf_metadata_real_extraction(spark):
-    df = sidecars.with_pdf_payload(
-        spark.createDataFrame([(1,), (2,), (3,)], "doc_id LONG")
+    df = payload_source(
+        spark.createDataFrame([(1,), (2,), (3,)], "doc_id LONG"),
+        "doc_id",
+        sidecars.synthetic_pdf_bytes,
     )
     rows = {r.doc_id: r for r in sidecars.pdf_metadata(df).collect()}
     assert rows[1].order_number == "A-0001"

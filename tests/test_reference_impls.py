@@ -168,19 +168,29 @@ def test_asof_join_sliced_matches_plain_under_skew(spark):
     )
     ldf = spark.createDataFrame(left.astype({"k": "int64", "ts": "int64"}))
     rdf = spark.createDataFrame(right.astype({"k": "int64", "ts": "int64"}))
+    # the unkeyed form (by=None): the slice alone keys the carry
+    uldf = spark.createDataFrame(
+        pd.DataFrame({"ts": rng.integers(0, 300, 400), "lid": np.arange(400)})
+    )
+    urdf = spark.createDataFrame(
+        pd.DataFrame({"ts": rng.integers(0, 300, 300), "v": rng.normal(size=300).round(3)})
+    )
     cols = ["lid", "ts_matched", "v_matched"]
-    plain = sorted(
-        asof_join(ldf, rdf, on="ts", by="k").select(*cols).collect(),
-        key=lambda r: r.lid,
-    )
-    # slice width 50 → ~6 slices, so carry-in across empty/partial slices runs
-    sliced = sorted(
-        asof_join_sliced(
-            ldf, rdf, on="ts", by="k", bucket=lambda c: F.floor(c / 50)
-        ).select(*cols).collect(),
-        key=lambda r: r.lid,
-    )
-    assert plain == sliced
+    for lf, rf, by, n in ((ldf, rdf, "k", n_l), (uldf, urdf, None, 400)):
+        plain = sorted(
+            asof_join(lf, rf, on="ts", by=by).select(*cols).collect(),
+            key=lambda r: r.lid,
+        )
+        # slice width 50 → ~6 slices, so carry-in across empty/partial
+        # slices runs
+        sliced = sorted(
+            asof_join_sliced(
+                lf, rf, on="ts", by=by, bucket=lambda c: F.floor(c / 50)
+            ).select(*cols).collect(),
+            key=lambda r: r.lid,
+        )
+        assert len(plain) == n
+        assert plain == sliced
 
 
 def _random_corpus(rng, n_docs=60, vocab=25, max_len=40):

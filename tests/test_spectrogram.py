@@ -13,13 +13,17 @@ from etl_scripts_spark import oracle
 from etl_scripts_spark.operators.multimodal import (
     audio_spectrogram,
     decode_wav_pcm,
+    payload_source,
     synthetic_square_wav_bytes,
-    with_square_wav_payload,
 )
 
 
 def _ids(spark, ids):
     return spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
+
+
+def _square_wavs(ids):
+    return payload_source(ids, "doc_id", synthetic_square_wav_bytes)
 
 
 def _law(doc_id: int):
@@ -35,7 +39,7 @@ def test_square_tone_law(spark):
     ids = list(range(31))
     got = sorted(
         tuple(r)
-        for r in audio_spectrogram(with_square_wav_payload(_ids(spark, ids))).collect()
+        for r in audio_spectrogram(_square_wavs(_ids(spark, ids))).collect()
     )
     want = sorted(row for i in ids for row in _law(i))
     assert got == want
@@ -102,7 +106,7 @@ def test_oracle_law_parity(spark):
     from tests.parity import compare
 
     ids = list(range(64, 131))
-    spark_pdf = audio_spectrogram(with_square_wav_payload(_ids(spark, ids))).toPandas()
+    spark_pdf = audio_spectrogram(_square_wavs(_ids(spark, ids))).toPandas()
     con = duckdb.connect()
     vals = ", ".join(f"({i})" for i in ids)
     sql = oracle.spectrogram_law_sql(f"SELECT * FROM (VALUES {vals}) t(doc_id)")

@@ -208,7 +208,9 @@ def test_decode_image_meta_on_mixed_payloads(spark):
     df = _items(spark, [(0, "a"), (1, "b"), (2, "c")], "doc_id LONG, text STRING")
     out = {
         r.doc_id: (r.format, r.width, r.height, r.n_bytes)
-        for r in multimodal.decode_image_meta(multimodal.with_image_payload(df)).collect()
+        for r in multimodal.decode_image_meta(
+            multimodal.payload_source(df, "doc_id", multimodal.synthetic_image_bytes)
+        ).collect()
     }
     assert out[0] == ("png", 16, 16, 33)
     assert out[1] == ("jpeg", 17, 23, 41)
@@ -256,7 +258,9 @@ def test_resize_byte_sum_fused_matches_chained(spark):
     channels/res_sum for it, not an executor error (the NULL-decode
     branch was previously untested — ADVICE r13)."""
     df = spark.range(40).select(F.col("id").alias("doc_id"))
-    pay = multimodal.with_pixel_image_payload(df).unionByName(
+    pay = multimodal.payload_source(
+        df, "doc_id", multimodal.synthetic_pixel_image_bytes
+    ).unionByName(
         spark.createDataFrame(
             [(999, bytearray(b"\xff\xfenot-an-image-payload"))],
             "doc_id long, payload binary",
@@ -616,7 +620,7 @@ def test_entity_resolution_key_width_dials(spark):
 
 
 def test_decode_video_frame_pixels_stage(spark):
-    """The distributed MJPEG path: with_mjpeg_avi_payload →
+    """The distributed MJPEG path: the MJPEG-AVI payload source →
     decode_video_frame_pixels equals the closed-form law per sampled
     frame, and a corrupted frame degrades to NULL stats, not a crash."""
     import numpy as np
@@ -626,7 +630,8 @@ def test_decode_video_frame_pixels_stage(spark):
 
     ids = spark.range(0, 12).select(F.col("id").alias("doc_id"))
     out = multimodal.decode_video_frame_pixels(
-        multimodal.with_mjpeg_avi_payload(ids), n_frames=3
+        multimodal.payload_source(ids, "doc_id", multimodal.synthetic_mjpeg_avi_bytes),
+        n_frames=3,
     ).collect()
     assert len(out) == 12 * 3
     for r in out:

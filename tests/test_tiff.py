@@ -14,7 +14,7 @@ from etl_scripts_spark.operators.multimodal import (
     _pixel_pattern,
     decode_image_pixels,
     decode_pixel_stats,
-    with_tiff_payload,
+    payload_source,
 )
 from etl_scripts_spark.operators.tiff import (
     TiffError,
@@ -146,7 +146,7 @@ def test_garbage_totality():
 
 def test_distributed_stats_match_law(spark):
     ids = spark.range(0, 40).withColumnRenamed("id", "doc_id")
-    rows = decode_pixel_stats(with_tiff_payload(ids)).collect()
+    rows = decode_pixel_stats(payload_source(ids, "doc_id", synthetic_tiff_bytes)).collect()
     assert len(rows) == 40
     for r in rows:
         want = _pixel_pattern(r.doc_id).astype(np.int64)
